@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdata06_spark.operators.iterate import fixpoint
 from bigdata06_spark.operators.scale import rebalance_for_amplification
 from bigdata06_spark.operators.textops import (
     distinct_shingles,
@@ -749,11 +750,14 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_
     Iterative min-label propagation: each round, every node takes the
     min of its label and its neighbors' labels; converges in
     O(diameter) rounds — near-dup clusters are tiny (diameter ≤ 3-4 in
-    practice), so the loop runs ~3 distributed joins. The driver-side
-    loop is control flow only (a convergence count per round); all data
-    movement is distributed joins/aggregations. `localCheckpoint`
-    truncates the growing lineage each round (without it, iteration N
-    replans all N-1 predecessors).
+    practice), so the loop runs ~3 distributed joins. The rounds run
+    under `iterate.fixpoint`: min-propagation only ever lowers a label,
+    so "changed" is exactly `nbr_min < label`, carried in the state
+    rows as `_moved` — one job per round checkpoints the labels and
+    counts the movers. Past `max_iter` rounds it raises instead of
+    mis-labeling every node farther than that from its component
+    minimum; graphs with diameter > max_iter belong to
+    `connected_components_star`.
 
     Scale: each round shuffles edges on src and labels on node — both
     uniform keys. For graphs with giant components / large diameter
@@ -765,11 +769,8 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    labels = (
-        nodes.select(F.col(id_col).alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(
                 labels.select(F.col("node").alias("src"), F.col("label").alias("src_label")),
@@ -778,36 +779,18 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("src_label").alias("nbr_min"))
         )
-        # r11: carry the changed FLAG inside the checkpointed relation
-        # (min-propagation only ever lowers a label, so changed ==
-        # new < old) instead of re-joining new vs old labels — one
-        # fewer join per round, and the convergence count becomes a
-        # bare scan of the just-materialized checkpoint.
-        new_flagged = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias("new_label"),
-                (F.coalesce(F.col("nbr_min"), F.col("label")) < F.col("label")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
+        nbr = F.coalesce(F.col("nbr_min"), F.col("label"))
+        return labels.join(nbr_min, "node", "left").select(
+            "node", F.least(F.col("label"), nbr).alias("label"), (nbr < F.col("label")).alias("_moved")
         )
-        changed = new_flagged.filter(F.col("chg")).count()
-        labels = new_flagged.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # Returning here would silently mis-label every node farther
-        # than max_iter hops from its component minimum (a 61-node
-        # chain at the 25-round default). Fail loud; graphs with
-        # diameter > max_iter belong to `connected_components_star`
-        # (O(log n) rounds).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(graph diameter exceeds max_iter); use connected_components_star"
+
+    try:
+        labels = fixpoint(
+            nodes.select(F.col(id_col).alias("node")).distinct().withColumn("label", F.col("node")),
+            step, max_rounds=max_iter,
         )
+    finally:
+        edges.unpersist()
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("component"))
 
 
@@ -860,19 +843,15 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame, id_col: str = 
       to m = min(Γ(u) ∪ {u});
     - small-star: orient edges max→min; every neighbor (and u itself)
       re-points to the minimum.
-    Convergence = edge-set fingerprint (count + hash-sum) unchanged;
-    the driver loop is control flow only, `localCheckpoint` truncates
-    lineage per round as in the propagation variant."""
+    The rounds run under `iterate.fixpoint`. Small-star's closing
+    dedup also folds in the previous round's edges, each side tagged,
+    so one groupBy(src, dst) yields the new edge set (`in_new`) and
+    `_moved = in_new != in_old` — exact set inequality at no extra
+    shuffle. Past `max_iter` rounds it raises rather than return
+    labels of a graph not yet in star form."""
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).filter(
         F.col("src") != F.col("dst")
-    ).distinct().localCheckpoint(eager=True)
-
-    def _fingerprint(edges: DataFrame):
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).first()
-        return (row.n, row.h)
+    ).distinct()
 
     def _large_star(edges: DataFrame) -> DataFrame:
         sym = edges.unionByName(
@@ -898,16 +877,19 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame, id_col: str = 
             .select(F.col("v").alias("src"), F.col("m").alias("dst"))
         )
         via_u = mins.select(F.col("u").alias("src"), F.col("m").alias("dst"))
-        return via_nbrs.unionByName(via_u).distinct()
+        return via_nbrs.unionByName(via_u)  # deduped by step's tagged groupBy
 
-    fp = _fingerprint(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        nfp = _fingerprint(e)
-        if nfp == fp:
-            break
-        fp = nfp
-    roots = e.groupBy("src").agg(F.min("dst").alias("label"))
+    def step(state: DataFrame) -> DataFrame:
+        old = state.filter("in_new").select("src", "dst")
+        tagged = _small_star(_large_star(old)).select(
+            "src", "dst", F.lit(True).alias("in_new"), F.lit(False).alias("in_old")
+        ).unionByName(old.select("src", "dst", F.lit(False).alias("in_new"), F.lit(True).alias("in_old")))
+        return tagged.groupBy("src", "dst").agg(
+            F.max("in_new").alias("in_new"), F.max("in_old").alias("in_old")
+        ).withColumn("_moved", F.col("in_new") != F.col("in_old"))
+
+    e = fixpoint(e.withColumn("in_new", F.lit(True)), step, max_rounds=max_iter)
+    roots = e.filter("in_new").groupBy("src").agg(F.min("dst").alias("label"))
     return (
         nodes.select(F.col(id_col).alias("node"))
         .distinct()

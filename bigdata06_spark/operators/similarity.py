@@ -722,7 +722,7 @@ def pq_fit(corpus: DataFrame, n_subspaces: int = 4, k: int = 16, n_iter: int = 2
     downstream LUT join re-planned the whole iterative-kmeans tree
     otherwise — measured as ~4s of pure DRIVER time per IVF-PQ query
     at sf0.01, flat in data size. (Executor-loss caveat as at every
-    localCheckpoint use: see connected_components.)"""
+    localCheckpoint use: see operators/iterate.py.)"""
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     if dim % n_subspaces:
@@ -906,7 +906,7 @@ def _ivfpq_fit_impl(corpus: DataFrame, n_cells: int, n_subspaces: int,
     # The final assignment — 5 rows/vector of (m, cell, dist) ints —
     # is the ONE localCheckpoint: it feeds the member join, the codes
     # pivot, and the centroid refresh (executor-loss caveat as at
-    # every localCheckpoint use: see connected_components).
+    # every localCheckpoint use: see operators/iterate.py).
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     if dim % n_subspaces:

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata06_spark.catalog import load_table
+from bigdata06_spark.operators import graph as G
+from bigdata06_spark.operators.iterate import fixpoint
 from bigdata06_spark.queries import register
 from bigdata06_spark.queries.qutil import davg_sql, dsum, dsum_sql, epoch_us
 
@@ -2161,10 +2163,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per iteration one join of ranks to edges on src plus
     one groupBy on dst — the textbook distributed PageRank step. Edges
     partition by src once and every iteration reuses that exchange;
-    rank state is (node, long), never the adjacency. The driver loop is
-    control flow only (fixed depth, no convergence collect). Node count
-    here is tiny, but nothing in the plan is node-count-bounded."""
-    S, D_NUM, D_DEN, ITERS = 10**12, 85, 100, 3
+    rank state is (node, long), never the adjacency. The fixed-depth
+    round is `operators.graph.integer_pagerank`, shared with the
+    personalized variant and TextRank. Node count here is tiny, but
+    nothing in the plan is node-count-bounded."""
+    S, ITERS = 10**12, 3
+    d_num, d_den = G.DAMPING
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.withColumn("dst", F.lead("event_type").over(w)).filter(F.col("dst").isNotNull())
@@ -2175,27 +2179,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges.join(outw, "src")
     nodes = ev.select(F.col("event_type").alias("node")).distinct()
     cnt = nodes.agg(F.count(F.lit(1)).alias("n"))
-    teleport = S * (D_DEN - D_NUM) // D_DEN
-    ranks = nodes.crossJoin(F.broadcast(cnt)).select(
-        "node", F.expr(f"CAST({S} AS BIGINT) DIV n").alias("r")
-    )
-    for _ in range(ITERS):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), F.expr("(r * w) DIV ow").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("sc"))
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(cnt))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                F.expr(
-                    f"CAST({teleport} AS BIGINT) DIV n + (coalesce(sc, CAST(0 AS BIGINT)) * {D_NUM}) DIV {D_DEN}"
-                ).alias("r"),
-            )
-        )
+    teleport = S * (d_den - d_num) // d_den
+    nodes_n = nodes.crossJoin(F.broadcast(cnt))
+    ranks = nodes_n.select("node", F.expr(f"CAST({S} AS BIGINT) DIV n").alias("r"))
+    ranks = G.integer_pagerank(e, nodes_n, ranks, F.expr(f"CAST({teleport} AS BIGINT) DIV n"), ITERS)
     return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
@@ -2257,7 +2244,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     point: the distributed plan is seed-independent, so one prepared
     pipeline serves any seed (or any seed VECTOR, by making r0 a
     relation)."""
-    S, D_NUM, D_DEN, ITERS = 10**12, 85, 100, 4
+    S, ITERS = 10**12, 4
+    d_num, d_den = G.DAMPING
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2268,28 +2256,12 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     e = edges.join(outw, "src")
     nodes = ev.select(F.col("event_type").alias("node")).distinct()
-    teleport = S * (D_DEN - D_NUM) // D_DEN
+    teleport = S * (d_den - d_num) // d_den
     seed_r = F.when(F.col("node") == _PPR_SEED, F.lit(S)).otherwise(F.lit(0))
     ranks = nodes.select("node", seed_r.cast("long").alias("r"))
     restart = F.when(F.col("node") == _PPR_SEED, F.lit(teleport)).otherwise(
         F.lit(0)).cast("long")
-    for _ in range(ITERS):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"),
-                    F.expr("(r * w) DIV ow").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("sc"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (restart
-                 + F.expr(f"(coalesce(sc, CAST(0 AS BIGINT)) * {D_NUM}) DIV {D_DEN}")
-                 ).cast("long").alias("r"),
-            )
-        )
+    ranks = G.integer_pagerank(e, nodes, ranks, restart, ITERS)
     return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
@@ -4215,16 +4187,13 @@ def _cosupply_mutual_edges(li: DataFrame, checkpoint: bool = True,
     return e.localCheckpoint(eager=True) if checkpoint else e
 
 
-@register(
-    "graph_triangle_census",
-    oracle="""
-    WITH sp0 AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
+# MATERIALIZED: d/e are referenced multiple times by the oracles
+# (mutuality join, triangle legs, degrees, counts); inlining would
+# replay the 18M-row co-supply join per reference (measured ~80 GB of
+# DuckDB spill at sf0.1). The relations are tiny.
+_COSUPPLY_EDGE_CTES = """sp0 AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
     heavy AS (SELECT p FROM sp0 GROUP BY p HAVING count(*) > 33),
     sp AS (SELECT s, p FROM sp0 WHERE p NOT IN (SELECT p FROM heavy)),
-    -- MATERIALIZED: d/e are referenced multiple times (mutuality
-    -- join, three triangle legs, degrees, counts); inlining would
-    -- replay the 18M-row co-supply join per reference (measured
-    -- ~80 GB of DuckDB spill at sf0.1). The relations are tiny.
     co AS MATERIALIZED (
       SELECT a.s AS sa, b.s AS sb, count(*) AS c
       FROM sp a JOIN sp b ON a.p = b.p AND a.s <> b.s GROUP BY a.s, b.s
@@ -4238,7 +4207,13 @@ def _cosupply_mutual_edges(li: DataFrame, checkpoint: bool = True,
     e AS MATERIALIZED (
       SELECT d.sa, d.sb FROM d JOIN d m ON m.sa = d.sb AND m.sb = d.sa
       WHERE d.sa < d.sb
-    ),
+    )"""
+
+
+@register(
+    "graph_triangle_census",
+    oracle=f"""
+    WITH {_COSUPPLY_EDGE_CTES},
     deg AS (
       SELECT v, count(*) AS dg FROM (
         SELECT sa AS v FROM e UNION ALL SELECT sb AS v FROM e) GROUP BY v
@@ -4310,23 +4285,7 @@ def _lpa_oracle(n_iter: int = 4) -> str:
     mutual-top-5 co-supply graph (same edge CTEs as
     `graph_triangle_census`; same algorithm as
     `graph_label_propagation`)."""
-    ctes = ["""sp0 AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
-    heavy AS (SELECT p FROM sp0 GROUP BY p HAVING count(*) > 33),
-    sp AS (SELECT s, p FROM sp0 WHERE p NOT IN (SELECT p FROM heavy)),
-    co AS MATERIALIZED (
-      SELECT a.s AS sa, b.s AS sb, count(*) AS c
-      FROM sp a JOIN sp b ON a.p = b.p AND a.s <> b.s GROUP BY a.s, b.s
-    ),
-    rk AS (
-      SELECT sa, sb,
-             row_number() OVER (PARTITION BY sa ORDER BY c DESC, sb ASC) AS rn
-      FROM co
-    ),
-    d AS MATERIALIZED (SELECT sa, sb FROM rk WHERE rn <= 5),
-    e AS MATERIALIZED (
-      SELECT d.sa, d.sb FROM d JOIN d m ON m.sa = d.sb AND m.sb = d.sa
-      WHERE d.sa < d.sb
-    ),
+    ctes = [f"""{_COSUPPLY_EDGE_CTES},
     ed AS MATERIALIZED (
       SELECT sa AS src, sb AS dst FROM e
       UNION ALL SELECT sb AS src, sa AS dst FROM e
@@ -4365,9 +4324,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one edge⋈label equi-join + one (node, label)
     count + one per-node argmax window — all keyed shuffles on the
     degree-bounded edge list (≤5·|nodes| rows by construction, never
-    the quadratic co-supply graph). Labels localCheckpoint per round
-    (|nodes| rows) so round t doesn't replay rounds 1..t-1 — the same
-    iterative-lineage policy as `embedding_power_iteration`."""
+    the quadratic co-supply graph). A fixed-depth loop, not a
+    fixpoint: labels eagerly localCheckpoint per round (|nodes| rows)
+    so round t doesn't replay rounds 1..t-1."""
     li = load_table(spark, "lineitem", sf_dir)
     e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
     ed = (
@@ -6229,25 +6188,6 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COSUPPLY_EDGE_CTES = """sp0 AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem),
-    heavy AS (SELECT p FROM sp0 GROUP BY p HAVING count(*) > 33),
-    sp AS (SELECT s, p FROM sp0 WHERE p NOT IN (SELECT p FROM heavy)),
-    co AS MATERIALIZED (
-      SELECT a.s AS sa, b.s AS sb, count(*) AS c
-      FROM sp a JOIN sp b ON a.p = b.p AND a.s <> b.s GROUP BY a.s, b.s
-    ),
-    rk AS (
-      SELECT sa, sb,
-             row_number() OVER (PARTITION BY sa ORDER BY c DESC, sb ASC) AS rn
-      FROM co
-    ),
-    d AS MATERIALIZED (SELECT sa, sb FROM rk WHERE rn <= 5),
-    e AS MATERIALIZED (
-      SELECT d.sa, d.sb FROM d JOIN d m ON m.sa = d.sb AND m.sb = d.sa
-      WHERE d.sa < d.sb
-    )"""
-
-
 @register(
     "graph_community_components",
     oracle=f"""
@@ -6280,17 +6220,18 @@ def graph_community_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its lowest reachable id; the output is one row per community —
     size, internal (undirected) edge count, and edge density — the
     fraud-ring / cluster-audit summary (VERDICT r8 #8: graph was a
-    thin family). Components come from the SAME fixpoint min-label
-    propagation operator the dedup family uses
-    (operators/dedup.py:connected_components — converges in
-    O(diameter) rounds, fails loud past max_iter); every internal edge
+    thin family). Components come from the SAME min-label propagation
+    operator the dedup family uses (operators/dedup.py:
+    connected_components on `iterate.fixpoint` — O(diameter) rounds of
+    one job each, fails loud past max_iter); every internal edge
     lands in exactly one community (both endpoints share a label by
     definition of components), so n_edges is a single keyed count.
 
     Scale: edge construction is the degree-bounded mutual-top-k list
     (<= 5*|nodes| rows, never the quadratic co-supply relation); each
     propagation round is one edges-to-labels join + min-agg on uniform
-    keys; the rollup is two groupBys on the community key. Giant-
+    keys, plus the label diff that rides in the same job; the rollup
+    is two groupBys on the community key. Giant-
     diameter graphs switch to connected_components_star (O(log n)
     rounds, same join primitive)."""
     from bigdata06_spark.operators.dedup import connected_components
@@ -6768,48 +6709,36 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001/0.01/0.1 against the 16-round fail-loud cap).
     Iterative peeling: drop every node with degree < k, recompute
     degrees on the survivors, repeat to fixpoint. The engine loops
-    with a convergence check and FAILS LOUD past `_KCORE_MAX_ROUNDS`;
+    under `iterate.fixpoint` and FAILS LOUD past `_KCORE_MAX_ROUNDS`;
     the oracle unrolls exactly that many rounds — peeling is monotone,
     so extra unrolled rounds are identities and the two sides agree
     whenever the engine didn't raise.
 
-    Scale: each round is one groupBy(degree) + two semi-join prunes
-    on the degree-bounded edge list (<= 5 per node by construction);
-    round count is bounded by the peeling depth, not N. Labels
-    localCheckpoint per round (the iterative-lineage policy)."""
+    Scale: the state is the symmetric edge list; each round drops the
+    edges the previous round flagged, recomputes degrees with one
+    groupBy, and flags (`_moved`) every edge with an endpoint below k
+    via two joins on the degree-bounded list (<= 5 per node by
+    construction) — one job per round, which both checkpoints the
+    state and counts the flagged edges. Round count is bounded by the
+    peeling depth, not N."""
     li = load_table(spark, "lineitem", sf_dir)
     e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
-    ed = (
-        e.select(F.col("sa").alias("src"), F.col("sb").alias("dst"))
-        .unionAll(e.select(F.col("sb").alias("src"), F.col("sa").alias("dst")))
-        .localCheckpoint(eager=True)
+    ed = e.select(F.col("sa").alias("src"), F.col("sb").alias("dst")).unionAll(
+        e.select(F.col("sb").alias("src"), F.col("sa").alias("dst"))
     )
-    n_edges = ed.count()
-    for _ in range(_KCORE_MAX_ROUNDS):
-        keep = (
-            ed.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= _KCORE_K)
-            .select(F.col("src").alias("v"))
+
+    def step(state: DataFrame) -> DataFrame:
+        kept = state.filter(~F.col("_moved")).select("src", "dst")
+        deg = kept.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
+        return (
+            kept.join(deg, "src")
+            .join(deg.select(F.col("src").alias("dst"), F.col("c").alias("c_dst")), "dst")
+            .select("src", "dst", ((F.col("c") < _KCORE_K) | (F.col("c_dst") < _KCORE_K)).alias("_moved"))
         )
-        ed2 = (
-            ed.join(keep.withColumnRenamed("v", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        n2 = ed2.count()  # bounded: one scalar per round (control flow)
-        ed = ed2
-        if n2 == n_edges:
-            break
-        n_edges = n2
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge in {_KCORE_MAX_ROUNDS} rounds; "
-            f"raise _KCORE_MAX_ROUNDS (and regenerate the unrolled oracle)"
-        )
+
+    core = fixpoint(ed.withColumn("_moved", F.lit(False)), step, max_rounds=_KCORE_MAX_ROUNDS)
     return (
-        ed.groupBy("src")
+        core.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
         .select(F.col("src").alias("s"), "core_degree")
         .orderBy(F.desc("core_degree"), "s")

@@ -23,10 +23,12 @@ from pyspark.sql import functions as F
 from bigdata06_spark.catalog import load_table
 from bigdata06_spark.operators import classifier as C
 from bigdata06_spark.operators import dedup as D
+from bigdata06_spark.operators import graph as G
 from bigdata06_spark.operators import multimodal as M
 from bigdata06_spark.operators import packing as P
 from bigdata06_spark.operators import similarity as S
 from bigdata06_spark.operators import textops as T
+from bigdata06_spark.operators.iterate import fixpoint
 from bigdata06_spark.queries import register
 
 # Shared oracle fragments -------------------------------------------------
@@ -4593,7 +4595,8 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ TextRank keywords
 
-_TR_SCALE, _TR_DNUM, _TR_DDEN, _TR_ITERS, _TR_TOPK = 10**12, 85, 100, 3, 10
+_TR_SCALE, _TR_ITERS, _TR_TOPK = 10**12, 3, 10
+_TR_DNUM, _TR_DDEN = G.DAMPING
 
 
 def _textrank_oracle() -> str:
@@ -4682,27 +4685,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = edges.select(F.col("src").alias("node")).distinct()
     cnt = nodes.agg(F.count(F.lit(1)).alias("n"))
     teleport = _TR_SCALE * (_TR_DDEN - _TR_DNUM) // _TR_DDEN
-    ranks = nodes.crossJoin(F.broadcast(cnt)).select(
-        "node", F.expr(f"CAST({_TR_SCALE} AS BIGINT) DIV n").alias("r")
-    )
-    for _ in range(_TR_ITERS):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), F.expr("(r * w) DIV ow").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("sc"))
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(cnt))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                F.expr(
-                    f"CAST({teleport} AS BIGINT) DIV n "
-                    f"+ (coalesce(sc, CAST(0 AS BIGINT)) * {_TR_DNUM}) DIV {_TR_DDEN}"
-                ).alias("r"),
-            )
-        )
+    nodes_n = nodes.crossJoin(F.broadcast(cnt))
+    ranks = nodes_n.select("node", F.expr(f"CAST({_TR_SCALE} AS BIGINT) DIV n").alias("r"))
+    ranks = G.integer_pagerank(e, nodes_n, ranks, F.expr(f"CAST({teleport} AS BIGINT) DIV n"), _TR_ITERS)
     return (
         ranks.select(F.col("node").alias("word"), F.col("r").alias("rank_scaled"))
         .orderBy(F.desc("rank_scaled"), "word")
@@ -5024,18 +5009,15 @@ def knn_graph_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     ec = ev.filter(F.col("vec_id") == entry).select(F.col("v").alias("cv"))
-    state = (
-        qv.crossJoin(F.broadcast(ec))
-        .select(
-            "query_id",
-            "qv",
-            F.lit(entry).cast("long").alias("cur"),
-            rnd(S.cosine("qv", "cv"), 6).alias("cur_sim"),
-            F.lit(0).cast("long").alias("hops"),
-        )
-        .localCheckpoint(eager=False)
+    start = qv.crossJoin(F.broadcast(ec)).select(
+        "query_id",
+        "qv",
+        F.lit(entry).cast("long").alias("cur"),
+        rnd(S.cosine("qv", "cv"), 6).alias("cur_sim"),
+        F.lit(0).cast("long").alias("hops"),
     )
-    for _ in range(_GG_STEPS):
+
+    def step(state: DataFrame) -> DataFrame:
         cand = (
             state.join(g.withColumnRenamed("src", "cur"), "cur")
             .join(
@@ -5055,36 +5037,25 @@ def knn_graph_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # LEFT join: a walk whose current node has no out-edges (an
         # LSH-isolated vector) keeps its row and simply never moves —
         # same rule as the oracle's LEFT JOIN (NULL > x is never true;
-        # the coalesce keeps the hops sum non-null)
+        # the coalesce keeps the hops sum non-null). cand_sim > cur_sim
+        # implies cand != cur (same node has the same sim), so `_moved`
+        # is exactly "this walk hopped".
         moved = F.coalesce(F.col("cand_sim") > F.col("cur_sim"), F.lit(False))
-        new_state = (
-            state.join(best, "query_id", "left")
-            .select(
-                "query_id",
-                "qv",
-                F.when(moved, F.col("cand")).otherwise(F.col("cur")).alias("cur"),
-                F.when(moved, F.col("cand_sim"))
-                .otherwise(F.col("cur_sim"))
-                .alias("cur_sim"),
-                (F.col("hops") + moved.cast("long")).alias("hops"),
-                # the convergence flag rides INSIDE the state rows
-                # (r12, the connected_components r11 trick): the same
-                # single action that materializes the lazy checkpoint
-                # answers "did anyone move" — was 2 jobs per hop
-                # (eager checkpoint + a join-based diff count)
-                moved.alias("_moved"),
-            )
-            .localCheckpoint(eager=False)
+        return state.join(best, "query_id", "left").select(
+            "query_id",
+            "qv",
+            F.when(moved, F.col("cand")).otherwise(F.col("cur")).alias("cur"),
+            F.when(moved, F.col("cand_sim"))
+            .otherwise(F.col("cur_sim"))
+            .alias("cur_sim"),
+            (F.col("hops") + moved.cast("long")).alias("hops"),
+            moved.alias("_moved"),
         )
-        # converge-early: greedy moves are absorbing, so once no walk
-        # moved this round none ever will — the fixed-unroll oracle
-        # stays identical (bounded: one scalar per round). cand_sim >
-        # cur_sim implies cand != cur (same node has the same sim), so
-        # the flag is exactly the old new-vs-old cur diff.
-        if new_state.filter(F.col("_moved")).count() == 0:
-            state = new_state
-            break
-        state = new_state
+
+    # converge-early is exact: greedy moves are absorbing, so once no
+    # walk moved in a round none ever will and the fixed-unroll oracle
+    # agrees; reaching _GG_STEPS is the oracle's own depth, not a failure
+    state = fixpoint(start, step, max_rounds=_GG_STEPS, must_converge=False)
     return state.select(
         "query_id", F.col("cur").alias("found_id"),
         F.col("cur_sim").alias("sim"), "hops"
@@ -5270,7 +5241,7 @@ def _graph_greedy_sharded_impl(spark: SparkSession, ev: DataFrame,
     ecv = ev.select(F.col("vec_id").alias("e"), F.col("v").alias("cv"))
     # inner joins: a probed cell with NO vectors contributes no walk
     # (the query's own top-1 cell is never empty — it holds the query)
-    state = (
+    start = (
         probes.join(entries, "cell")
         .join(ecv, "e")
         .select(
@@ -5279,10 +5250,10 @@ def _graph_greedy_sharded_impl(spark: SparkSession, ev: DataFrame,
             rnd(S.cosine("qv", "cv"), 6).alias("cur_sim"),
             F.lit(0).cast("long").alias("hops"),
         )
-        .localCheckpoint(eager=False)
     )
     nbrs = ev.select(F.col("vec_id").alias("dst"), F.col("v").alias("nv"))
-    for _ in range(_GS_STEPS):
+
+    def step(state: DataFrame) -> DataFrame:
         cand = (
             state.join(g.withColumnRenamed("src", "cur"), ["cell", "cur"])
             .join(nbrs, "dst")
@@ -5296,25 +5267,17 @@ def _graph_greedy_sharded_impl(spark: SparkSession, ev: DataFrame,
             .select("query_id", "cell", F.col("dst").alias("cand"), "cand_sim")
         )
         moved = F.coalesce(F.col("cand_sim") > F.col("cur_sim"), F.lit(False))
-        new_state = (
-            state.join(best, ["query_id", "cell"], "left")
-            .select(
-                "query_id", "cell", "qv",
-                F.when(moved, F.col("cand")).otherwise(F.col("cur")).alias("cur"),
-                F.when(moved, F.col("cand_sim"))
-                .otherwise(F.col("cur_sim")).alias("cur_sim"),
-                (F.col("hops") + moved.cast("long")).alias("hops"),
-                # in-row convergence flag (r12): one action per hop
-                # materializes the lazy checkpoint AND answers the
-                # stop question — see knn_graph_greedy
-                moved.alias("_moved"),
-            )
-            .localCheckpoint(eager=False)
+        return state.join(best, ["query_id", "cell"], "left").select(
+            "query_id", "cell", "qv",
+            F.when(moved, F.col("cand")).otherwise(F.col("cur")).alias("cur"),
+            F.when(moved, F.col("cand_sim"))
+            .otherwise(F.col("cur_sim")).alias("cur_sim"),
+            (F.col("hops") + moved.cast("long")).alias("hops"),
+            moved.alias("_moved"),
         )
-        if new_state.filter(F.col("_moved")).count() == 0:
-            state = new_state
-            break
-        state = new_state
+
+    # absorbing moves, fixed-unroll oracle: see knn_graph_greedy
+    state = fixpoint(start, step, max_rounds=_GS_STEPS, must_converge=False)
     wf = Window.partitionBy("query_id").orderBy(
         F.desc("cur_sim"), F.asc("cur"), F.asc("cell"))
     return (

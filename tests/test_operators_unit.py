@@ -424,6 +424,48 @@ def test_star_components_equal_label_propagation(spark):
 
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, nodes, max_iter=5)
+    # ...and so must star, whose single round cannot fold the chain
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(pairs, nodes, max_iter=1)
+
+
+def test_fixpoint_converges_caps_and_fixed_depth(spark):
+    """`iterate.fixpoint` on a min-label chain 0-1-2-3-4: the label of
+    node 4 needs four moving rounds, so the fifth step is the first
+    with no mover. Steps are counted in Python."""
+    import pytest
+
+    from bigdata06_spark.operators.iterate import fixpoint
+
+    chain = [(i, i + 1) for i in range(4)]
+    edges = spark.createDataFrame(chain + [(b, a) for a, b in chain], "src long, dst long")
+    calls = []
+
+    def step(labels):
+        calls.append(1)
+        nbr = (
+            edges.join(labels.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("nbr"))
+        )
+        return labels.join(nbr, "node").select(
+            "node", F.least("label", "nbr").alias("label"), (F.col("nbr") < F.col("label")).alias("_moved")
+        )
+
+    start = spark.range(5).select(F.col("id").alias("node"), F.col("id").alias("label"))
+    out = fixpoint(start, step, max_rounds=10)
+    assert len(calls) == 5
+    assert {(r.node, r.label) for r in out.collect()} == {(i, 0) for i in range(5)}
+
+    calls.clear()
+    with pytest.raises(RuntimeError, match="test_fixpoint_converges_caps_and_fixed_depth did not converge in 3 rounds"):
+        fixpoint(start, step, max_rounds=3)
+    assert len(calls) == 3
+
+    calls.clear()
+    out = fixpoint(start, step, max_rounds=2, must_converge=False)
+    assert len(calls) == 2
+    assert {(r.node, r.label) for r in out.collect()} == {(0, 0), (1, 0), (2, 0), (3, 1), (4, 2)}
 
 
 def test_allpairs_blocked_equals_bruteforce(spark, sf_dir):

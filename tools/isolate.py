@@ -1,17 +1,16 @@
-"""Per-query isolation harness for the round-12 optimization pass
-(guide §1.3/§1.4): time ONE registered query with the noop sink so the
-measurement is the computation, not the sink or driver-side row pull,
-and dump `.explain("formatted")` for the plan evidence committed under
-plans/r12/.
+"""Per-query isolation harness: time ONE registered query with the
+noop sink so the measurement is the computation, not the sink or the
+row pull back to Python, and optionally dump `.explain("formatted")`
+as plan evidence (`--plan-out`).
 
 Usage:
-  python tools/isolate_r12.py <query> [<query> ...] [--sf SF_DIR]
+  python tools/isolate.py <query> [<query> ...] [--sf SF_DIR]
       [--reps N] [--plan-out DIR] [--suffix before|after]
 
 Timing methodology matches bench.py (min-of-N, build+execute per rep)
 except the action is the noop sink instead of count(); bench.py itself
 keeps count() so round-over-round numbers stay comparable. Jobs are
-labeled with setJobDescription (guide §1.2).
+labeled with setJobDescription.
 """
 
 from __future__ import annotations
@@ -23,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bigdata06_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from bigdata06_spark.queries import load_all_queries  # noqa: E402
 from bigdata06_spark.session import get_spark  # noqa: E402
 
@@ -35,14 +35,14 @@ def plan_of(df) -> str:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plan-out", default=None,
                     help="directory to write <query>_<suffix>.txt plans")
     ap.add_argument("--suffix", default=None)
     args = ap.parse_args()
 
-    spark = get_spark("isolate_r12")
+    spark = get_spark("isolate")
     spark.range(1000).count()
     spark.read.parquet(os.path.join(args.sf, "region.parquet")).count()
     specs = load_all_queries()
