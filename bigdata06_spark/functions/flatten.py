@@ -11,14 +11,8 @@ struct at the parquet/JSON scan).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def struct_field(col: str) -> Column:
-    """P1 — nested struct access: `artist['followers']['total']`
-    (Spotify_API.py:82) → `col('followers.total')`."""
-    return F.col(col)
 
 
 def array_head_or(col, default="") -> Column:
@@ -53,15 +47,3 @@ def duration_min(duration_ms_col="duration_ms") -> Column:
     """P7 — `round(duration_ms/60000, 2)` (Spotify_API4.py:379)."""
     c = duration_ms_col if isinstance(duration_ms_col, Column) else F.col(duration_ms_col)
     return F.round(c / F.lit(60000.0), 2)
-
-
-def with_literal(df: DataFrame, name: str, value) -> DataFrame:
-    """P11 — stamp a literal column:
-    `country_releases['source_country'] = country` (Spotify_API4.py:518)."""
-    return df.withColumn(name, F.lit(value))
-
-
-def drop_null_ids(df: DataFrame, key: str = "id") -> DataFrame:
-    """P12 — skip local tracks with `id is None`
-    (Spotify_API4.py:366-368)."""
-    return df.filter(F.col(key).isNotNull())

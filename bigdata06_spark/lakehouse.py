@@ -65,26 +65,36 @@ def _list_data_files(path: str, sub: str) -> list[str]:
 
 
 def _commit_log(path: str, version: int, entry: dict) -> None:
-    """Atomic optimistic-concurrency commit: create `<version>.json`
-    if-and-only-if absent (O_CREAT|O_EXCL — one syscall, atomic on
-    POSIX). Two writers that both computed `current_version()+1` race
-    here and exactly one wins; the loser raises CommitConflictError
-    with the log untouched. Data files are written BEFORE this call
-    under a per-attempt unique subdirectory, so a losing attempt
-    leaves only unreferenced files (vacuum reclaims them), never a
-    half-visible version."""
+    """Atomic optimistic-concurrency commit: publish `<version>.json`
+    if-and-only-if absent, complete. The entry is written and fsynced
+    under a temp name (`<version>.json.tmp-<uuid>`, which log listings
+    ignore because it does not end in `.json`), then hard-linked to
+    the target: `link` fails with EEXIST when the target exists, so it
+    is the same atomic create-if-absent as O_CREAT|O_EXCL, but the
+    name only appears once the body is on disk — a reader can never
+    parse an empty or partial entry. Two writers that both computed
+    `current_version()+1` race here and exactly one wins; the loser
+    raises CommitConflictError with the log untouched. Data files are
+    written BEFORE this call under a per-attempt unique subdirectory,
+    so a losing attempt leaves only unreferenced files (vacuum
+    reclaims them), never a half-visible version."""
     os.makedirs(_log_dir(path), exist_ok=True)
     target = os.path.join(_log_dir(path), f"{version}.json")
+    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
+    entry.setdefault("ts", time.time())  # commit wall clock (TIMESTAMP AS OF)
+    with open(tmp, "w") as fh:
+        json.dump(entry, fh, indent=1)
+        fh.flush()
+        os.fsync(fh.fileno())
     try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        os.link(tmp, target)
     except FileExistsError:
         raise CommitConflictError(
             f"version {version} of {path} was committed by a concurrent "
             "writer; re-read the table and retry"
         ) from None
-    entry.setdefault("ts", time.time())  # commit wall clock (TIMESTAMP AS OF)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(entry, fh, indent=1)
+    finally:
+        os.unlink(tmp)
 
 
 def _write_log(path: str, version: int, add: list[str], remove: list[str]) -> None:
@@ -1764,16 +1774,6 @@ def read_version(spark: SparkSession, path: str, version: int,
 # as long as OPTIMIZE runs at the cadence any DV design assumes.
 
 
-def _rel_file_expr():
-    """`_metadata.file_path` (absolute file: URI) → table-relative
-    path (`data/...`), the form the log stores. Same `/data/` split as
-    merge's rel_of — O(1) per row, no file-list lookup."""
-    return F.concat(
-        F.lit(_DATA + "/"),
-        F.element_at(F.split(F.col("_metadata.file_path"), f"/{_DATA}/"), -1),
-    )
-
-
 def _with_listed_file(spark: SparkSession, path: str, df: DataFrame,
                       rel_files: list[str]) -> DataFrame:
     """Attach `_dv_file` (the file's name AS LISTED in the log — rel
@@ -1886,7 +1886,7 @@ def delete_where(spark: SparkSession, path: str, predicate,
     `predicate` (SQL string or Column) deleted WITHOUT rewriting any
     data file. Writes one small parquet of (file, row_index)
     positions under a per-attempt `v<N>-<attempt>dv/` directory and
-    commits `{"dv_add": {...}}` through the same atomic O_EXCL log
+    commits `{"dv_add": {...}}` through the same atomic create-if-absent log
     protocol as every other writer (a lost race raises
     CommitConflictError; the orphaned DV parquet is vacuum food).
     Returns the new version — or the current one unchanged when no
@@ -2481,17 +2481,6 @@ def _schema_actions_at(path: str, version: int) -> list[dict]:
         if dr:
             acts.append({"kind": "drop", "column": dr["column"]})
     return acts
-
-
-def _schema_adds_at(path: str, version: int) -> list[tuple[str, str]]:
-    """(column, type) pairs of the add actions at `version` — the
-    additive subset of `_schema_actions_at`, for call sites that only
-    materialize lazily-added columns."""
-    return [
-        (a["column"], a["type"])
-        for a in _schema_actions_at(path, version)
-        if a["kind"] == "add"
-    ]
 
 
 def _apply_schema_actions(df: DataFrame, actions: list[dict]) -> DataFrame:

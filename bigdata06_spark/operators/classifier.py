@@ -71,27 +71,6 @@ def hashed_features(docs: DataFrame, id_col: str = "doc_id",
     return base.groupBy(id_col, "bucket").agg(F.count(F.lit(1)).cast("long").alias("x"))
 
 
-def _score(feats: DataFrame, lab: DataFrame, w: DataFrame | None,
-           id_col: str) -> DataFrame:
-    """(id, y, s): integer decision scores under weights `w` (w=None →
-    all-zero weights → s=0)."""
-    if w is None:
-        return lab.select(F.col(id_col), "y", F.lit(0).cast("long").alias("s"))
-    s = (
-        feats.join(F.broadcast(w), "bucket")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("x") * F.col("w")).cast("long").alias("s"))
-    )
-    return lab.join(s, id_col, "left").select(
-        F.col(id_col), "y", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("s")
-    )
-
-
-def _errors(scored: DataFrame, id_col: str) -> DataFrame:
-    pred = F.when(F.col("s") > 0, F.lit(1)).otherwise(F.lit(-1))
-    return scored.filter(pred != F.col("y")).select(F.col(id_col), "y")
-
-
 def perceptron_train(docs: DataFrame, label: Column, epochs: int = 16,
                      id_col: str = "doc_id", text_col: str = "text",
                      dim: int = 1024, binary: bool = True) -> DataFrame:

@@ -351,7 +351,7 @@ def minhash_lsh_probe(docs: DataFrame, is_query, id_col: str = "doc_id",
     bounded by the queries' bucket collisions, and the exact-Jaccard
     verification touches only (query, candidate) pairs. In steady-state
     serving the corpus signatures/buckets are a prebuilt incremental
-    index (the `incremental_dedup` state), so per-probe cost is
+    index, so per-probe cost is
     O(Q·bands + candidates) with zero corpus work; here they are
     derived in-plan so the operator is self-contained under the
     oracle. Same banding recall guarantee as `minhash_lsh_pairs`
@@ -673,73 +673,6 @@ def simhash_adaptive_pairs(docs: DataFrame, id_col: str = "doc_id",
     return _verify_candidates(cands, sets_, id_col, threshold)
 
 
-def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3, threshold: float = 0.5,
-                      num_hashes: int = NUM_MINHASH, bands: int = MINHASH_BANDS) -> DataFrame:
-    """Incremental ingest dedup: flag each NEW document that duplicates
-    the EXISTING corpus — exact (normalized fingerprint) or near
-    (MinHash-LSH banding + exact-Jaccard ≥ threshold vs corpus docs).
-
-    The asymmetry is the point: a daily batch lands against an
-    accumulated corpus, so only new×old pairs matter. The band join is
-    new-side × old-side (never old×old — at 100 TB the old corpus'
-    self-pairs dwarf everything else); in production the old side's
-    signatures/fingerprints are the incrementally-maintained state
-    written by previous runs, so cost per ingest is
-    O(batch + candidates), independent of corpus re-hashing. Output:
-    one row per flagged new doc with its best-matching corpus doc
-    (max Jaccard, ties to min old id; exact matches reported at J=1.0
-    via the fingerprint path even when shingle sets differ in order).
-    """
-    new_fp = new_docs.select(F.col(id_col).alias("new_id"), fingerprint_md5(text_col).alias("fp"))
-    old_fp = corpus.select(F.col(id_col).alias("old_id"), fingerprint_md5(text_col).alias("fp"))
-    exact = (
-        new_fp.join(old_fp, "fp")
-        .groupBy("new_id")
-        .agg(F.min("old_id").alias("dup_of"), F.lit(1.0).alias("jaccard"))
-    )
-
-    r = num_hashes // bands
-
-    def _sig(docs: DataFrame, out_id: str) -> DataFrame:
-        idx = shingle_index(docs, id_col, text_col, n)
-        sig = idx.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
-        return sig.select(
-            F.col(id_col).alias(out_id), F.explode(_band_structs(bands, r)).alias("b")
-        ).select(out_id, F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-
-    cands = (
-        _sig(new_docs, "new_id")
-        .join(_sig(corpus, "old_id"), ["band", "bh"])
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    sets_new = rebalance_for_amplification(new_docs, id_col).select(
-        F.col(id_col).alias("new_id"), distinct_shingles(words(F.col(text_col)), n).alias("set_a")
-    )
-    sets_old = rebalance_for_amplification(corpus, id_col).select(
-        F.col(id_col).alias("old_id"), distinct_shingles(words(F.col(text_col)), n).alias("set_b")
-    )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    union = F.size(F.col("set_a")) + F.size(F.col("set_b")) - inter
-    near = (
-        cands.join(sets_new, "new_id")
-        .join(sets_old, "old_id")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .groupBy("new_id")
-        .agg(
-            F.min_by("old_id", F.struct(-F.col("jaccard"), F.col("old_id"))).alias("dup_of"),
-            F.max("jaccard").alias("jaccard"),
-        )
-    )
-    best = exact.unionByName(near).groupBy("new_id").agg(
-        F.min_by("dup_of", F.struct(-F.col("jaccard"), F.col("dup_of"))).alias("dup_of"),
-        F.max("jaccard").alias("jaccard"),
-    )
-    return best.select(F.col("new_id"), "dup_of", "jaccard")
-
-
 def connected_components(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
                          max_iter: int = 25) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every doc
@@ -904,10 +837,17 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame, id_col: str = 
 def incremental_dedup_flagged(docs: DataFrame, is_new: F.Column, id_col: str = "doc_id",
                               text_col: str = "text", n: int = 3, threshold: float = 0.5,
                               num_hashes: int = NUM_MINHASH, bands: int = MINHASH_BANDS) -> DataFrame:
-    """`incremental_dedup` for the case where new and old batches live
-    in ONE relation, distinguished by a flag DERIVABLE FROM THE ID
-    (hash/modulus batch assignment — the normal ingest layout). Same
-    output contract; the point is plan economy: the two-relation form
+    """Incremental ingest dedup: flag each NEW document that duplicates
+    an OLD one — exact (normalized fingerprint) or near (MinHash-LSH
+    banding + exact-Jaccard ≥ threshold vs old docs); one row per
+    flagged new doc with its best-matching old doc (max Jaccard, ties
+    to min old id; exact matches at J=1.0). Only new×old pairs are
+    generated — at 100 TB the old corpus' self-pairs dwarf everything
+    else.
+
+    New and old batches live in ONE relation, distinguished by a flag
+    DERIVABLE FROM THE ID (hash/modulus batch assignment — the normal
+    ingest layout). The point is plan economy: a two-relation form
     builds two shingle indexes and runs the 64-min signature aggregate
     twice, while here the index is built ONCE and the signature and
     verification-set aggregates both ride its exchange (ReusedExchange
@@ -918,8 +858,7 @@ def incremental_dedup_flagged(docs: DataFrame, is_new: F.Column, id_col: str = "
     64-aggregate trees exist once, not twice).
 
     `is_new` must reference only `id_col` (it is evaluated after
-    aggregation, where the text is gone); for separately-stored
-    batches or precomputed old-side state use `incremental_dedup`."""
+    aggregation, where the text is gone)."""
     r = num_hashes // bands
 
     fps = docs.select(F.col(id_col), fingerprint_md5(text_col).alias("fp"))

@@ -71,14 +71,3 @@ def pack_next_fit(
         return _pack_one_shard(pdf, budget)
 
     return prepared.groupBy("shard").applyInPandas(pack, PACK_SCHEMA)
-
-
-def pack_stats(packed: DataFrame, budget: int = 512) -> DataFrame:
-    """Pack-level roll-up: docs, tokens, and fill ratio per pack —
-    re-aggregates the assignment relation (|docs| rows, 4 ints), never
-    the corpus."""
-    return packed.groupBy("shard", "pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ntok").alias("n_tokens"),
-        (F.sum("ntok") / F.lit(float(budget))).alias("fill_ratio"),
-    )

@@ -39,15 +39,6 @@ def dedup_first_wins(df: DataFrame, keys: Sequence[str], order_by: Sequence[Colu
     )
 
 
-def dedup_any(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """R1 (loose form) — exact reference semantics: an arbitrary row per key.
-
-    Use when the caller doesn't care which duplicate survives;
-    `dropDuplicates` avoids the window sort.
-    """
-    return df.dropDuplicates(list(keys))
-
-
 def union_all(dfs: Sequence[DataFrame], allow_missing_columns: bool = True) -> DataFrame:
     """R2 — n-way union by column NAME.
 
@@ -61,14 +52,6 @@ def union_all(dfs: Sequence[DataFrame], allow_missing_columns: bool = True) -> D
     if not dfs:
         raise ValueError("union_all of zero DataFrames")
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing_columns), dfs)
-
-
-def sort_desc(df: DataFrame, key: str) -> DataFrame:
-    """R3 — global descending sort (`sort_values(..., ascending=False)`,
-    Spotify_API3.py:401). Scale: range-partitioned sort (sampling pass +
-    shuffle). Prefer `top_k` when a limit follows — Spark then plans
-    TakeOrderedAndProject and never materializes the full sort."""
-    return df.orderBy(F.desc(key))
 
 
 def top_k(df: DataFrame, key: str, k: int, *tiebreak: str) -> DataFrame:
@@ -115,23 +98,10 @@ def enrichment_join(
     return joined.drop("__dk")
 
 
-def count_rows(df: DataFrame) -> int:
-    """R8 — `len(df)` recap (Spotify_API3.py:424-429). Driver-edge action;
-    plans a map-side partial count + single-row final agg."""
-    return df.count()
-
-
 def is_empty(df: DataFrame) -> bool:
     """R9 — `df.empty` guard (Spotify_API.py:176). `isEmpty` only runs the
     plan until the first row is produced."""
     return df.isEmpty()
-
-
-def column_to_driver_list(df: DataFrame, column: str) -> list:
-    """R10 — `df['id'].tolist()` to drive the next fetch stage
-    (Spotify_API.py:190). Legal only at the connector boundary (the
-    result seeds external API calls), never inside a dataflow."""
-    return [r[0] for r in df.select(column).collect()]
 
 
 def banded_range_join(left: DataFrame, right: DataFrame, left_ts: str, right_ts: str,

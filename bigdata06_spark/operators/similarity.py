@@ -194,18 +194,6 @@ def _dot_sql(col_name: str, vals: list[float]) -> str:
     )
 
 
-def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH signature: one sign bit per plane, packed
-    into a long. Deterministic (seeded planes baked into the plan);
-    built as one parsed expression (see `_dot_sql`)."""
-    terms = " + ".join(
-        f"(CASE WHEN {_dot_sql(vec_col, plane)} >= CAST(0 AS DOUBLE) "
-        f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i, plane in enumerate(planes)
-    )
-    return F.expr(terms)
-
-
 def _sig_pandas_udf(tables: list[list[list[float]]]):
     """All `L` table signatures in one Arrow-vectorized stage: the
     per-row work is a (dim)·(dim×L·b) matmul + sign + bit-pack, which
@@ -219,7 +207,7 @@ def _sig_pandas_udf(tables: list[list[list[float]]]):
     so a dot product within accumulation error of 0 could flip a bit.
     Signatures are internal candidate-generation state (recall is
     probabilistic by construction), so this affects nothing the engine
-    promises; the SQL form (`lsh_bucket`) remains for bit-pinned runs.
+    promises; a bit-pinned run would fold `_dot_sql` per plane instead.
     """
     from pyspark.sql.functions import pandas_udf
 

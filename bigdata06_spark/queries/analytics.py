@@ -2169,15 +2169,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing in the plan is node-count-bounded."""
     S, ITERS = 10**12, 3
     d_num, d_den = G.DAMPING
-    ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.withColumn("dst", F.lead("event_type").over(w)).filter(F.col("dst").isNotNull())
-    edges = pairs.groupBy(F.col("event_type").alias("src"), "dst").agg(
-        F.count(F.lit(1)).alias("w")
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    e = edges.join(outw, "src")
-    nodes = ev.select(F.col("event_type").alias("node")).distinct()
+    e, nodes = G.transition_graph(load_table(spark, "events", sf_dir))
     cnt = nodes.agg(F.count(F.lit(1)).alias("n"))
     teleport = S * (d_den - d_num) // d_den
     nodes_n = nodes.crossJoin(F.broadcast(cnt))
@@ -2246,16 +2238,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation)."""
     S, ITERS = 10**12, 4
     d_num, d_den = G.DAMPING
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id", "ts", "event_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.withColumn("dst", F.lead("event_type").over(w)).filter(
-        F.col("dst").isNotNull())
-    edges = pairs.groupBy(F.col("event_type").alias("src"), "dst").agg(
-        F.count(F.lit(1)).alias("w"))
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    e = edges.join(outw, "src")
-    nodes = ev.select(F.col("event_type").alias("node")).distinct()
+    e, nodes = G.transition_graph(load_table(spark, "events", sf_dir))
     teleport = S * (d_den - d_num) // d_den
     seed_r = F.when(F.col("node") == _PPR_SEED, F.lit(S)).otherwise(F.lit(0))
     ranks = nodes.select("node", seed_r.cast("long").alias("r"))
@@ -3367,87 +3350,8 @@ def supplier_affinity_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     term): every join bucket bounded at max_deg² pairs, Jaccard exact
     over non-hot parts, same cap as the `_capped` twin so the two
     forms now differ only in threshold-vs-top-k selection."""
-    return _affinity_graph(
-        load_table(spark, "lineitem", sf_dir), top_k=50, max_deg=33
-    )
-
-
-def _affinity_graph(li: DataFrame, threshold: float = 0.3,
-                    max_deg: int | None = None,
-                    top_k: int | None = None) -> DataFrame:
-    """Supplier-supplier Jaccard affinity from the supplier↔part
-    bipartite relation. `max_deg` is the hot-key skew lever (VERDICT
-    r3 #1): parts supplied by more than `max_deg` suppliers are
-    dropped from the index BEFORE the self-join, bounding every join
-    bucket at max_deg² pairs — without it one hot part contributes
-    O(d²) pairs to a single bucket at real-world skew. The degree
-    pass is itself skew-proof: groupBy.count (map-side partial
-    aggregation collapses a hot part to one row per input partition
-    before any shuffle) + broadcast anti-join — never a window on the
-    part key (the `operators/dedup.py:shingle_index` max_df pattern).
-    Per-supplier sizes are computed on the FILTERED relation, so the
-    result is exactly "Jaccard over non-hot parts" — deterministic
-    and oracle-expressible. Principled at scale: a part half the
-    market supplies carries ~zero Jaccard signal, same as a stop-word
-    shingle.
-
-    r11: the projection uses the `_cosupply_mutual_edges` rewrite —
-    one groupBy(p).collect_set(s) replaces distinct + degree count +
-    anti-join + the p-key self-join (2 exchanges, no join; pair
-    counts bit-identical — combinations of the per-part distinct
-    supplier set == the a.s < b.s self-join output; same measured
-    numbers and skew trade as documented there). Per-supplier sizes
-    come from one explode of the same capped sets."""
-    if max_deg is not None:
-        # r12: salted two-level pre-drop — heavy parts never assemble
-        # a full set anywhere (see _capped_part_supplier_sets). The
-        # EAGER checkpoint matters here: the two consumers (sizes,
-        # pairs) otherwise re-execute the guarded two-aggregate chain
-        # (interleaved 6-rep A/B at sf0.1, min/med: no-checkpoint
-        # 2.97/3.24 s vs eager 2.71/2.91 s; unguarded baseline
-        # 2.28/2.52 — the delta is the guard's documented price).
-        parts_sets = _capped_part_supplier_sets(li, max_deg).localCheckpoint(
-            eager=True
-        )
-    else:
-        # unguarded path keeps the single exchange; the two consumers
-        # share it via runtime exchange reuse
-        parts_sets = li.groupBy(F.col("l_partkey").alias("p")).agg(
-            F.array_sort(F.collect_set(F.col("l_suppkey"))).alias("ss")
-        )
-    sz = (
-        parts_sets.select(F.explode("ss").alias("s"))
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    shared = (
-        parts_sets.select(F.posexplode("ss").alias("i", "s_a"), F.col("ss"))
-        .select(
-            "s_a",
-            F.explode(F.expr("slice(ss, i + 2, size(ss))")).alias("s_b"),
-        )
-        .groupBy("s_a", "s_b")
-        .agg(F.count(F.lit(1)).alias("shared_parts"))
-    )
-    from bigdata06_spark.queries.qutil import rnd
-
-    aff = F.col("shared_parts") / (F.col("n_a") + F.col("n_b") - F.col("shared_parts"))
-    scored = shared.join(
-        sz.select(F.col("s").alias("s_a"), F.col("n").alias("n_a")), "s_a"
-    ).join(sz.select(F.col("s").alias("s_b"), F.col("n").alias("n_b")), "s_b")
-    if top_k is not None:
-        # top-k strongest edges overall (6dp-rounded affinity, pair
-        # tiebreak) — SF-insensitive, unlike a fixed threshold whose
-        # qualifying set empties as co-supply density dilutes
-        return (
-            scored.select(
-                "s_a", "s_b", "shared_parts", rnd(aff, 6).alias("affinity")
-            )
-            .orderBy(F.desc("affinity"), "s_a", "s_b")
-            .limit(top_k)
-        )
-    return scored.filter(aff >= threshold).select(
-        "s_a", "s_b", "shared_parts", rnd(aff, 6).alias("affinity")
+    return G.affinity_edges(
+        load_table(spark, "lineitem", sf_dir), G.COSUPPLY_MAX_DEG, top_k=50
     )
 
 
@@ -3474,15 +3378,16 @@ def _affinity_graph(li: DataFrame, threshold: float = 0.3,
 )
 def supplier_affinity_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The affinity graph with the hot-part degree cap ON
-    (max_deg=33): no join bucket can exceed max_deg² pairs, making
-    the bipartite projection's shuffle bounded under arbitrary part
-    skew — the shape that survives a 100× fact with hot keys. Degree
-    pass via groupBy-count + broadcast anti-join (skew-proof, plan-
+    (`COSUPPLY_MAX_DEG`): no part can fan out more than max_deg²
+    pairs, making the bipartite projection's shuffle bounded under
+    arbitrary part skew — the shape that survives a 100× fact with hot
+    keys. Degree pass via the salted two-level pre-drop
+    (`operators.graph.capped_part_supplier_sets`, skew-proof, plan-
     pinned in tests/test_plans.py); per-supplier sizes on the capped
     relation so the Jaccard is exact over non-hot parts and the
     DuckDB oracle reproduces it bit-for-bit."""
-    return _affinity_graph(
-        load_table(spark, "lineitem", sf_dir), threshold=0.15, max_deg=33
+    return G.affinity_edges(
+        load_table(spark, "lineitem", sf_dir), G.COSUPPLY_MAX_DEG, threshold=0.15
     )
 
 
@@ -4031,162 +3936,6 @@ def join_fuzzy_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: hot-part degree cap shared by every co-supply consumer (graph
-#: family + the affinity graphs): parts supplied by more than this
-#: many suppliers are dropped from the index BEFORE the part-key
-#: self-join, bounding every join bucket at max_deg² pairs. 33 is the
-#: same cap `supplier_affinity_graph_capped` ships; at TPC-H skew it
-#: trims only the long tail (p99 part degree is 36/43 at sf0.01/0.1)
-#: while at real-world skew it is what keeps the projection from
-#: going quadratic on one hot key (VERDICT r9 missing #1).
-_COSUPPLY_MAX_DEG = 33
-
-
-def _capped_part_supplier_sets(li: DataFrame, max_deg: int,
-                               nsalt: int = 64) -> DataFrame:
-    """(p, ss): the per-part sorted distinct-supplier array, with
-    parts above `max_deg` distinct suppliers DROPPED BEFORE any full
-    set is ever assembled — the r12 heavy-key pre-drop (VERDICT r11
-    next #4; guide §2.5 two-level aggregation). The r11 form's
-    groupBy(p).collect_set built a hot part's ENTIRE supplier set in
-    one unspillable aggregation buffer at one reducer before the
-    size() filter discarded it — at adversarial skew (deg ~ 1e6+)
-    that is a straggler/OOM, not a cap.
-
-    Two-level cap-or-null shape: suppliers salt by hash into `nsalt`
-    buckets, so stage 1's per-(p, salt) partial sets are bounded at
-    ~deg/nsalt each, a hot key's MERGE work spreads over nsalt
-    reducers, and map-side partial aggregation still combines before
-    the exchange (raw row volume never concentrates — the property a
-    plain repartition-by-p guard would lose, which is why that
-    bench-cheaper variant was rejected despite measuring ~0% here).
-    Each distinct supplier lands in EXACTLY one bucket, so the
-    per-part sum of partial-set sizes IS the exact distinct degree.
-    Stage 2 then NULLS any partial larger than max_deg before
-    collecting: a heavy part contributes only its sizes, so the
-    merge buffer is bounded at nsalt·max_deg entries REGARDLESS of
-    skew, the _deg filter drops heavy parts, and for survivors
-    (deg <= max_deg ⇒ every partial kept, disjoint) the flatten+sort
-    is bit-identical to array_sort(collect_set). No window, no join.
-
-    Measured (sf0.1, one session, 6 interleaved reps, min/med of the
-    full kcore / affinity pipelines): unguarded 3.87/4.38 & 2.28/2.52;
-    this form + eager checkpoint at the call sites 4.33/4.98 &
-    2.71/2.91 (~+10-15%, the guard's price); the r11-window variant
-    5.02/— & 3.10/— (rejected, extra sort + third aggregate); count +
-    broadcast-anti-join +79% (rejected, pays the partial aggregate
-    twice plus a join); repartition('p') single-exchange 3.84/4.12
-    (rejected as above — raw-row shuffle reintroduces the straggler
-    at adversarial skew)."""
-    salt = F.pmod(F.xxhash64(F.col("l_suppkey")), F.lit(nsalt))
-    partial = (
-        li.groupBy(F.col("l_partkey").alias("p"), salt.alias("_salt"))
-        .agg(F.collect_set(F.col("l_suppkey")).alias("pss"))
-    )
-    kept = partial.select(
-        "p",
-        F.size("pss").alias("psz"),
-        F.when(F.size("pss") <= max_deg, F.col("pss")).alias("keep"),
-    )
-    return (
-        kept.groupBy("p")
-        .agg(
-            F.sum("psz").alias("_deg"),
-            F.flatten(F.collect_list("keep")).alias("_fl"),
-        )
-        .filter(F.col("_deg") <= max_deg)
-        .select("p", F.array_sort("_fl").alias("ss"))
-    )
-
-
-def _cosupply_mutual_edges(li: DataFrame, checkpoint: bool = True,
-                           sf_dir: str | None = None) -> DataFrame:
-    """The mutual-top-5 co-supply edge relation (sa < sb) every graph
-    query shares (triangle census, LPA, community components, k-core
-    — ONE Spark-side definition, review r9; the SQL twin is
-    `_COSUPPLY_EDGE_CTES`): distinct supplier↔part pairs, HOT parts
-    (> _COSUPPLY_MAX_DEG suppliers) dropped before the self-join
-    (review r10 — the degree pass is skew-proof: groupBy.count
-    map-side-combines a hot part to one row per input partition, then
-    a broadcast anti-join; never a window on the part key), co-supply
-    counts by part-key self-join, per-supplier top-5 by (count desc,
-    id), kept only when MUTUAL. The kNN edge list is <= 5·|nodes| rows
-    but its lineage (distinct + self-join + window) is the expensive
-    part and every caller fans it into several branches — both the
-    top-5 list and the mutual edges localCheckpoint so the co-supply
-    join runs once (measured 23s → ~4s at sf0.1).
-
-    r11 optimization-round note: a mid-build revision memoized the
-    checkpointed edge list in a module dict keyed on (applicationId,
-    sf_dir) so the six consumer queries shared one build. REMOVED
-    (r11): a module-level memo keyed on the data directory means a
-    benched query's warm reps serve a cached intermediate instead of
-    computing from the parquet inputs — exactly the cross-invocation
-    caching the bench methodology forbids. Every caller now rebuilds
-    the projection inside its own timed region; sharing happens only
-    WITHIN one query plan (the localCheckpoints below). On a real
-    cluster the six consumers would read a materialized view with
-    explicit refresh semantics — that lifecycle belongs in the
-    lakehouse MV operator (`lakehouse_mv_join_incremental`), not a
-    process-global dict. `sf_dir` stays in the signature (callers
-    pass it; harmless) so the call sites did not churn."""
-    # r11 optimization (guide §2.2/§3.5): the former pipeline was
-    # distinct(s,p) -> degree groupBy(p) -> broadcast anti-join ->
-    # p-key SELF-JOIN -> pair groupBy — four exchanges plus a join.
-    # One groupBy(p).collect_set(s) replaces all of the first three:
-    # the set dedups (s,p) pairs, size(set) IS the exact distinct
-    # degree (the > _COSUPPLY_MAX_DEG drop happens before any
-    # explode), and the ordered pairs come from an in-partition
-    # combination expansion over the sorted set — the self-join
-    # disappears entirely. Exchanges: (p) + (x,y) = 2, was 4 + join.
-    # Pair counts are bit-identical (combinations of the distinct
-    # supplier set per part == the a.s < b.s self-join output).
-    # Expansion form matters: posexplode + slice explode (codegen'd
-    # generators) measured 2.05 s vs 3.38 s for the equivalent nested
-    # transform/flatten lambda (higher-order array functions are
-    # interpreted — the minhash_signatures lesson) vs 2.77 s for the
-    # old self-join, at sf0.1 min-of-3.
-    # r12: the r11 skew trade (hot part's full set assembled at one
-    # reducer before the cap) is closed — the heavy-key pre-drop now
-    # runs as the salted two-level aggregation in
-    # `_capped_part_supplier_sets` (see its docstring for the
-    # exactness argument and measurements). Eager checkpoint: the
-    # unionAll below consumes co_half twice, which would re-execute
-    # the guarded chain past exchange reuse (kcore A/B min/med:
-    # checkpointed 4.33/4.98 vs plain 4.69/5.06).
-    parts_sets = _capped_part_supplier_sets(
-        li, _COSUPPLY_MAX_DEG
-    ).localCheckpoint(eager=True)
-    co_half = (
-        parts_sets.select(F.posexplode("ss").alias("i", "x"), F.col("ss"))
-        .select(
-            "x",
-            F.explode(F.expr("slice(ss, i + 2, size(ss))")).alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    co = co_half.select(
-        F.col("x").alias("sa"), F.col("y").alias("sb"), "c"
-    ).unionAll(co_half.select(
-        F.col("y").alias("sa"), F.col("x").alias("sb"), "c"
-    ))
-    w = Window.partitionBy("sa").orderBy(F.desc("c"), F.asc("sb"))
-    d = (
-        co.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("sa", "sb")
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        d.alias("d")
-        .join(d.alias("m"), F.expr("m.sa = d.sb AND m.sb = d.sa"))
-        .filter(F.expr("d.sa < d.sb"))
-        .select(F.col("d.sa").alias("sa"), F.col("d.sb").alias("sb"))
-    )
-    return e.localCheckpoint(eager=True) if checkpoint else e
-
-
 # MATERIALIZED: d/e are referenced multiple times by the oracles
 # (mutuality join, triangle legs, degrees, counts); inlining would
 # replay the 18M-row co-supply join per reference (measured ~80 GB of
@@ -4249,7 +3998,7 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata06_spark.queries.qutil import rnd
 
     li = load_table(spark, "lineitem", sf_dir)
-    e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
+    e = G.mutual_topk_edges(li)
     deg = (
         e.select(F.col("sa").alias("v"))
         .unionAll(e.select(F.col("sb").alias("v")))
@@ -4328,12 +4077,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint: labels eagerly localCheckpoint per round (|nodes| rows)
     so round t doesn't replay rounds 1..t-1."""
     li = load_table(spark, "lineitem", sf_dir)
-    e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
-    ed = (
-        e.select(F.col("sa").alias("src"), F.col("sb").alias("dst"))
-        .unionAll(e.select(F.col("sb").alias("src"), F.col("sa").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    e = G.mutual_topk_edges(li)
+    ed = G.symmetric(e).localCheckpoint(eager=True)
     labels = ed.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("lab")
     )
@@ -5153,8 +4898,8 @@ def dq_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT, the two engines disagree on scientific-notation cutoffs).
 
     Scale: TWO aggregates over two scans (then one cross join of two
-    1-row frames + stack()). r11 split (guide §2.3, plan evidence in
-    plans/r11/dq_profile_columns_*.txt): the former single aggregate
+    1-row frames + stack()). r11 split (guide §2.3; regenerate the
+    plan with `tools/isolate.py --plan-out`): the former single aggregate
     mixed the six exact countDistincts with string/timestamp min/max
     — Catalyst's multi-distinct rewrite EXPANDs every row 7x and
     groups by all six distinct columns, and the var-length min/max
@@ -6238,7 +5983,7 @@ def graph_community_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata06_spark.queries.qutil import rnd
 
     li = load_table(spark, "lineitem", sf_dir)
-    e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
+    e = G.mutual_topk_edges(li)
     nodes = (
         e.select(F.col("sa").alias("v"))
         .unionAll(e.select(F.col("sb").alias("v")))
@@ -6722,10 +6467,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     state and counts the flagged edges. Round count is bounded by the
     peeling depth, not N."""
     li = load_table(spark, "lineitem", sf_dir)
-    e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
-    ed = e.select(F.col("sa").alias("src"), F.col("sb").alias("dst")).unionAll(
-        e.select(F.col("sb").alias("src"), F.col("sa").alias("dst"))
-    )
+    e = G.mutual_topk_edges(li)
+    ed = G.symmetric(e)
 
     def step(state: DataFrame) -> DataFrame:
         kept = state.filter(~F.col("_moved")).select("src", "dst")
@@ -6791,10 +6534,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified) — the driver's non-vacuity gate runs at sf0.01, where
     the answer is 20 rows."""
     li = load_table(spark, "lineitem", sf_dir)
-    e = _cosupply_mutual_edges(li, sf_dir=sf_dir)
-    ed = e.select(F.col("sa").alias("src"), F.col("sb").alias("dst")).unionAll(
-        e.select(F.col("sb").alias("src"), F.col("sa").alias("dst"))
-    )
+    e = G.mutual_topk_edges(li)
+    ed = G.symmetric(e)
     cand = (
         ed.alias("e1")
         .join(ed.alias("e2"), F.expr("e2.src = e1.dst"))

@@ -963,7 +963,7 @@ def lakehouse_datasource_write_roundtrip(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
     """The DataSource WRITE half: `df.write.format("lakehouse")`
     creates the table through the same OCC protocol the library
-    writers use (per-attempt data dir, atomic O_EXCL log commit,
+    writers use (per-attempt data dir, atomic create-if-absent log commit,
     abort removes orphans), and the read half must return the rows
     byte-for-byte — proving the format's reader and writer are a
     closed loop through the public DataFrame API alone, no library

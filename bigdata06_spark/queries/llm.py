@@ -343,7 +343,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH-verified Jaccard ≥ 0.5, best old match per new doc.
     Only new×old pairs are ever generated (the old corpus' self-pairs
     are the quadratic term that can't exist in a daily ingest); see
-    operators/dedup.py:incremental_dedup for the state-reuse story.
+    operators/dedup.py:incremental_dedup_flagged.
 
     Oracle exactness caveat (same stance as dedup_minhash_lsh): the
     DuckDB oracle computes ALL-pairs exact Jaccard, while the Spark path

@@ -196,8 +196,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner join in append mode is batch-equivalent on a full replay →
     exact oracle."""
     return SO.run_to_table(
-        SO.purchase_view_interval_join(SO.stream_events(spark, sf_dir)), "append"
-    )
+        SO.purchase_view_join(SO.stream_events(spark, sf_dir), "inner"), "append"
+    ).drop("v_user")
 
 
 @register(
@@ -220,10 +220,10 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes every real row's window; with that, full replay ≡ batch
     LEFT JOIN → exact oracle."""
     out = SO.run_to_table(
-        SO.purchase_view_left_join(SO.stream_events_with_flush(spark, sf_dir)),
+        SO.purchase_view_join(SO.stream_events_with_flush(spark, sf_dir), "left_outer"),
         "append",
     )
-    return out.filter(F.col("user_id") >= 0)
+    return out.filter(F.col("user_id") >= 0).drop("v_user")
 
 
 @register(
@@ -246,7 +246,7 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). Completes the stream-stream join family
     (inner/left/full)."""
     out = SO.run_to_table(
-        SO.purchase_view_full_join(SO.stream_events_with_flush(spark, sf_dir)),
+        SO.purchase_view_join(SO.stream_events_with_flush(spark, sf_dir), "full_outer"),
         "append",
     )
     return out.filter(

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
@@ -49,7 +50,6 @@ class JsonlManifestWriter(DataSourceWriter):
 
     def write(self, iterator) -> ShardCommit:
         import hashlib
-        import uuid
 
         from pyspark import TaskContext
 
@@ -74,9 +74,16 @@ class JsonlManifestWriter(DataSourceWriter):
             os.replace(os.path.join(self.path, m.temp_name), os.path.join(self.path, final))
             shards.append({"file": final, "rows": m.rows, "sha256": m.sha256})
         manifest = {"shards": shards, "total_rows": sum(s["rows"] for s in shards)}
-        # the manifest lands LAST: its presence == complete export
-        with open(os.path.join(self.path, "_MANIFEST.json"), "w") as f:
+        # the manifest lands LAST: its presence == complete export.
+        # Written to a temp name then renamed, so a reader that sees
+        # `_MANIFEST.json` never sees it half-written.
+        target = os.path.join(self.path, "_MANIFEST.json")
+        tmp = f"{target}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
             json.dump(manifest, f, indent=2, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, target)
 
     def abort(self, messages) -> None:
         for m in messages:

@@ -69,13 +69,6 @@ def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -
     return r.load(path)
 
 
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw text-lines scan (`text` source): one row per line in a
-    `value` string column — the ingestion shape for line-delimited
-    corpora before any schema is imposed."""
-    return spark.read.format("text").load(path)
-
-
 def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Avro scan via the `avro_py` Python DataSource (see
     sources/avro_datasource.py): schema inferred from one file header,

@@ -256,14 +256,30 @@ def watermarked_tumbling(events: DataFrame, width: str = "1 hour", late: str = "
     )
 
 
-def purchase_view_interval_join(events: DataFrame, lookback: str = "1 hour") -> DataFrame:
-    """Stream-stream inner join: each purchase matched to the same
-    user's views within the preceding `lookback`. Both sides carry
-    watermarks and the join condition time-bounds view_ts relative to
-    p_ts — the two requirements that let Structured Streaming expire
-    join state (a view older than lookback past the watermark can never
-    match a future purchase and is evicted). Inner join in append mode
-    is batch-equivalent on a full replay."""
+#: how far back a view may precede the purchase it joins
+_LOOKBACK = "1 hour"
+
+
+def purchase_view_join(events: DataFrame, how: str) -> DataFrame:
+    """Stream-stream interval join: each purchase matched to the same
+    user's views within the preceding `_LOOKBACK`; `how`
+    is the join type ("inner", "left_outer" or "full_outer"). Both
+    sides carry watermarks and the join condition time-bounds view_ts
+    relative to p_ts — the two requirements that let Structured
+    Streaming expire join state (a view older than the lookback past
+    the watermark can never match a future purchase and is evicted).
+
+    Inner join in append mode is batch-equivalent on a full replay.
+    Outer results cannot be emitted eagerly (a matching row may still
+    come), so Structured Streaming holds the unmatched rows in state —
+    purchases for a left join, both sides for a full join — and
+    releases them with NULLs only when the watermark passes their join
+    window. On a bounded replay the watermark never does, so outer
+    joins need the flush punctuation of `stream_events_with_flush`;
+    with it the final watermark passes every window and the emitted
+    set equals the batch join (exact oracle). `v_user` is the view
+    side's user (NULL on an unmatched purchase); only the full join
+    needs it, to carry the user of an unmatched view."""
     events = as_event_time(events)
     views = (
         events.filter(F.col("event_type") == "view")
@@ -282,10 +298,10 @@ def purchase_view_interval_join(events: DataFrame, lookback: str = "1 hour") -> 
     return purchases.join(
         views,
         (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("view_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {_LOOKBACK}"))
         & (F.col("view_ts") <= F.col("p_ts")),
-        "inner",
-    ).select("event_id", "user_id", "view_event_id", "value")
+        how,
+    ).select("event_id", "user_id", "v_user", "view_event_id", "value")
 
 
 def stream_events_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,72 +359,6 @@ def stream_events_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(d)
     )
     return normalize_events_ts(stream)
-
-
-def purchase_view_left_join(events: DataFrame, lookback: str = "1 hour") -> DataFrame:
-    """Stream-stream LEFT OUTER join: every purchase, matched to the
-    same user's views in the preceding `lookback` — or emitted with a
-    NULL view once the watermark proves no match can arrive. Outer
-    results cannot be emitted eagerly (a matching view may still come),
-    so Structured Streaming holds the unmatched left rows in state and
-    releases them only when the watermark passes their join window —
-    the outer-join-specific state machinery this operator exercises on
-    top of the inner variant. On a full availableNow replay the final
-    watermark passes every window, so the emitted set equals the batch
-    LEFT JOIN (exact oracle)."""
-    events = as_event_time(events)
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_event_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", F.col("ts").alias("p_ts"), "value")
-        .withWatermark("p_ts", "1 hour")
-    )
-    return purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("view_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("event_id", "user_id", "view_event_id", "value")
-
-
-def purchase_view_full_join(events: DataFrame, lookback: str = "1 hour") -> DataFrame:
-    """Stream-stream FULL OUTER join: unmatched rows on EITHER side
-    are held in state and emitted with NULLs once the watermark
-    proves no partner can arrive — both sides' eviction machinery at
-    once (views outside any purchase's lookback window surface too).
-    Same flush-punctuation requirement as the left join on bounded
-    replays."""
-    events = as_event_time(events)
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_event_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", F.col("ts").alias("p_ts"), "value")
-        .withWatermark("p_ts", "1 hour")
-    )
-    return purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("view_ts") <= F.col("p_ts")),
-        "full_outer",
-    ).select("event_id", "user_id", "v_user", "view_event_id", "value")
 
 
 def watermarked_dedup_counts(events: DataFrame, horizon: str = "1 hour") -> DataFrame:

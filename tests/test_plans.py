@@ -586,17 +586,17 @@ def test_affinity_capped_degree_pass_salted_predrop(spark, sf_dir):
     cap-or-null aggregation (collect_set per (p, salt-of-supplier);
     merge aggregate sums partial sizes for the exact degree and
     collects only partials <= max_deg, so its buffer is bounded at
-    nsalt·max_deg). The guarded projection is eagerly checkpointed at
-    its call sites, so its shape is pinned on the HELPER's own plan;
+    _NSALT·max_deg). The guarded projection is eagerly checkpointed at
+    `cosupply_pairs`, so its shape is pinned on the HELPER's own plan;
     the query-level plan is pinned for expansion sanity."""
     from bigdata06_spark.catalog import load_table
-    from bigdata06_spark.queries.analytics import (
-        _affinity_graph,
-        _capped_part_supplier_sets,
+    from bigdata06_spark.operators.graph import (
+        affinity_edges,
+        capped_part_supplier_sets,
     )
 
     li = load_table(spark, "lineitem", sf_dir).select("l_partkey", "l_suppkey")
-    hplan = plan_of(_capped_part_supplier_sets(li, 33))
+    hplan = plan_of(capped_part_supplier_sets(li, 33))
     # salted stage-1 key is present...
     assert "xxhash64" in hplan and "pmod" in hplan, hplan
     # ...two aggregation levels (partial sets, then the bounded
@@ -625,7 +625,7 @@ def test_affinity_capped_degree_pass_salted_predrop(spark, sf_dir):
         ("s%02d" % i, "cold") for i in range(3)
     ]
     li = spark.createDataFrame(rows, ["l_suppkey", "l_partkey"])
-    got = _affinity_graph(li, threshold=0.0, max_deg=4).collect()
+    got = affinity_edges(li, 4, threshold=0.0).collect()
     touched = {r.s_a for r in got} | {r.s_b for r in got}
     assert touched == {"s00", "s01", "s02"}, got  # hot part (deg 5) dropped
     assert all(r.shared_parts == 1 for r in got), got
