@@ -51,7 +51,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,15 +81,12 @@ def manifest_meta(path: str) -> dict | None:
 
 
 def _swap_meta(path: str, meta: dict) -> None:
-    """Atomic meta swap (write-temp + rename): readers see the old or
+    """Atomic meta swap (fsynced temp + rename): readers see the old or
     the new manifest, never a torn one. Concurrent refreshes race to
     the rename; both candidates are correct for their version, and
     last-rename-wins is fine for derived data."""
     os.makedirs(_mf_root(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=_mf_root(path), suffix=".json")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _meta_path(path))
+    LH._publish_json(_meta_path(path), meta, exclusive=False)
 
 
 def _num_or_null(v):
@@ -177,6 +173,39 @@ def _arrow_schema(schema: T.StructType):
     return pa.schema([pa.field(f.name, conv(f.dataType)) for f in schema.fields])
 
 
+def _write_shards(out_dir: str, pa_schema, rows) -> None:
+    """Stream `rows` (lists aligned with `pa_schema`) to parquet
+    shards of _REBUILD_SHARD_ROWS under `out_dir` with pyarrow:
+    O(shard) driver memory, no pickling, no Spark job. Each shard is
+    fsynced: a checkpoint sidecar must be on disk before its entry
+    swap lets checkpoint_log delete the history it replaces. An empty
+    row stream still writes a schema-only shard."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    shard = 0
+    batch_cols: list[list] = [[] for _ in pa_schema]
+
+    def _flush():
+        nonlocal shard, batch_cols
+        arrays = [pa.array(c, type=pa_schema.field(i).type)
+                  for i, c in enumerate(batch_cols)]
+        out = os.path.join(out_dir, f"part-{shard:05d}.parquet")
+        pq.write_table(pa.Table.from_arrays(arrays, schema=pa_schema), out)
+        with open(out, "rb") as fh:
+            os.fsync(fh.fileno())
+        shard += 1
+        batch_cols = [[] for _ in pa_schema]
+
+    for i, r in enumerate(rows):
+        if i and i % _REBUILD_SHARD_ROWS == 0:
+            _flush()
+        for j, v in enumerate(r):
+            batch_cols[j].append(v)
+    _flush()
+
+
 def _write_manifest_distributed(spark: SparkSession, out_dir: str,
                                 files: list[str], stats: dict, dvs: dict,
                                 pby: list[str], scols: list[str],
@@ -189,37 +218,14 @@ def _write_manifest_distributed(spark: SparkSession, out_dir: str,
     every row, single-threaded, measured 6-14 s). The rows ORIGINATE
     on the driver (they are the log replay's file/stats dicts), so
     shipping them through executors is pure overhead — instead the
-    driver streams column batches of _REBUILD_SHARD_ROWS straight to
-    parquet shards with pyarrow: O(shard) memory, no pickling, no
-    Spark job (measured 1.6 s at the 200k probe vs 6.5 s
+    driver streams column batches straight to parquet shards
+    (`_write_shards`; measured 1.6 s at the 200k probe vs 6.5 s
     createDataFrame). Readers (plan_files / manifest_df) scan the
     shard directory with the pinned schema like any parquet dir."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pa_schema = _arrow_schema(schema)
-    os.makedirs(out_dir, exist_ok=True)
-    ncols = len(schema.fields)
-    shard = 0
-    batch_cols: list[list] = [[] for _ in range(ncols)]
-
-    def _flush():
-        nonlocal shard, batch_cols
-        arrays = [pa.array(c, type=pa_schema.field(i).type)
-                  for i, c in enumerate(batch_cols)]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=pa_schema),
-                       os.path.join(out_dir, f"part-{shard:05d}.parquet"))
-        shard += 1
-        batch_cols = [[] for _ in range(ncols)]
-
-    blooms = blooms or {}
-    for i, f in enumerate(files):
-        if i and i % _REBUILD_SHARD_ROWS == 0:
-            _flush()
-        r = _file_row(f, stats, dvs, pby, scols, bcols, blooms)
-        for j, v in enumerate(r):
-            batch_cols[j].append(v)
-    _flush()  # the tail batch; an empty table writes a schema-only shard
+    _write_shards(out_dir, _arrow_schema(schema), (
+        _file_row(f, stats, dvs, pby, scols, bcols, blooms or {})
+        for f in files
+    ))
 
 
 def write_checkpoint_sidecar(out_dir: str, files: list[str], stats: dict,
@@ -232,39 +238,22 @@ def write_checkpoint_sidecar(out_dir: str, files: list[str], stats: dict,
     file's log-stats dict as compact JSON, so dict-replay consumers
     (`LH._read_entry` hydration) reconstruct the exact original JSON
     scalars (a string-typed "5" and a number 5 canonicalize the same
-    in mn_<c> but must replay differently). Streams
-    _REBUILD_SHARD_ROWS pyarrow batches like the rebuild writer:
-    O(shard) driver memory, no Spark job."""
+    in mn_<c> but must replay differently). Streams shards like the
+    rebuild writer (`_write_shards`)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    schema = _manifest_schema(pby, scols, bcols)
-    pa_schema = _arrow_schema(schema).append(
+    pa_schema = _arrow_schema(_manifest_schema(pby, scols, bcols)).append(
         pa.field("stats_json", pa.string())
     )
-    os.makedirs(out_dir, exist_ok=True)
-    ncols = len(pa_schema)
-    shard = 0
-    batch_cols: list[list] = [[] for _ in range(ncols)]
 
-    def _flush():
-        nonlocal shard, batch_cols
-        arrays = [pa.array(c, type=pa_schema.field(i).type)
-                  for i, c in enumerate(batch_cols)]
-        pq.write_table(pa.Table.from_arrays(arrays, schema=pa_schema),
-                       os.path.join(out_dir, f"part-{shard:05d}.parquet"))
-        shard += 1
-        batch_cols = [[] for _ in range(ncols)]
+    def rows():
+        for f in files:
+            st = stats.get(f)
+            yield _file_row(f, stats, dvs, pby, scols, bcols, blooms) + [
+                json.dumps(st, separators=(",", ":")) if st else None
+            ]
 
-    for i, f in enumerate(files):
-        if i and i % _REBUILD_SHARD_ROWS == 0:
-            _flush()
-        r = _file_row(f, stats, dvs, pby, scols, bcols, blooms)
-        st = stats.get(f)
-        r.append(json.dumps(st, separators=(",", ":")) if st else None)
-        for j, v in enumerate(r):
-            batch_cols[j].append(v)
-    _flush()  # tail; an empty table still writes a schema-only shard
+    _write_shards(out_dir, pa_schema, rows())
 
 
 def _resets_state(entry: dict) -> bool:
@@ -276,59 +265,6 @@ def _resets_state(entry: dict) -> bool:
     per-entry and cannot absorb a pin."""
     return (bool(entry.get("checkpoint")) or "dvs_set" in entry
             or "schema_actions_set" in entry or "schema_set" in entry)
-
-
-def _delta_entries(path: str, lo: int, hi: int) -> list[tuple[int, dict]]:
-    """Parse ONLY log entries in (lo, hi] — the incremental fold's
-    input. _iter_log_entries would re-parse every entry from 0
-    (including a fat checkpoint's full file list) per refresh; at a
-    200k-file log that is seconds of driver JSON for a 2-file
-    append."""
-    out = []
-    for v in range(lo + 1, hi + 1):
-        lp = os.path.join(LH._log_dir(path), f"{v}.json")
-        if not os.path.exists(lp):
-            continue
-        with open(lp) as fh:
-            out.append((v, json.load(fh)))
-    return out
-
-
-def _fold_schema_meta(acts: list[dict], logical: list[str] | None,
-                      entry: dict) -> tuple[list[dict], list[str] | None]:
-    """Apply ONE delta entry's schema actions to the cached
-    (acts, logical_cols) — the same per-entry rules as
-    _schema_actions_at / _logical_cols_at, O(entry) instead of
-    O(log). Pin entries never reach here (_resets_state forces a full
-    rebuild)."""
-    new: list[dict] = []
-    for sa in entry.get("schema_adds", []):
-        new.append({"kind": "add", "column": sa["column"], "type": sa["type"]})
-    sa = entry.get("schema_add")
-    if sa:
-        new.append({"kind": "add", "column": sa["column"], "type": sa["type"]})
-    rn = entry.get("schema_rename")
-    if rn:
-        new.append({"kind": "rename", "from": rn["from"], "to": rn["to"]})
-    dr = entry.get("schema_drop")
-    if dr:
-        new.append({"kind": "drop", "column": dr["column"]})
-    if not new:
-        return acts, logical
-    acts = acts + new
-    if logical is not None:
-        logical = list(logical)
-        for a in new:
-            if a["kind"] == "add":
-                if a["column"] not in logical:
-                    logical.append(a["column"])
-            elif a["kind"] == "rename":
-                if a["from"] in logical:
-                    logical[logical.index(a["from"])] = a["to"]
-            elif a["kind"] == "drop":
-                if a["column"] in logical:
-                    logical.remove(a["column"])
-    return acts, logical
 
 
 def _fold_manifest(spark: SparkSession, cur: DataFrame, delta,
@@ -394,6 +330,17 @@ def _fold_manifest(spark: SparkSession, cur: DataFrame, delta,
     return cur
 
 
+def _entries_after(path: str, lo: int, hi: int) -> list[tuple[int, dict]]:
+    """The surviving log entries in (lo, hi], bulk-free — the
+    incremental fold's input (never a re-parse from version 0)."""
+    out = []
+    for u in range(lo + 1, hi + 1):
+        entry = LH._read_entry(path, u, bulk=())
+        if entry is not None:
+            out.append((u, entry))
+    return out
+
+
 def _sidecar_checkpoint(path: str, v: int) -> tuple[int, str] | None:
     """(version, sidecar dir name) of the newest PARQUET checkpoint at
     or below `v`, or None. Discovery is by directory NAME
@@ -439,7 +386,7 @@ def refresh_manifest(spark: SparkSession, path: str,
     manifest as Spark ops (anti-join removes, union adds, join-concat
     DV adds). Full rebuild only for the first manifest or when a
     state-resetting entry (checkpoint / RESTORE) intervenes — and a
-    full rebuild is ONE JSON parse pass of the log (LH._replay_all;
+    full rebuild is ONE JSON parse pass of the log (LH.snapshot;
     VERDICT r7 #5: composing the per-artifact replay functions decoded
     a 1M-file log up to ~8 times), while the incremental path reads
     its table specs from the meta cache and touches no pre-window
@@ -456,7 +403,7 @@ def refresh_manifest(spark: SparkSession, path: str,
     mode = "full"
     delta: list = []
     if meta is not None and meta["version"] < v:
-        delta = _delta_entries(path, meta["version"], v)
+        delta = _entries_after(path, meta["version"], v)
         if delta and not any(_resets_state(e) for _dv, e in delta):
             mode = "incremental"
 
@@ -491,12 +438,12 @@ def refresh_manifest(spark: SparkSession, path: str,
         # a million files; the one O(files) pass happened when the
         # checkpoint was written.
         ck = _sidecar_checkpoint(path, v)
-        tail = _delta_entries(path, ck[0], v) if ck is not None else []
+        tail = _entries_after(path, ck[0], v) if ck is not None else []
         fast = ck is not None and not any(
             _resets_state(e) for _dv, e in tail
         )
-        st = LH._replay_all(path, v, include_bulk=not fast)
-        pby, scols, bloom = st["pby"], st["scols"], st["bloom"]
+        st = LH.snapshot(path, v, bulk=() if fast else LH._CKPT_BULK)
+        pby, scols, bloom = st.pby, st.scols, st.bloom
         bcols = list(bloom["cols"]) if bloom else []
         if fast and bcols and any(
             set(e.get("blooms", {})) - set(e.get("add", []))
@@ -505,7 +452,7 @@ def refresh_manifest(spark: SparkSession, path: str,
             # same defensive rule as the incremental branch: a
             # re-bloomed un-added file needs a row UPDATE — replay
             fast = False
-            st = LH._replay_all(path, v)
+            st = LH.snapshot(path, v)
         schema = _manifest_schema(pby, scols, bcols)
         if fast:
             side = os.path.join(LH._log_dir(path), ck[1])
@@ -514,10 +461,10 @@ def refresh_manifest(spark: SparkSession, path: str,
                                  schema)
             cur.write.mode("overwrite").parquet(out_dir)
         else:
-            _write_manifest_distributed(spark, out_dir, st["files"],
-                                        st["stats"], st["dvs"],
+            _write_manifest_distributed(spark, out_dir, sorted(st.files),
+                                        st.stats, st.dvs,
                                         pby, scols, schema, bcols,
-                                        st["blooms"])
+                                        st.blooms)
     else:
         schema = _manifest_schema(pby, scols, bcols)
         cur = spark.read.schema(schema).parquet(meta["dir"])
@@ -529,19 +476,22 @@ def refresh_manifest(spark: SparkSession, path: str,
     # 200k files the log is tens of MB; a plan that re-loads it per
     # metadata lookup would pay seconds of driver JSON parse —
     # measured — for a handful of small lists). Incremental refreshes
-    # FOLD the cached acts from the delta entries alone — re-deriving
-    # them via _schema_actions_at would re-parse the whole log per
-    # fold, defeating the O(files-changed) contract (schema-pinning
-    # entries force a full rebuild via _resets_state).
+    # FOLD the cached acts with the log step over the delta entries
+    # alone — re-deriving them from a snapshot would re-parse the
+    # whole log per fold, defeating the O(files-changed) contract
+    # (schema-pinning entries force a full rebuild via _resets_state).
     if mode == "full":
-        acts, logical = st["acts"], st["logical_cols"]
+        acts, logical = st.acts, st.logical_cols
     elif "acts" in meta:
-        acts, logical = meta["acts"], meta.get("logical_cols")
+        fold = LH.Snapshot(acts=list(meta["acts"]))
         for _dv, entry in delta:
-            acts, logical = _fold_schema_meta(acts, logical, entry)
+            LH._step(fold, entry)
+        acts = fold.acts
+        logical = LH._logical_cols(meta.get("logical_cols"),
+                                   acts[len(meta["acts"]):])
     else:  # legacy meta without cached acts: one replay, self-heals
-        acts = LH._schema_actions_at(path, v)
-        logical = LH._logical_cols_at(path, v)
+        st = LH.snapshot(path, v, bulk=())
+        acts, logical = st.acts, st.logical_cols
     new_meta = {
         "version": v, "dir": out_dir, "pby": pby, "scols": scols,
         # bloom spec cached IN the meta: bloom-probe planning must not
@@ -590,7 +540,8 @@ def _meta_specs(path: str, meta: dict) -> tuple[list[str], list[str]]:
     JSON read; falls back to the log only for pre-spec manifests."""
     if "pby" in meta:
         return list(meta["pby"]), list(meta["scols"])
-    return LH.table_partition_by(path), LH.table_stats_cols(path)
+    s = LH.snapshot(path, bulk=())
+    return s.pby, s.scols
 
 
 def _meta_bcols(meta: dict) -> list[str]:
@@ -755,14 +706,7 @@ def read_planned(spark: SparkSession, path: str, version: int,
                        LH._dv_files_for(dvs, rel_files))
     meta = manifest_meta(path)
     if meta is not None and "acts" in meta and meta["version"] == version:
-        # schema replay from the meta cache — same transform as
-        # _replay_schema, without re-walking the log
-        df = LH._apply_schema_actions(df, meta["acts"])
-        order = meta.get("logical_cols") or []
-        if order:
-            keep = [c for c in order if c in df.columns]
-            extra = [c for c in df.columns if c not in set(keep)]
-            if df.columns != keep + extra:
-                df = df.select(*keep, *extra)
-        return df
-    return LH._replay_schema(df, path, version)
+        # schema replay from the meta cache, without re-walking the log
+        return LH._replay_schema(df, meta["acts"], meta.get("logical_cols"))
+    s = LH.snapshot(path, version, bulk=())
+    return LH._replay_schema(df, s.acts, s.logical_cols)

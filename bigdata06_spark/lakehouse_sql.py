@@ -1046,7 +1046,8 @@ def _sql_detail(spark: SparkSession, stmt: str) -> DataFrame:
     v = LH.current_version(path)
     if v < 0:
         raise ValueError(f"no lakehouse table at {path}")
-    files, dvs = LH._state_at_version(path, v)
+    snap = LH.snapshot(path, v)
+    files, dvs = snap.files, snap.dvs
     size = 0
     for f in files:
         p = f if _os.path.isabs(f) else _os.path.join(path, f)
@@ -1056,9 +1057,9 @@ def _sql_detail(spark: SparkSession, stmt: str) -> DataFrame:
             pass
     row = (
         "lakehouse", path, int(v), len(files), int(size),
-        ",".join(LH.table_partition_by(path)),
+        ",".join(snap.pby),
         sum(len(x) for x in dvs.values()),
-        key or "", ",".join(LH.table_stats_cols(path)),
+        key or "", ",".join(snap.scols),
     )
     return spark.createDataFrame(
         [row],

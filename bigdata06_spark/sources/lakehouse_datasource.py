@@ -113,9 +113,8 @@ def _resolve_version(path: str, options) -> int:
     return latest
 
 
-def _logical_schema(path: str, version: int,
-                    rel_files: list[str]) -> T.StructType:
-    """The table's logical Spark schema at `version`: union of the
+def _logical_schema(path: str, s: LH.Snapshot) -> T.StructType:
+    """The table's logical Spark schema at snapshot `s`: union of the
     files' parquet schemas (first-occurrence field order) with the
     schema-action history replayed, projected to the logical column
     order — the same resolution read_version's mergeSchema + replay
@@ -125,14 +124,13 @@ def _logical_schema(path: str, version: int,
 
     fields: dict[str, T.DataType] = {}
     order: list[str] = []
-    for f in rel_files:
+    for f in sorted(s.files):
         sch = pq.read_schema(_abs(path, f))
         for name in sch.names:
             if name not in fields:
                 fields[name] = from_arrow_type(sch.field(name).type)
                 order.append(name)
-    actions = LH._schema_actions_at(path, version)
-    for a in actions:
+    for a in s.acts:
         if a["kind"] == "add":
             if a["column"] not in fields:
                 fields[a["column"]] = _ddl_to_spark(a["type"])
@@ -150,7 +148,7 @@ def _logical_schema(path: str, version: int,
             if a["column"] in fields:
                 del fields[a["column"]]
                 order.remove(a["column"])
-    logical = LH._logical_cols_at(path, version)
+    logical = s.logical_cols
     if logical:
         order = [c for c in logical if c in fields] + [
             c for c in order if c not in set(logical)
@@ -212,30 +210,31 @@ class LakehouseReader(DataSourceReader):
         self.path = path
         self.schema_json = schema.json()
         self._split_threshold = max(0, split_threshold)
-        rel_files, dvs = LH._state_at_version(path, version)
-        if change_feed_from is not None:
+        if change_feed_from is None:
+            s = LH.snapshot(path, version)
+            rel_files = sorted(s.files)
+        else:
             # BATCH CHANGE FEED (Delta's readChangeFeed): only the
             # files ADDED in (startingVersion, endingVersion] — plus
             # files whose DV set changed (logically rewritten) — scan;
             # the same changed-file set lakehouse.read_changes plans,
             # so the two paths return identical rows (unit-pinned)
-            before_files, before_dvs = LH._state_at_version(
-                path, change_feed_from)
-            before = set(before_files)
-            rel_files = [
-                f for f in rel_files
+            s, before, before_dvs = LH._snapshot_pair(
+                path, change_feed_from, version)
+            rel_files = sorted(
+                f for f in s.files
                 if f not in before
-                or before_dvs.get(f, []) != dvs.get(f, [])
-            ]
+                or before_dvs.get(f, []) != s.dvs.get(f, [])
+            )
         self._rel_files = rel_files
-        self._dvs = dvs
-        self.actions = LH._schema_actions_at(path, version)
+        self._dvs = s.dvs
+        self.actions = s.acts
         # pushdown metadata — ALL from the log (planning is
         # session-less): Hive partition values + per-file [min, max]
         # stats. Blooms stay library-only: their probe positions come
         # from JVM xxhash64, unavailable here.
-        self._pby = set(LH.table_partition_by(path))
-        self._stats = LH.file_stats_at(path, version)
+        self._pby = set(s.pby)
+        self._stats = s.stats
         self._part_allowed: dict[str, set] = {}
         self._intervals: dict[str, list] = {}
 
@@ -441,8 +440,7 @@ class LakehouseDataSource(DataSource):
         # endingVersion would null out columns renamed/added after
         # the range (schema/replay version skew)
         v = rng[1] if rng else _resolve_version(path, self.options)
-        rel_files, _dvs = LH._state_at_version(path, v)
-        full = _logical_schema(path, v, rel_files)
+        full = _logical_schema(path, LH.snapshot(path, v))
         want = self.options.get("columns")
         if want:
             # explicit projection (.option("columns", "a,b")): the
@@ -496,8 +494,7 @@ def table_stream_schema(path: str) -> T.StructType:
     latest = LH.current_version(path)
     if latest < 0:
         raise ValueError(f"no lakehouse table at {path}")
-    files = LH.files_at_version(path, latest)
-    logical = _logical_schema(path, latest, files)
+    logical = _logical_schema(path, LH.snapshot(path, latest))
     fields = list(logical.fields)
     fields.append(T.StructField("_commit_version", T.LongType(), False))
     return T.StructType(fields)
@@ -517,22 +514,19 @@ class LakehouseCDFStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"version": self.first_version - 1}
 
-    def _added_files(self, v: int) -> list[str]:
-        now = set(LH.files_at_version(self.path, v))
-        if v == 0:
-            return sorted(now)
-        before = set(LH.files_at_version(self.path, v - 1))
-        return sorted(now - before)
-
     def _rows_for_versions(self, lo: int, hi: int) -> list[tuple]:
         # a LIST, not a generator: Spark's prefetch cache copy.copy()s
         # the returned iterator for replay, which only list/tuple
         # iterators support
         cols = [f.name for f in self.spark_schema.fields[:-1]]
-        actions = LH._schema_actions_at(self.path, LH.current_version(self.path))
+        actions = LH.snapshot(self.path, bulk=()).acts
+        # one fold walks the range: each version's added files are its
+        # file set minus the previous version's
+        s = LH.snapshot(self.path, lo - 1) if lo > 0 else LH.Snapshot()
         rows: list[tuple] = []
         for v in range(lo, hi + 1):
-            for rel in self._added_files(v):
+            before = set(s.files)
+            for rel in sorted(LH._advance(self.path, s, v).files - before):
                 tbl = _pq.read_table(os.path.join(self.path, rel))
                 # column-mapping replay: pre-rename vintages map their
                 # physical names onto the stream's logical schema
@@ -590,15 +584,15 @@ def _writable_table_guard(path: str, schema: T.StructType) -> int:
     validation would corrupt the table's contract), as is writing a
     column name retired by a rename/drop. Returns the current
     version."""
-    v = LH.current_version(path)
-    if v >= 0:
+    s = LH.snapshot(path, bulk=())
+    if s.version >= 0:
         for what, got in (
-            ("generated columns", LH.table_generated_cols(path)),
-            ("an identity column", LH.table_identity(path)),
-            ("CHECK constraints", LH.table_constraints(path)),
-            ("partition columns", LH.table_partition_by(path)),
-            ("stats columns", LH.table_stats_cols(path)),
-            ("bloom columns", LH.table_bloom_meta(path)),
+            ("generated columns", s.generated),
+            ("an identity column", s.identity),
+            ("CHECK constraints", s.constraints),
+            ("partition columns", s.pby),
+            ("stats columns", s.scols),
+            ("bloom columns", s.bloom),
         ):
             if got:
                 raise ValueError(
@@ -606,14 +600,14 @@ def _writable_table_guard(path: str, schema: T.StructType) -> int:
                     "cannot maintain them (no Spark session in the "
                     "commit hook) — use the library writers"
                 )
-        retired = LH._retired_names(path, v)
-        clash = sorted(set(f.name for f in schema.fields) & retired)
+        clash = sorted(set(f.name for f in schema.fields)
+                       & LH._retired_names(s.acts))
         if clash:
             raise ValueError(
                 f"columns {clash} were retired by an earlier rename/"
                 "drop; writing them would resurrect stale data"
             )
-    return v
+    return s.version
 
 
 def _write_task_parquet(iterator, schema_json: str, out: str):

@@ -1,9 +1,10 @@
-"""Spark-free stress test of the lakehouse log publish: a reader in a
-SEPARATE process must never parse a torn (empty or partial) log entry
-while a writer commits. A reader thread in the writer's own process
-does not reproduce the race — the GIL serializes the writer's
-create-then-write steps around the reader's list-then-load — so the
-reader is a child process."""
+"""Lakehouse publish points. A reader in a SEPARATE process must never
+parse a torn (empty or partial) log entry while a writer commits — a
+Spark-free stress test; a reader thread in the writer's own process
+does not reproduce the race (the GIL serializes the writer's
+create-then-write steps around the reader's list-then-load), so the
+reader is a child process. And every file a publish renames into place
+is fsynced first."""
 
 import json
 import os
@@ -13,12 +14,14 @@ import sys
 import pytest
 
 from bigdata06_spark import lakehouse as LH
+from bigdata06_spark import lakehouse_manifest as M
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _READER = """
 import json, os, sys
 from bigdata06_spark import lakehouse as LH
+from bigdata06_spark import lakehouse_manifest as M
 path, stop = sys.argv[1], sys.argv[2]
 reads = torn = 0
 print("ready", flush=True)
@@ -64,3 +67,36 @@ def test_log_commit_conflict_leaves_winner_and_no_temp(tmp_path):
         LH._commit_log(path, 0, {"add": ["b.parquet"], "remove": []})
     assert os.listdir(LH._log_dir(path)) == ["0.json"]
     assert LH._read_entry(path, 0, bulk=())["add"] == ["a.parquet"]
+
+
+def test_checkpoint_and_manifest_publish_fsync_before_rename(spark, tmp_path,
+                                                             monkeypatch):
+    """checkpoint_log deletes the history its squashed entry replaces,
+    so the new entry AND its parquet sidecar must be on disk before
+    that; the manifest meta swap likewise publishes a synced body. The
+    fsynced paths are read back from /proc/self/fd: a temp name proves
+    the sync happened before the rename."""
+    path = str(tmp_path / "tbl")
+    for v in range(3):
+        LH._commit_log(path, v, {"add": [f"data/f{v}.parquet"], "remove": []})
+    synced = []
+    real_fsync = os.fsync
+
+    def recording(fd):
+        synced.append(os.readlink(f"/proc/self/fd/{fd}"))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording)
+    M.refresh_manifest(spark, path)
+    meta_tmp = os.path.realpath(M._meta_path(path)) + ".tmp-"
+    assert any(p.startswith(meta_tmp) for p in synced), synced
+
+    synced.clear()
+    v = LH.checkpoint_log(path)
+    logd = os.path.realpath(LH._log_dir(path))
+    side = LH._read_entry(path, v, bulk=())["checkpoint_parquet"]
+    assert any(p.startswith(os.path.join(logd, f"{v}.json.tmp-"))
+               for p in synced), synced
+    assert any(p.startswith(os.path.join(logd, side) + os.sep)
+               for p in synced), synced
+    assert LH.files_at_version(path, v) == [f"data/f{u}.parquet" for u in range(3)]

@@ -6,7 +6,7 @@ off because Spark job latency is noisy.
 """
 
 import duckdb
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -334,7 +334,8 @@ def test_manifest_tracks_random_op_sequences(spark, tmp_path_factory, ops):
 
         M.refresh_manifest(spark, path)
         v = LH.current_version(path)
-        files, dvs = LH._state_at_version(path, v)
+        snap = LH.snapshot(path, v)
+        files, dvs = sorted(snap.files), snap.dvs
         stats = LH.file_stats_at(path, v)
         rows_ = {x["file"]: x for x in M.manifest_df(spark, path).collect()}
         assert sorted(rows_) == files, f"after {op}: file set diverged"
@@ -412,81 +413,103 @@ def test_datasource_row_group_splits_random_dvs(spark, tmp_path_factory,
                      "checkpoint", "add_col", "rename_col", "restore"]),
     min_size=1, max_size=6,
 ))
-def test_replay_all_equals_composed_replays(spark, tmp_path_factory, ops):
-    """FOLD-EQUIVALENCE of the one-pass replay (VERDICT r7 #5):
-    LH._replay_all — the manifest full rebuild's single JSON parse of
-    the log — must agree field-for-field with the composition of the
-    dedicated replay functions (_state_at_version, file_stats_at,
-    file_blooms_at, the spec lookups, _schema_actions_at,
-    _logical_cols_at) at EVERY version of a random history that mixes
-    appends, COW/MOR DML, OPTIMIZE, schema evolution, checkpoint
-    squashes, and RESTORE pins — on a partitioned, statted, bloomed
-    table so every manifest column is live."""
-    from bigdata06_spark import lakehouse as LH
+# a fixed history that exercises every fold rule the models can see:
+# DVs carried by a checkpoint, then spent by a rewrite, a rename that
+# must keep its column's position, and a RESTORE pin
+@example(ops=["dv_delete", "checkpoint", "upsert", "add_col", "add_col",
+              "rename_col", "restore"])
+def test_snapshot_fold_matches_models(spark, tmp_path_factory, ops):
+    """MODEL CHECK of the log fold (LH.snapshot) at EVERY surviving
+    version of a random history that mixes appends, COW/MOR DML,
+    OPTIMIZE, schema evolution, checkpoint squashes and RESTORE pins,
+    on a partitioned, statted, bloomed table:
 
-    path = str(tmp_path_factory.mktemp("lh_replay_eq") / "t")
+    - file set, DV map, stats and blooms equal the manifest that
+      INCREMENTAL `refresh_manifest(to_version=v)` steps build — the
+      relational `_fold_manifest`, an independent implementation of
+      the add/remove/DV rules (reset entries force its full rebuild);
+    - the replayed read (`use_manifest=False`) returns exactly an
+      in-test key → value model;
+    - the logical column order equals a model list kept by the
+      add_col / rename_col / restore ops."""
+    from bigdata06_spark import lakehouse as LH
+    from bigdata06_spark import lakehouse_manifest as M
+
+    path = str(tmp_path_factory.mktemp("lh_fold_model") / "t")
     df = spark.createDataFrame(
         [(k, k % 3, float(k), 100 + k % 7) for k in range(40)],
         "k long, part int, v double, cust long")
     LH.table_init(df, path, "k", n_files=3, partition_by=["part"],
                   stats_cols=["k", "v"], bloom_cols=["cust"])
+    rows = {k: float(k) for k in range(40)}
+    cols = ["k", "part", "v", "cust"]
+    hist = {0: (dict(rows), list(cols))}
     nxt = 1000
     ncol = 0
     for op in ops:
         try:
             if op == "append":
+                new = [(nxt + i, i % 3, 1.0, 200 + i) for i in range(4)]
                 LH.append(spark, path, "k", spark.createDataFrame(
-                    [(nxt + i, i % 3, 1.0, 200 + i) for i in range(4)],
-                    "k long, part int, v double, cust long"))
+                    new, "k long, part int, v double, cust long"))
+                rows.update((k, v) for k, _p, v, _c in new)
                 nxt += 10
             elif op == "upsert":
                 rel = spark.createDataFrame(
                     [(3, 0, 9.9, 105), (nxt, 1, 2.0, 300)],
                     "k long, part int, v double, cust long")
                 LH.merge(spark, path, "k", updates=rel, inserts=rel)
+                rows.update({3: 9.9, nxt: 2.0})
                 nxt += 10
             elif op == "dv_delete":
                 LH.delete_where(spark, path, "k % 11 = 5")
+                rows = {k: v for k, v in rows.items() if k % 11 != 5}
             elif op == "optimize":
                 LH.optimize(spark, path, "k", n_files=2)
             elif op == "checkpoint":
                 LH.checkpoint_log(path)
             elif op == "add_col":
                 LH.add_column(path, f"extra{ncol}", "double")
+                cols.append(f"extra{ncol}")
                 ncol += 1
             elif op == "rename_col":
-                if ncol:  # rename the last added col (never key/bloom)
-                    LH.rename_column(spark, path, f"extra{ncol-1}",
-                                     f"renamed{ncol-1}")
+                # the OLDEST extra column: a rename must keep its place
+                old = next((c for c in cols if c.startswith("extra")), None)
+                if old is None:
+                    continue
+                LH.rename_column(spark, path, old, "renamed" + old[5:])
+                cols[cols.index(old)] = "renamed" + old[5:]
             elif op == "restore":
-                LH.restore(path, max(0, LH.current_version(path) - 1))
+                to = max(0, LH.current_version(path) - 1)
+                LH.restore(path, to)
+                rows, cols = dict(hist[to][0]), list(hist[to][1])
         except ValueError:
-            continue  # op illegal in this state (e.g. re-add of retired)
+            continue  # op illegal in this state (e.g. restore into a squash)
+        hist[LH.current_version(path)] = (dict(rows), list(cols))
 
     latest = LH.current_version(path)
-    for v in range(latest + 1):
-        st_ = LH._replay_all(path, v)
-        files, dvs = LH._state_at_version(path, v)
-        assert st_["files"] == files, f"files diverged at v{v}"
-        assert st_["dvs"] == dvs, f"dvs diverged at v{v}"
-        assert st_["stats"] == LH.file_stats_at(path, v), f"stats v{v}"
-        assert st_["blooms"] == LH.file_blooms_at(path, v), f"blooms v{v}"
-        assert st_["acts"] == LH._schema_actions_at(path, v), f"acts v{v}"
-        assert st_["logical_cols"] == LH._logical_cols_at(path, v), \
-            f"logical v{v}"
-        assert st_["base_cols"] == LH._base_schema_cols(path, v), f"base v{v}"
-        assert st_["txns"] == LH.table_txns(path, v), f"txns v{v}"
-        assert st_["copy_sources"] == LH.table_copy_sources(path, v), \
-            f"copies v{v}"
-        assert st_["constraints"] == LH.table_constraints(path, v), \
-            f"constraints v{v}"
-    # latest-scoped lookups compare at the tip (checkpoint_log's view)
-    assert st_["pby"] == LH.table_partition_by(path)
-    assert st_["scols"] == LH.table_stats_cols(path)
-    assert st_["bloom"] == LH.table_bloom_meta(path)
-    assert st_["generated"] == LH.table_generated_cols(path)
-    assert st_["identity"] == LH.table_identity(path)
-    assert st_["zorder"] == LH.table_zorder_meta(path)
+    surviving = [v for v in range(latest + 1)
+                 if LH._read_entry(path, v, bulk=()) is not None]
+    assert surviving == list(range(surviving[0], latest + 1))
+    for v in surviving:
+        M.refresh_manifest(spark, path, to_version=v)
+        s = LH.snapshot(path, v)
+        bcols = list(s.bloom["cols"])
+        schema = M._manifest_schema(s.pby, s.scols, bcols)
+        mf = {r["file"]: r for r in M.manifest_df(spark, path)
+              .select(*schema.fieldNames()).collect()}
+        assert sorted(mf) == sorted(s.files), f"files diverged at v{v}"
+        assert {f: sorted(r["dv"]) for f, r in mf.items() if r["dv"]} == \
+            {f: sorted(d) for f, d in s.dvs.items() if d}, f"dvs v{v}"
+        want = M._rows_for(sorted(s.files), s.stats, s.dvs, s.pby, s.scols,
+                           bcols, s.blooms)
+        for w in want:
+            assert list(mf[w[0]])[:-1] == list(w)[:-1], \
+                f"stats/blooms diverged at v{v} for {w[0]}"
+        got = {r.k: r.v for r in LH.read_version(
+            spark, path, v, use_manifest=False).collect()}
+        assert got == hist[v][0], f"rows diverged at v{v}"
+        assert s.logical_cols == hist[v][1], f"logical cols v{v}"
 
 
 @PROP

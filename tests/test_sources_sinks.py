@@ -4403,12 +4403,11 @@ def test_lakehouse_pruned_dml_many_files(spark, tmp_path):
         "id AS k", "CAST(id % 120 AS INT) AS part", "CAST(id AS DOUBLE) AS v")
     LH.table_init(df, path, "k", n_files=1, partition_by=["part"])
     v0 = LH.current_version(path)
-    rel_files, _ = LH._state_at_version(path, v0)
+    rel_files = LH.files_at_version(path, v0)
     assert len(rel_files) >= 120
 
     # planner-side pruning: one partition → its files only
-    pruned = LH._prune_files_for_dml(path, v0, rel_files,
-                                     {"part": "7"}, None)
+    pruned = LH._prune_files_for_dml(rel_files, None, {"part": "7"}, None)
     assert 0 < len(pruned) < len(rel_files)
     assert all("part=7/" in f for f in pruned)
 
@@ -4701,7 +4700,7 @@ def test_lakehouse_manifest_full_and_incremental(spark, tmp_path):
     r = M.refresh_manifest(spark, path)
     assert r["mode"] == "full" and r["version"] == 0
 
-    files0, _ = LH._state_at_version(path, 0)
+    files0 = LH.files_at_version(path, 0)
     st0 = LH.file_stats_at(path, 0)
     rows = {x["file"]: x for x in M.manifest_df(spark, path).collect()}
     assert sorted(rows) == files0
@@ -4721,7 +4720,8 @@ def test_lakehouse_manifest_full_and_incremental(spark, tmp_path):
     r = M.refresh_manifest(spark, path)
     assert r["mode"] == "incremental"
     vN = LH.current_version(path)
-    filesN, dvsN = LH._state_at_version(path, vN)
+    snapN = LH.snapshot(path, vN)
+    filesN, dvsN = sorted(snapN.files), snapN.dvs
     rows = {x["file"]: x for x in M.manifest_df(spark, path).collect()}
     assert sorted(rows) == filesN
     for f, lst in dvsN.items():
@@ -4809,7 +4809,7 @@ def test_lakehouse_manifest_planning_parity(spark, tmp_path):
 def test_lakehouse_read_version_defaults_to_manifest(spark, tmp_path, monkeypatch):
     """read_version PLANS THROUGH THE MANIFEST by default (VERDICT r6
     #2): with a fresh manifest, the hot read path performs NO JSON-log
-    replay (_state_at_version monkeypatched to raise); a write makes
+    replay (a per-file LH.snapshot monkeypatched to raise); a write makes
     the manifest stale and the NEXT read auto-refreshes it with the
     incremental fold (still no full replay); DML (delete_where /
     update_where) inherits the manifest plan; time travel BEHIND the
@@ -4831,12 +4831,14 @@ def test_lakehouse_read_version_defaults_to_manifest(spark, tmp_path, monkeypatc
         spark, path, v1, partition_filter={"part": "2"},
         use_manifest=False).collect())
 
-    real_state = LH._state_at_version
+    real_snapshot = LH.snapshot
 
-    def _boom(*a, **kw):
-        raise AssertionError("log replay used on a manifest-fresh path")
+    def _boom(path, version=None, bulk=LH._CKPT_BULK):
+        if bulk:  # metadata-only snapshots are not a file-list replay
+            raise AssertionError("log replay used on a manifest-fresh path")
+        return real_snapshot(path, version, bulk)
 
-    monkeypatch.setattr(LH, "_state_at_version", _boom)
+    monkeypatch.setattr(LH, "snapshot", _boom)
 
     # fresh manifest: plain read + partition/stats-pruned reads, zero
     # log replay
@@ -4864,7 +4866,7 @@ def test_lakehouse_read_version_defaults_to_manifest(spark, tmp_path, monkeypatc
     # time travel BEHIND the manifest needs the replay path
     with pytest.raises(AssertionError, match="log replay"):
         LH.read_version(spark, path, 0).collect()
-    monkeypatch.setattr(LH, "_state_at_version", real_state)
+    monkeypatch.setattr(LH, "snapshot", real_snapshot)
     assert LH.read_version(spark, path, 0).count() == 3000
     # and the explicit opt-out pins replay planning
     assert sorted(r.k for r in LH.read_version(
@@ -4874,8 +4876,8 @@ def test_lakehouse_read_version_defaults_to_manifest(spark, tmp_path, monkeypatc
 def test_lakehouse_bloom_probe_plans_via_manifest(spark, tmp_path, monkeypatch):
     """VERDICT r7 #4 — the point-lookup path plans relationally: with
     a fresh manifest, read_version(bloom_filter=...) neither replays
-    the JSON log for the file list (_state_at_version) nor for the
-    bitmaps (file_blooms_at) — both monkeypatched to raise — and its
+    the JSON log for the file list nor for the bitmaps (a per-file
+    LH.snapshot is monkeypatched to raise) — and its
     pruned file set is byte-identical to the replay path's. The
     bitmap membership test runs as JVM expressions over the
     manifest's bl_* columns (lakehouse_manifest._bloom_prune_expr);
@@ -4903,12 +4905,15 @@ def test_lakehouse_bloom_probe_plans_via_manifest(spark, tmp_path, monkeypatch):
     n_all = len(LH.files_at_version(path, 0))
     assert len(replay_files) < n_all
 
-    def _boom(*a, **kw):
-        raise AssertionError("JSON-log replay used on a bloom probe "
-                             "with a fresh manifest")
+    real_snapshot = LH.snapshot
 
-    monkeypatch.setattr(LH, "_state_at_version", _boom)
-    monkeypatch.setattr(LH, "file_blooms_at", _boom)
+    def _boom(path, version=None, bulk=LH._CKPT_BULK):
+        if bulk:
+            raise AssertionError("JSON-log replay used on a bloom probe "
+                                 "with a fresh manifest")
+        return real_snapshot(path, version, bulk)
+
+    monkeypatch.setattr(LH, "snapshot", _boom)
 
     probed = LH.read_version(spark, path, 0, bloom_filter={"cust": target})
     assert sorted(probed.inputFiles()) == replay_files
@@ -5002,7 +5007,7 @@ def test_lakehouse_manifest_fold_order_and_sweep(spark, tmp_path):
     r = M.refresh_manifest(spark, path)
     assert r["mode"] == "incremental"
     rows = {x["file"]: x for x in M.manifest_df(spark, path).collect()}
-    replay_files, _ = LH._state_at_version(path, 2)
+    replay_files = LH.files_at_version(path, 2)
     assert sorted(rows) == replay_files          # == log replay
     assert victim in rows                        # re-add survived
     assert rows[victim]["mnn_k"] == 0.0          # with the NEW stats
@@ -5020,8 +5025,8 @@ def test_lakehouse_manifest_fold_order_and_sweep(spark, tmp_path):
 def test_lakehouse_manifest_incremental_schema_fold(spark, tmp_path,
                                                     monkeypatch):
     """The incremental refresh folds schema actions from the DELTA
-    entries alone (meta acts + per-entry rules) — asserting no
-    _schema_actions_at re-walk — and its folded acts/logical order
+    entries alone (meta acts + the log step) — asserting no
+    LH.snapshot re-walk — and its folded acts/logical order
     match the full replay; a schema-PINNING entry (RESTORE's
     schema_actions_set) forces a full rebuild instead of a wrong
     fold."""
@@ -5034,19 +5039,19 @@ def test_lakehouse_manifest_incremental_schema_fold(spark, tmp_path,
     M.refresh_manifest(spark, path)
     LH.add_column(path, "tag", "string")
     LH.rename_column(spark, path, "v", "score")
-    want_acts = LH._schema_actions_at(path, LH.current_version(path))
-    want_order = LH._logical_cols_at(path, LH.current_version(path))
+    want = LH.snapshot(path, LH.current_version(path))
+    want_acts, want_order = want.acts, want.logical_cols
 
-    real = LH._schema_actions_at
+    real = LH.snapshot
 
     def _boom(*a, **kw):
         raise AssertionError("full log re-walk inside an incremental fold")
 
-    monkeypatch.setattr(LH, "_schema_actions_at", _boom)
+    monkeypatch.setattr(LH, "snapshot", _boom)
     r = M.refresh_manifest(spark, path)
     assert r["mode"] == "incremental"
     assert r["acts"] == want_acts and r["logical_cols"] == want_order
-    monkeypatch.setattr(LH, "_schema_actions_at", real)
+    monkeypatch.setattr(LH, "snapshot", real)
 
     # reads through the folded meta replay correctly
     got = M.read_at_manifest(spark, path)
@@ -5549,7 +5554,7 @@ def test_optimize_where_keyword_named_column(spark, tmp_path):
 def test_parquet_checkpoint_hydration_matches_legacy_json(spark, sf_dir, tmp_path):
     """Round 9 parquet checkpoints: squashing the SAME history with
     parquet=True (sidecar) and parquet=False (legacy giant JSON) must
-    yield identical replay state — _replay_all field-for-field, and a
+    yield identical replay state — LH.snapshot field-for-field, and a
     hydrated _read_entry carrying the same add/stats/blooms/dvs the
     JSON form embeds inline."""
     from bigdata06_spark import lakehouse as LH
@@ -5581,9 +5586,10 @@ def test_parquet_checkpoint_hydration_matches_legacy_json(spark, sf_dir, tmp_pat
     v2 = v1
     LH.checkpoint_log(p1, parquet=True)
     LH.checkpoint_log(p2, parquet=False)
-    st1, st2 = LH._replay_all(p1, v1), LH._replay_all(p2, v2)
-    for key in st1:
-        assert st1[key] == st2[key], f"replay field {key} diverged"
+    st1, st2 = LH.snapshot(p1, v1), LH.snapshot(p2, v2)
+    for key in [*vars(st1), "logical_cols"]:
+        assert getattr(st1, key) == getattr(st2, key), \
+            f"replay field {key} diverged"
     e1, e2 = LH._read_entry(p1, v1), LH._read_entry(p2, v2)
     assert sorted(e1["add"]) == sorted(e2["add"])
     assert e1.get("stats", {}) == e2.get("stats", {})
@@ -5628,10 +5634,10 @@ def test_manifest_fast_rebuild_equals_dict_rebuild(spark, sf_dir, tmp_path, monk
     assert v > ck_v
 
     # dict-path reference manifest rows, straight from the replay
-    st = LH._replay_all(path, v)
-    bcols = list(st["bloom"]["cols"]) if st["bloom"] else []
-    ref = sorted(M._rows_for(st["files"], st["stats"], st["dvs"],
-                             st["pby"], st["scols"], bcols, st["blooms"]))
+    st = LH.snapshot(path, v)
+    bcols = list(st.bloom["cols"]) if st.bloom else []
+    ref = sorted(M._rows_for(sorted(st.files), st.stats, st.dvs,
+                             st.pby, st.scols, bcols, st.blooms))
 
     def boom(*a, **kw):
         raise AssertionError("dict-path writer called — fast path not taken")
@@ -5641,7 +5647,7 @@ def test_manifest_fast_rebuild_equals_dict_rebuild(spark, sf_dir, tmp_path, monk
     assert got["mode"] == "full"
     rows = sorted(
         tuple(r) for r in M.manifest_df(spark, path)
-        .select(*[f.name for f in M._manifest_schema(st["pby"], st["scols"], bcols).fields])
+        .select(*[f.name for f in M._manifest_schema(st.pby, st.scols, bcols).fields])
         .collect()
     )
     assert [r[0] for r in rows] == [r[0] for r in ref]
@@ -5650,7 +5656,7 @@ def test_manifest_fast_rebuild_equals_dict_rebuild(spark, sf_dir, tmp_path, monk
         assert list(a[-1] or []) == list(b[-1] or []), f"dv diverged: {a} vs {b}"
     # planning still reads the fast-path manifest (full snapshot)
     _pv, planned, _dvs = M.plan_files(spark, path, stats_filter=None)
-    assert len(planned) == len(st["files"])
+    assert len(planned) == len(st.files)
 
 
 _OCC_WORKER = r'''
