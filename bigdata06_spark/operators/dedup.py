@@ -678,52 +678,57 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_
     """Connected components over a near-duplicate pair graph: every doc
     labeled with the min doc-id reachable through dup pairs — the
     canonical-representative assignment that turns pairwise dedup output
-    into dedup GROUPS (keep one row per component).
+    into dedup GROUPS (keep one row per component). One row per
+    distinct id in `nodes`; every pair endpoint must be one of them.
 
-    Iterative min-label propagation: each round, every node takes the
-    min of its label and its neighbors' labels; converges in
-    O(diameter) rounds — near-dup clusters are tiny (diameter ≤ 3-4 in
-    practice), so the loop runs ~3 distributed joins. The rounds run
-    under `iterate.fixpoint`: min-propagation only ever lowers a label,
-    so "changed" is exactly `nbr_min < label`, carried in the state
-    rows as `_moved` — one job per round checkpoints the labels and
-    counts the movers. Past `max_iter` rounds it raises instead of
-    mis-labeling every node farther than that from its component
-    minimum; graphs with diameter > max_iter belong to
-    `connected_components_star`.
+    Iterative min-label propagation with the adjacency list on each
+    node row: the state is (node, adj, label, _moved), built by one
+    groupBy(node) over both arc directions ∪ `nodes`, with `label =
+    least(node, array_min(adj))` — the first propagation round. Each
+    round under `iterate.fixpoint`, only rows whose label moved send
+    it to their neighbors (`explode(adj)`): a label already sent once
+    cannot lower any neighbor again. The messages union with
+    the state into ONE groupBy(node) exchange, which takes the min and
+    rebuilds `adj` with flatten(collect_list) (an ObjectHashAggregate;
+    first/max on the array would fall back to SortAggregate). Labels
+    only ever drop, so `_moved` is exactly "message min < label", and
+    the round's one action checkpoints the state and counts movers.
+    Converges in O(diameter) rounds — near-dup clusters have diameter
+    ≤ 3-4 in practice. Past `max_iter` rounds after the first it raises
+    instead of mis-labeling every node farther than that from its
+    component minimum.
 
-    Scale: each round shuffles edges on src and labels on node — both
-    uniform keys. For graphs with giant components / large diameter
-    (not the dedup case) switch to large-star/small-star (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14),
-    which converges in O(log n) rounds with the same join primitive.
+    Scale: each round shuffles the state plus one message per arc of a
+    MOVED node — not the whole edge list and the labels twice. The
+    state carries each node's adjacency, so the degree must stay
+    bounded: it is ≤ 5 on the mutual top-5 graph and ≤ cluster size on
+    dedup pairs. Graphs with giant components / large diameter belong
+    to `connected_components_star` (large-star/small-star, Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    O(log n) rounds over an edge list, no per-node arrays.
     """
-    e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    e = pairs.select(F.col("doc_a").alias("node"), F.col("doc_b").alias("dst"))
+    arcs = e.unionByName(e.select(F.col("dst").alias("node"), F.col("node").alias("dst")))
+    state = (
+        arcs.unionByName(nodes.select(F.col(id_col).alias("node")), allowMissingColumns=True)
+        .groupBy("node")
+        .agg(F.collect_set("dst").alias("adj"))
+        .withColumn("label", F.least("node", F.array_min("adj")))
+        .withColumn("_moved", F.col("label") < F.col("node"))
+    )
 
-    def step(labels: DataFrame) -> DataFrame:
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("node").alias("src"), F.col("label").alias("src_label")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("src_label").alias("nbr_min"))
+    def step(state: DataFrame) -> DataFrame:
+        msgs = state.filter("_moved").select(F.explode("adj").alias("node"), F.col("label").alias("m"))
+        s = (
+            state.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.flatten(F.collect_list("adj")).alias("adj"), F.min("label").alias("label"),
+                 F.min("m").alias("m"))
         )
-        nbr = F.coalesce(F.col("nbr_min"), F.col("label"))
-        return labels.join(nbr_min, "node", "left").select(
-            "node", F.least(F.col("label"), nbr).alias("label"), (nbr < F.col("label")).alias("_moved")
-        )
+        return s.select("node", "adj", F.least("label", "m").alias("label"),
+                        F.coalesce(F.col("m") < F.col("label"), F.lit(False)).alias("_moved"))
 
-    try:
-        labels = fixpoint(
-            nodes.select(F.col(id_col).alias("node")).distinct().withColumn("label", F.col("node")),
-            step, max_rounds=max_iter,
-        )
-    finally:
-        edges.unpersist()
+    labels = fixpoint(state, step, max_rounds=max_iter)
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("component"))
 
 

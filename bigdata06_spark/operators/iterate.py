@@ -5,8 +5,12 @@ unless the lineage is cut (Catalyst replans every predecessor), so each
 round's state is `localCheckpoint`ed — lazily, because the round's one
 action materializes it: the state carries its own convergence flag in a
 boolean `_moved` column, and `filter(_moved).count()` both answers "did
-anything change" and fills the checkpoint. One job per round, no
-separate diff join or fingerprint, and the round cap fails loud.
+anything change" and fills the checkpoint. One action per round, no
+separate diff join or fingerprint, and the round cap fails loud. An
+action is not one job: under AQE every shuffle map stage of the
+round's plan runs as a job of its own, so a round costs one job per
+exchange in `step` plus two for the count — which is why a step
+should shuffle once.
 
 Cluster caveat (as at every localCheckpoint use): the blocks are
 executor-local; with lost-executor risk prefer reliable `checkpoint()`

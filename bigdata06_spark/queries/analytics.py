@@ -5968,27 +5968,23 @@ def graph_community_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     thin family). Components come from the SAME min-label propagation
     operator the dedup family uses (operators/dedup.py:
     connected_components on `iterate.fixpoint` — O(diameter) rounds of
-    one job each, fails loud past max_iter); every internal edge
+    one action each, fails loud past max_iter); every internal edge
     lands in exactly one community (both endpoints share a label by
     definition of components), so n_edges is a single keyed count.
 
     Scale: edge construction is the degree-bounded mutual-top-k list
     (<= 5*|nodes| rows, never the quadratic co-supply relation); each
-    propagation round is one edges-to-labels join + min-agg on uniform
-    keys, plus the label diff that rides in the same job; the rollup
-    is two groupBys on the community key. Giant-
-    diameter graphs switch to connected_components_star (O(log n)
-    rounds, same join primitive)."""
+    propagation round is one groupBy(node) exchange of the state (each
+    node's <= 5 neighbors ride on its row) plus the moved nodes'
+    messages, with the label diff in the same rows; the rollup is two
+    groupBys on the community key. Giant-diameter graphs switch to
+    connected_components_star (O(log n) rounds over an edge list)."""
     from bigdata06_spark.operators.dedup import connected_components
     from bigdata06_spark.queries.qutil import rnd
 
     li = load_table(spark, "lineitem", sf_dir)
     e = G.mutual_topk_edges(li)
-    nodes = (
-        e.select(F.col("sa").alias("v"))
-        .unionAll(e.select(F.col("sb").alias("v")))
-        .distinct()
-    )
+    nodes = e.select(F.col("sa").alias("v")).unionAll(e.select(F.col("sb").alias("v")))
     lab = connected_components(
         e.select(F.col("sa").alias("doc_a"), F.col("sb").alias("doc_b")),
         nodes,
@@ -6463,7 +6459,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges the previous round flagged, recomputes degrees with one
     groupBy, and flags (`_moved`) every edge with an endpoint below k
     via two joins on the degree-bounded list (<= 5 per node by
-    construction) — one job per round, which both checkpoints the
+    construction) — one action per round, which both checkpoints the
     state and counts the flagged edges. Round count is bounded by the
     peeling depth, not N."""
     li = load_table(spark, "lineitem", sf_dir)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdata06_spark.catalog import normalize_events_ts, table_path
+from bigdata06_spark.catalog import normalize_events_ts, parquet_schema, table_path
 
 
 def _events_stream_dir(sf_dir: str) -> str:
@@ -79,12 +79,12 @@ def _dir_bytes(d: str) -> int:
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded stream (file source).
 
-    The file source needs an explicit schema; take it from a batch
-    footer read of the same file so the stream tracks whatever vintage
+    The file source needs an explicit schema; take it from the footer
+    of the same file (`parquet_schema`) so the stream tracks whatever vintage
     the driver testdata is (TIMESTAMP(NANOS)-as-long vs µs NTZ), then
     apply the catalog's shared ts normalization."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    raw_schema = parquet_schema(spark, table_path(sf_dir, "events"))
     d = _events_stream_dir(sf_dir)
     spark._bd6_stream_bytes = _dir_bytes(d)  # sizes the state partitions
     raw = (
@@ -318,13 +318,14 @@ def stream_events_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     Written to a SEPARATE stream dir so the shared replay dirs other
     streaming queries use are untouched."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
+    src = table_path(sf_dir, "events")
+    raw = spark.read.schema(parquet_schema(spark, src)).parquet(src)
     key = hashlib.md5((sf_dir + "#flush").encode()).hexdigest()[:10]
     d = os.path.join(tempfile.gettempdir(), "bigdata06_stream", key, "events")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events.parquet")
     if not os.path.exists(link):
-        os.symlink(table_path(sf_dir, "events"), link)
+        os.symlink(src, link)
     flush_path = os.path.join(d, "flush.parquet")
     if not os.path.exists(flush_path + "/_SUCCESS"):
         ts_field = raw.schema["ts"].dataType.simpleString()

@@ -56,3 +56,21 @@ def assert_matches_oracle(spark_df, con, oracle_sql: str) -> None:
     assert sorted(got.columns) == sorted(want.columns)
     assert len(got) == len(want)
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+
+
+def union_find_components(n: int, edges) -> dict[int, int]:
+    """node -> min node id of its connected component, for nodes
+    0..n-1 and undirected `edges` (the reference for min-label
+    propagation)."""
+    parent = list(range(n))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in range(n)}

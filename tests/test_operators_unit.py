@@ -393,12 +393,13 @@ def test_star_components_equal_label_propagation(spark):
     """large-star/small-star and min-label propagation must produce the
     identical component labeling on an arbitrary graph — including a
     long chain (the propagation algorithm's worst case) and isolated
-    nodes."""
+    nodes — and it must be the union-find one."""
     import random
 
     from pyspark.sql import functions as F
 
     from bigdata06_spark.operators.dedup import connected_components, connected_components_star
+    from tests.oracle_utils import union_find_components
 
     rng = random.Random(42)
     n = 300
@@ -415,6 +416,7 @@ def test_star_components_equal_label_propagation(spark):
     }
     star = {(r.doc_id, r.component) for r in connected_components_star(pairs, nodes).collect()}
     assert prop == star
+    assert prop == set(union_find_components(n, edges).items())
     # every chain node reaches min 0
     assert all(c == 0 for d, c in star if d <= chain_len)
 

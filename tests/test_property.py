@@ -638,3 +638,58 @@ def test_cdc_chunks_reassemble_to_original_text():
         WHERE t2 <> text
     """).fetchone()[0]
     assert bad == 0
+
+
+
+@settings(PROP, max_examples=3)
+@given(
+    n=st.integers(1, 60),
+    edges=st.lists(st.tuples(st.integers(0, 59), st.integers(0, 59)), max_size=90),
+)
+def test_connected_components_matches_union_find(spark, n, edges):
+    """Min-label propagation labels every node with the min id of its
+    union-find component, for any graph: isolated nodes, duplicate and
+    reversed pairs and self-loops included. (The 41-node chain is in
+    `test_operators_unit.test_star_components_equal_label_propagation`.)"""
+    from bigdata06_spark.operators.dedup import connected_components
+    from tests.oracle_utils import union_find_components
+
+    edges = [(a % n, b % n) for a, b in edges]
+    pairs = edges + [(b, a) for a, b in edges[::3]] + edges[:2]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
+    got = {r.doc_id: r.component for r in connected_components(df, nodes, max_iter=n).collect()}
+    assert got == union_find_components(n, pairs)
+
+
+def _mutual_top5(rows, max_deg):
+    """Brute-force mutual top-5 over distinct (part, supplier) rows:
+    parts with more than `max_deg` suppliers dropped, shared-part
+    counts per supplier pair, top-5 by (count desc, id asc)."""
+    from collections import Counter, defaultdict
+
+    sups = defaultdict(set)
+    for p, s in rows:
+        sups[p].add(s)
+    co = Counter((a, b) for ss in sups.values() if len(ss) <= max_deg
+                 for a in ss for b in ss if a != b)
+    ranked = defaultdict(list)
+    for (a, b), c in co.items():
+        ranked[a].append((-c, b))
+    top = {a: {b for _, b in sorted(r)[:5]} for a, r in ranked.items()}
+    return {(a, b) for a, bs in top.items() for b in bs if a < b and a in top[b]}
+
+
+@settings(PROP, max_examples=4)
+@given(rows=st.lists(st.tuples(st.integers(0, 9), st.integers(0, 11)), min_size=1, max_size=120))
+def test_mutual_topk_edges_matches_brute_force(spark, rows):
+    """`mutual_topk_edges` keeps exactly the pairs in each other's
+    top-5 by shared-part count, ties broken on supplier id. Twelve
+    suppliers on ten parts make count ties common; one hot part with
+    more than `COSUPPLY_MAX_DEG` suppliers must add no pair."""
+    from bigdata06_spark.operators.graph import COSUPPLY_MAX_DEG, mutual_topk_edges
+
+    hot = [(99, 100 + i) for i in range(COSUPPLY_MAX_DEG + 1)]
+    li = spark.createDataFrame(rows + hot, "l_partkey long, l_suppkey long")
+    got = {(r.sa, r.sb) for r in mutual_topk_edges(li).collect()}
+    assert got == _mutual_top5(rows + hot, COSUPPLY_MAX_DEG)

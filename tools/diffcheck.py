@@ -12,11 +12,12 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata06_spark.catalog import TABLES, table_path  # noqa: E402
 from bigdata06_spark.queries import load_all_queries  # noqa: E402
