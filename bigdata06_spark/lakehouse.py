@@ -11,10 +11,9 @@ pin a version's file set) implemented small enough to audit:
 - `<path>/_log/<N>.json` — one JSON per version: `{"add": [...],
   "remove": [...]}`. Version N's file set = replay of logs 0..N.
 - MERGE (update + delete legs) rewrites ONLY the files whose
-  [min, max] key range overlaps the touched keys — file-level stats
-  come from the `_metadata` hidden column, computed distributed, and
-  only the (file → range) summary reaches the driver (same contract
-  as `sinks.write_stats_manifest` / Iceberg planFiles).
+  [min, max] key range overlaps the touched keys — file-level ranges
+  come from the parquet footers' row-group statistics, the metadata
+  Iceberg planFiles prunes on; no table data is read to plan.
 
 Scale shape: the log is O(files-changed) per version; reads list one
 JSON per version (compact into snapshots at production version
@@ -24,6 +23,8 @@ row-level state anywhere.
 
 from __future__ import annotations
 
+import decimal
+import functools
 import json
 import os
 import time
@@ -32,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _DATA = "data"
 _LOG = "_log"
@@ -280,6 +282,160 @@ def _rel_of_uri(abs_uri: str, prev_files: set[str]) -> str:
     return rel
 
 
+# ---------------------------------------------------- parquet footers
+#
+# Scans and MERGE plan from the data files' footers instead of Spark
+# jobs. A footer carries the schema Spark wrote (the one a mergeSchema
+# read infers for the file) and per-row-group min/max per column.
+# Committed data files are immutable, so one footer read per file per
+# process suffices: the memo is keyed on (absolute path, size,
+# mtime_ns), and a file rewritten in place is read again.
+#
+# RANGE SOUNDNESS: a column's [lo, hi] is recorded only when EVERY row
+# group carries min and max and the parquet type orders like its Spark
+# type: integers, decimals, dates, strings (unsigned bytewise, as
+# Spark compares strings) and booleans. Floats and doubles (NaN and
+# -0.0 ordering), INT96 and INT64 timestamps, binary, all-NULL chunks
+# (no min/max) and nested columns get no range; callers treat a file
+# without a range for a column as possibly holding any value.
+
+#: footer key under which Spark stores the writer's schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: (physical type, logical type) pairs whose footer min/max order
+#: matches Spark's comparison of the column's values
+_RANGED = {
+    ("BOOLEAN", "NONE"),
+    ("INT32", "NONE"), ("INT32", "INT"), ("INT32", "DATE"), ("INT32", "DECIMAL"),
+    ("INT64", "NONE"), ("INT64", "INT"), ("INT64", "DECIMAL"),
+    ("BYTE_ARRAY", "STRING"), ("BYTE_ARRAY", "DECIMAL"),
+    ("FIXED_LEN_BYTE_ARRAY", "DECIMAL"),
+}
+
+
+@dataclass(frozen=True)
+class Footer:
+    """What planning reads from one data file's parquet footer."""
+    #: Spark's schema as the writer stored it; None for files from
+    #: other writers (pyarrow), whose Spark types only inference gives
+    schema: T.StructType | None
+    #: the file's Arrow schema (column names, and the DataSource's
+    #: session-less type mapping)
+    arrow: object
+    num_rows: int
+    #: column -> (lo, hi) over all row groups, ranged columns only
+    ranges: dict
+
+
+#: absolute path -> ((size, mtime_ns), Footer); replaced on a miss
+_FOOTERS: dict[str, tuple[tuple[int, int], Footer]] = {}
+
+
+@functools.lru_cache(maxsize=64)
+def _spark_schema_of(js: bytes) -> T.StructType | None:
+    """Parse a footer's Spark schema JSON (the files of a table share
+    a handful of distinct strings, so each parses once)."""
+    try:
+        return T.StructType.fromJson(json.loads(js))
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
+def _stat_value(col, st, which: str):
+    """One row group's min or max as a Python value of the column's
+    logical type. Decimals come from the raw unscaled integer: pyarrow
+    does not convert INT32/INT64-backed decimal statistics."""
+    if col.logical_type.type == "DECIMAL":
+        raw = getattr(st, which + "_raw")
+        if isinstance(raw, bytes):
+            raw = int.from_bytes(raw, "big", signed=True)
+        return decimal.Decimal(raw).scaleb(-col.scale)
+    return getattr(st, which)
+
+
+def _column_ranges(md, flat: set[str]) -> dict:
+    """column -> (lo, hi) over every row group, for the top-level
+    columns in `flat` that satisfy the soundness rules above."""
+    out = {}
+    for j in range(md.num_columns):
+        col = md.schema.column(j)
+        if col.path not in flat or (
+                col.physical_type, col.logical_type.type) not in _RANGED:
+            continue
+        lo = hi = None
+        try:
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                if st is None or not st.has_min_max:
+                    break
+                mn, mx = _stat_value(col, st, "min"), _stat_value(col, st, "max")
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+            else:
+                if lo is not None:
+                    out[col.path] = (lo, hi)
+        except (ValueError, TypeError, NotImplementedError):
+            pass  # undecodable statistics: no range
+    return out
+
+
+def footer(abs_path: str) -> Footer:
+    """The planning view of one data file's footer, memoized per
+    immutable file (see the section comment)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    st = os.stat(abs_path)
+    sig = (st.st_size, st.st_mtime_ns)
+    hit = _FOOTERS.get(abs_path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    pf = pq.ParquetFile(abs_path)
+    md, arrow = pf.metadata, pf.schema_arrow
+    js = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    flat = {f.name for f in arrow if not pa.types.is_nested(f.type)}
+    ft = Footer(
+        schema=_spark_schema_of(js) if js else None,
+        arrow=arrow,
+        num_rows=md.num_rows,
+        ranges=_column_ranges(md, flat),
+    )
+    _FOOTERS[abs_path] = (sig, ft)
+    return ft
+
+
+def _footer_schema(files: list[str]) -> T.StructType | None:
+    """The union of `files`' Spark footer schemas, in first-occurrence
+    column order: what a mergeSchema read infers for them, without its
+    job. None when there are no files, a file has no Spark schema or
+    two files disagree on a column's type; Spark's own inference is
+    then the authority."""
+    fields: dict[str, T.StructField] = {}
+    for p in files:
+        sch = footer(os.path.abspath(p)).schema
+        if sch is None:
+            return None
+        for f in sch.fields:
+            have = fields.get(f.name)
+            if have is None:
+                fields[f.name] = T.StructField(f.name, f.dataType, True, f.metadata)
+            elif have.dataType != f.dataType:
+                return None
+    return T.StructType(list(fields.values())) if fields else None
+
+
+def _scan(spark: SparkSession, path: str, rel_files: list[str]) -> DataFrame:
+    """The raw parquet scan of `rel_files` (table-relative, or absolute
+    for clone-adopted files) that every lakehouse read starts from.
+    Planned with the footers' union schema, so it starts no job; when
+    the footers cannot give that schema, Spark infers it."""
+    files = [os.path.join(path, f) for f in rel_files]
+    schema = _footer_schema(files)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return spark.read.schema(schema).parquet(*files)
+
+
 def _merge_move(src: str, dst: str) -> None:
     os.makedirs(dst, exist_ok=True)
     for name in os.listdir(src):
@@ -390,8 +546,7 @@ def _listed_name_of_uri(uri: str, abs_to_listed: dict[str, str]) -> str:
 
 def _collect_file_stats(spark: SparkSession, path: str, files: list[str],
                         stats_cols: list[str]) -> dict:
-    full = [os.path.join(path, f) for f in files]
-    df = spark.read.option("mergeSchema", "true").parquet(*full)
+    df = _scan(spark, path, files)
     present = [c for c in stats_cols if c in df.columns]
     if not present:
         return {}
@@ -651,7 +806,6 @@ def _collect_file_blooms(spark: SparkSession, path: str, files: list[str],
     import base64
 
     cols, m, k = bloom["cols"], bloom["bits"], bloom["hashes"]
-    full = [os.path.join(path, f) for f in files]
     # resolve scanner URIs through the shared map (see
     # _listed_name_of_uri: the pre-r9 suffix surgery here missed the
     # percent-unescape, so escaped-partition blooms were recorded
@@ -659,7 +813,7 @@ def _collect_file_blooms(spark: SparkSession, path: str, files: list[str],
     # unpruned, found by the parquet-vs-JSON checkpoint equivalence
     # test)
     abs_to_listed = _abs_to_listed_map(path, files)
-    df = spark.read.option("mergeSchema", "true").parquet(*full)
+    df = _scan(spark, path, files)
     present = [c for c in cols if c in df.columns]
     out: dict = {}
     for c in present:
@@ -1582,10 +1736,11 @@ def read_version(spark: SparkSession, path: str, version: int,
                  stats_filter: dict | None = None,
                  bloom_filter: dict | None = None,
                  use_manifest: bool = True) -> DataFrame:
-    """Version-pinned read. mergeSchema=true because versions may mix
-    file vintages after `add_column` schema evolution — carried-over
-    files simply lack the new column and read as NULL (Delta/Iceberg's
-    additive-evolution semantics).
+    """Version-pinned read. Versions may mix file vintages after
+    `add_column` schema evolution, so the scan's schema is the union
+    of the files' footer schemas (`_scan`): carried-over files simply
+    lack the new column and read as NULL (Delta/Iceberg's
+    additive-evolution semantics), and planning starts no Spark job.
 
     `partition_filter` ({col: value-or-values}) PRUNES AT THE PLANNER:
     only files whose Hive-style partition values match are handed to
@@ -1659,8 +1814,7 @@ def _read_snapshot(spark: SparkSession, path: str, s: Snapshot,
             ]
     if (partition_filter or stats_filter or bloom_filter) and not rel_files:
         return _read_snapshot(spark, path, s).limit(0)
-    files = [os.path.join(path, f) for f in rel_files]
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = _scan(spark, path, rel_files)
     # deletion vectors subtract BEFORE the evolved-column fill: the
     # anti-join needs the scan relation's `_metadata`; only DVs of
     # the surviving (pruned) files are loaded
@@ -1719,6 +1873,12 @@ def _dv_files_for(dvs: dict[str, list[str]], rel_files: list[str]) -> list[str]:
     return sorted(out)
 
 
+def _dv_positions(spark: SparkSession, path: str,
+                  dv_files: list[str]) -> DataFrame:
+    """The distinct (file, row_index) positions `dv_files` delete."""
+    return _scan(spark, path, dv_files).select("file", "row_index").distinct()
+
+
 def _apply_dvs(spark: SparkSession, path: str, df: DataFrame,
                rel_files: list[str], dv_files: list[str]) -> DataFrame:
     """Subtract deletion-vector positions from a freshly-scanned
@@ -1728,11 +1888,7 @@ def _apply_dvs(spark: SparkSession, path: str, df: DataFrame,
     DVs."""
     if not dv_files:
         return df
-    dv = (
-        spark.read.parquet(*[os.path.join(path, f) for f in dv_files])
-        .select("file", "row_index")
-        .distinct()
-    )
+    dv = _dv_positions(spark, path, dv_files)
     marked = _with_listed_file(spark, path, df, rel_files)
     out = marked.join(
         F.broadcast(dv),
@@ -1749,18 +1905,11 @@ def _live_with_positions(spark: SparkSession, path: str, s: Snapshot,
     (`_dv_file`, `_dv_ri`) positions materialized from the scan
     relation — the shared front half of every MOR writer
     (delete_where / update_where)."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in rel_files]
-    )
-    df = _replay_schema(df, s.acts, s.logical_cols)
+    df = _replay_schema(_scan(spark, path, rel_files), s.acts, s.logical_cols)
     marked = _with_listed_file(spark, path, df, rel_files)
     old_dv = _dv_files_for(dvs, rel_files)
     if old_dv:
-        prior = (
-            spark.read.parquet(*[os.path.join(path, f) for f in old_dv])
-            .select("file", "row_index")
-            .distinct()
-        )
+        prior = _dv_positions(spark, path, old_dv)
         marked = marked.join(
             F.broadcast(prior),
             (marked["_dv_file"] == prior["file"])
@@ -1953,6 +2102,25 @@ def table_txns(path: str, version: int | None = None) -> dict:
     return snapshot(path, version, bulk=()).txns
 
 
+def _key_ranges(spark: SparkSession, spans: list[tuple],
+                key_type: T.DataType) -> DataFrame:
+    """The (file, lo, hi) relation of `spans`, lo/hi typed as the key
+    (NULL where a file has no range). Built from an Arrow table: a
+    local relation, so broadcasting it starts no job (the row-list
+    form of createDataFrame is an RDD that must be collected)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    at = to_arrow_type(key_type)
+    files, los, his = zip(*spans) if spans else ((), (), ())
+    tbl = pa.table({"file": pa.array(files, pa.string()),
+                    "lo": pa.array(los, at), "hi": pa.array(his, at)})
+    schema = T.StructType([T.StructField("file", T.StringType()),
+                           T.StructField("lo", key_type),
+                           T.StructField("hi", key_type)])
+    return spark.createDataFrame(tbl, schema)
+
+
 def merge(spark: SparkSession, path: str, key: str | list[str],
           updates: DataFrame | None = None,
           delete_keys: DataFrame | None = None,
@@ -1974,10 +2142,13 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
     carry through the rewrite unchanged). Change relations must carry
     every key column.
 
-    The touched-key bounds come from one tiny aggregate over the
-    update/delete relations; per-file ranges from a distributed
-    `_metadata` groupBy — the driver only ever holds (file, lo, hi)
-    triples and the file lists it must hand the scanner anyway.
+    Per-file key ranges come from the data files' parquet footers
+    (one footer read per file per process, see "parquet footers"), so
+    planning reads no table data; one action over the change
+    relations, joined to the broadcast (file, lo, hi) relation,
+    returns the files to rewrite and the duplicate-key check's count.
+    The driver holds only those triples and the file lists it must
+    hand the scanner anyway.
 
     `txn=(app_id, txn_version)` makes the merge IDEMPOTENT (Delta's
     txnAppId/txnVersion): if the log already records a version ≥
@@ -2074,14 +2245,10 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
         entry["op"] = "MERGE"
         _commit_log(path, version, entry)
 
-    touched = None
-    for rel in (updates, delete_keys):
-        if rel is not None:
-            k = rel.select(F.col(key))
-            touched = k if touched is None else touched.unionAll(k)
-    if touched is None and inserts is None:
+    chg_rels = [r for r in (updates, delete_keys) if r is not None]
+    if not chg_rels and inserts is None:
         raise ValueError("merge needs updates, delete_keys, and/or inserts")
-    if touched is None:
+    if not chg_rels:
         # insert-only merge: append one file, rewrite nothing
         new_v = prev_v + 1
         sub = _new_sub(new_v)
@@ -2092,43 +2259,48 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
 
     # Per-FILE overlap test, not one global bounding box: a scattered
     # change set (keys 1 and 10⁹) must rewrite only the files that
-    # actually contain a touched key's range — the file-range relation
-    # is small (one row per data file) and joins the touched keys with
-    # a range predicate; only the surviving file list is collected
-    # (the scanner needs it anyway). RAW scan (not the DV-applied
-    # snapshot): `_metadata` resolves only on the scan relation, and
-    # raw per-file ranges are a sound superset — a file whose every
-    # touched-range row is DV-deleted rewrites harmlessly (and sheds
-    # its spent DVs in the process).
-    raw_snapshot = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in sorted(s.files)]
-    )
-    # the key may have been RENAMED (column mapping): files written
-    # before the rename store it under the old physical name, so the
-    # per-file range aggregate coalesces across the rename history
-    # (types are rename-invariant; row sets per file are disjoint)
-    key_phys = [
-        c
-        for c in _physical_names_of(s.acts, key)
-        if c in raw_snapshot.columns
-    ]
-    if not key_phys:
+    # actually contain a touched key's range. Each file's key range
+    # comes from its footer (see "parquet footers"), under the newest
+    # name the key carried when the file was written (column mapping:
+    # pre-rename files store the old physical name). Footer ranges
+    # cover DV-deleted rows too: a sound superset, as a file whose
+    # every touched-range row is DV-deleted rewrites harmlessly (and
+    # sheds its spent DVs). A file without a usable range (unranged
+    # key type, all-NULL key, key column absent) counts as holding
+    # every key; a file without rows holds none.
+    phys = _physical_names_of(s.acts, key)
+    spans, key_seen = [], False
+    for f in sorted(s.files):
+        ft = footer(os.path.abspath(os.path.join(path, f)))
+        name = next((c for c in phys if c in ft.arrow.names), None)
+        key_seen = key_seen or name is not None
+        if ft.num_rows:
+            spans.append((f, *ft.ranges.get(name, (None, None))))
+    if not key_seen:
         raise ValueError(f"merge key {key!r} not found in any data file")
-    key_read = F.coalesce(*[F.col(c) for c in key_phys]) if len(key_phys) > 1 \
-        else F.col(key_phys[0])
-    per_file = raw_snapshot.groupBy(F.col("_metadata.file_path").alias("file")).agg(
-        F.min(key_read).alias("lo"), F.max(key_read).alias("hi")
-    )
-    hit = (
-        per_file.join(
-            touched.distinct(),
-            (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi")),
-            "left_semi",
-        )
-        .select("file")
+    ranges = _key_ranges(spark, spans, live.schema[key].dataType)
+    # ONE action answers both planning questions: the files a touched
+    # key falls in, and the largest row count of any `updates` key (a
+    # duplicate would FAN OUT the update join and silently duplicate
+    # table rows). The change keys join the broadcast (file, lo, hi)
+    # relation; keys outside every range keep a NULL file.
+    chg = []
+    if updates is not None:
+        chg.append(updates.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+                   .select(F.col(key).alias("_k"), "_n"))
+    if delete_keys is not None:
+        chg.append(delete_keys.select(F.col(key).alias("_k"),
+                                      F.lit(0).cast("long").alias("_n")))
+    k = F.col("_k")
+    inside = k.isNotNull() & (F.col("lo").isNull() | k.between(F.col("lo"), F.col("hi")))
+    planned = (
+        functools.reduce(DataFrame.unionAll, chg)
+        .join(F.broadcast(ranges), inside, "left")
+        .groupBy("file").agg(F.max("_n").alias("_n"))
         .collect()
     )
-    affected = [_rel_of_uri(r.file, s.files) for r in hit]
+    affected = sorted(r.file for r in planned if r.file is not None)
+    dup_keys = any((r._n or 0) > 1 for r in planned)
     # PARTITION CONFINEMENT (VERDICT r4 #3): when the table is
     # partitioned AND every change relation carries the partition
     # columns, the rewrite set shrinks to files in the TOUCHED
@@ -2144,7 +2316,6 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
     # like a Delta MERGE whose ON clause includes the partition
     # predicate. Change relations WITHOUT the partition columns keep
     # the partition-agnostic (key-only) semantics.
-    chg_rels = [r for r in (updates, delete_keys) if r is not None]
     if pby and affected and all(
         all(c in rel.columns for c in pby) for rel in chg_rels
     ):
@@ -2193,9 +2364,7 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
         _commit(new_v, _list_data_files(path, sub), [])
         return new_v
 
-    rewrite_src = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in affected]
-    )
+    rewrite_src = _scan(spark, path, affected)
     # DV-deleted rows must not resurrect through the rewrite: apply
     # the affected files' deletion vectors before the merge legs; the
     # new commit removes those files, which drops their spent DVs
@@ -2213,10 +2382,7 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
         # join and silently duplicate table rows — fail loud and make
         # the caller state its conflict policy (pre-aggregate the
         # changelog to one row per key)
-        dup = (
-            updates.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
+        if dup_keys:
             raise ValueError(
                 "updates contain duplicate keys; reduce the changelog to one "
                 "row per key (last-write-wins needs an ordering column) "
@@ -2338,12 +2504,12 @@ def add_column(path: str, col_name: str, col_type: str) -> int:
 
 def _apply_schema_actions(df: DataFrame, actions: list[dict]) -> DataFrame:
     """Replay the schema-action history over a RAW (possibly
-    mixed-vintage, mergeSchema'd) scan so the result carries the
+    mixed-vintage, union-schema: `_scan`) scan so the result carries the
     LOGICAL schema:
 
     - add: files predating the add read the column as a typed NULL
     - rename: files written before the rename carry the OLD physical
-      name, files after carry the new one — a mergeSchema scan shows
+      name, files after carry the new one — the union-schema scan shows
       BOTH columns (each NULL where absent), so the rename coalesces
       new-over-old and drops the old (disjoint row sets make the
       coalesce exact); single-vintage scans just rename
@@ -2383,7 +2549,7 @@ def _logical_cols(order: list[str] | None,
     a cached order the actions extend) with schema actions `acts`
     replayed over the NAME LIST — adds append, a rename keeps the
     column's position, drops remove. Delta's declared-schema ordering,
-    which a mixed-vintage mergeSchema scan cannot provide on its own;
+    which a mixed-vintage union-schema scan cannot provide on its own;
     None for tables created before the base order was recorded."""
     if order is None:
         return None
@@ -2420,7 +2586,7 @@ def _retired_names(acts: list[dict]) -> set[str]:
     """Physical names a rename or drop in `acts` RETIRED: old data
     files may still carry real values under them, so re-introducing
     the name (add_column / merge schema evolution / rename target)
-    would resurrect stale data through the mergeSchema scan.
+    would resurrect stale data through the union-schema scan.
     Loud-rejected at every schema-introduction point — the price of
     column mapping without Delta's per-column physical IDs, documented
     in rename_column."""
@@ -2438,9 +2604,9 @@ def _retired_names(acts: list[dict]) -> set[str]:
 
 def _physical_names_of(actions: list[dict], logical: str) -> list[str]:
     """Every physical name `logical` has carried across the rename
-    history, newest first — the coalesce candidates a raw
-    mixed-vintage scan needs to read the column without a full
-    replay (merge's per-file key-range aggregate uses this)."""
+    history, newest first — the names a file of any vintage may
+    hold the column under (merge looks up each file's footer key
+    range by them)."""
     names = [logical]
     for a in reversed(actions):
         if a["kind"] == "rename" and a["to"] == names[-1]:
@@ -2595,9 +2761,7 @@ def optimize(spark: SparkSession, path: str, key: str, n_files: int = 4,
                   if _matches_partition(f, partitions)]
         if not target:
             raise ValueError(f"no files match partitions {partitions}")
-        rows = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in target]
-        )
+        rows = _scan(spark, path, target)
         # compaction MATERIALIZES deletes: the rewritten files carry
         # the DV-applied rows and the commit's remove drops the spent
         # DV references from the replayed state
@@ -2727,9 +2891,7 @@ def reorg_purge(spark: SparkSession, path: str, key: str,
     target = sorted(f for f in s.files if s.dvs.get(f))
     if not target:
         return prev_v
-    src = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in target]
-    )
+    src = _scan(spark, path, target)
     src = _apply_dvs(spark, path, src, target, _dv_files_for(s.dvs, target))
     src = _replay_schema(src, s.acts, s.logical_cols)
     src = _apply_generated(src, s.generated)
@@ -2787,9 +2949,7 @@ def optimize_zorder_incremental(spark: SparkSession, path: str,
     new_files = sorted(live - set(clustered))
     if not new_files:
         return prev_v
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in new_files]
-    )
+    df = _scan(spark, path, new_files)
     df = _apply_dvs(spark, path, df, new_files,
                     _dv_files_for(s.dvs, new_files))
     df = _replay_schema(df, s.acts, s.logical_cols)
@@ -2834,9 +2994,7 @@ def read_changes(spark: SparkSession, path: str, from_version: int,
     )
     if not changed:
         return _read_snapshot(spark, path, s).limit(0)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in changed]
-    )
+    df = _scan(spark, path, changed)
     df = _apply_dvs(spark, path, df, changed, _dv_files_for(s.dvs, changed))
     return _replay_schema(df, s.acts, s.logical_cols)
 
@@ -2898,9 +3056,7 @@ def read_row_changes(spark: SparkSession, path: str, key: str,
         # new logical one, an added column reads as NULL in pre-images
         if not rel_files:
             return template.limit(0)
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in rel_files]
-        )
+        df = _scan(spark, path, rel_files)
         df = _apply_dvs(spark, path, df, rel_files, _dv_files_for(dvs, rel_files))
         return _replay_schema(df, s.acts, s.logical_cols)
 
@@ -3370,9 +3526,7 @@ def overwrite_where(spark: SparkSession, path: str, key: str,
                 "data contains rows outside the replaced predicate region "
                 "(replaceWhere constraint)"
             )
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in rel_files]
-        )
+        raw = _scan(spark, path, rel_files)
         raw = _replay_schema(raw, s.acts, s.logical_cols)
         hit = (
             raw.groupBy(F.col("_metadata.file_path").alias("f"))
@@ -3383,9 +3537,7 @@ def overwrite_where(spark: SparkSession, path: str, key: str,
         prev_set = set(rel_files)
         removed = sorted(_rel_of_uri(r.f, prev_set) for r in hit)
         if removed:
-            kdf = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, f) for f in removed]
-            )
+            kdf = _scan(spark, path, removed)
             kdf = _apply_dvs(spark, path, kdf, removed,
                              _dv_files_for(dvs, removed))
             kdf = _replay_schema(kdf, s.acts, s.logical_cols)

@@ -694,14 +694,13 @@ def read_planned(spark: SparkSession, path: str, version: int,
                  dvs: dict[str, list[str]]) -> DataFrame:
     """Materialize a manifest-planned (files, dvs) snapshot — the
     shared back half of read_at_manifest and read_version's default
-    manifest path: mergeSchema scan of exactly `rel_files`, DV
+    manifest path: a footer-schema scan of exactly `rel_files`, DV
     subtraction, schema-action replay from the meta cache (no log
     re-walk)."""
     if not rel_files:
         return LH.read_version(spark, path, version,
                                use_manifest=False).limit(0)
-    files = [os.path.join(path, f) for f in rel_files]
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = LH._scan(spark, path, rel_files)
     df = LH._apply_dvs(spark, path, df, rel_files,
                        LH._dv_files_for(dvs, rel_files))
     meta = manifest_meta(path)

@@ -139,11 +139,11 @@ def _view_cache(spark: SparkSession) -> dict:
 def _refresh_view(spark: SparkSession, name: str) -> None:
     """(Re-)register `name` over the table's CURRENT version — but
     skip the rebuild when the existing view already wraps exactly that
-    version (review r10: `read_version` is not free — mergeSchema
-    reads every surviving file's footer at PLAN time, so re-CREATE-ing
-    an unchanged table on every warm statement re-paid O(files) footer
-    reads; a version is immutable state, so same (path, version) ⇒
-    same plan). Any commit bumps current_version and invalidates.
+    version (review r10: `read_version` is not free — planning folds
+    the log and walks every surviving file's footer, so re-CREATE-ing
+    an unchanged table on every warm statement re-paid O(files) work;
+    a version is immutable state, so same (path, version) ⇒ same
+    plan). Any commit bumps current_version and invalidates.
 
     The cache key ALSO carries `_log_fingerprint` (ADVICE r10): the
     (path, version) pair alone relies on the invariant that every

@@ -117,15 +117,15 @@ def _logical_schema(path: str, s: LH.Snapshot) -> T.StructType:
     """The table's logical Spark schema at snapshot `s`: union of the
     files' parquet schemas (first-occurrence field order) with the
     schema-action history replayed, projected to the logical column
-    order — the same resolution read_version's mergeSchema + replay
-    produces, computed from footers only."""
-    import pyarrow.parquet as pq
+    order — the same resolution read_version's footer-schema scan +
+    replay produces, from the memoized footers (`LH.footer`) and with
+    Arrow's type mapping, since this runs without a session."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     fields: dict[str, T.DataType] = {}
     order: list[str] = []
     for f in sorted(s.files):
-        sch = pq.read_schema(_abs(path, f))
+        sch = LH.footer(os.path.abspath(_abs(path, f))).arrow
         for name in sch.names:
             if name not in fields:
                 fields[name] = from_arrow_type(sch.field(name).type)

@@ -59,3 +59,84 @@ def test_community_components_job_budget(spark, sf_dir):
     q = load_all_queries()["graph_community_components"].fn
     q(spark, sf_dir).toPandas()
     assert _jobs(spark, lambda: q(spark, sf_dir).toPandas()) <= 17
+
+
+def _orders_table(spark, path):
+    """A 4-file lakehouse table of 1,500 keyed rows, like the
+    benchmark's `lakehouse_write` table."""
+    from bigdata06_spark import lakehouse as LH
+
+    rows = spark.range(1500).select(
+        F.col("id").alias("o_orderkey"),
+        (F.col("id") % 97).alias("o_custkey"),
+        (F.col("id") * 1.5).alias("o_totalprice"),
+    )
+    LH.table_init(rows, path, "o_orderkey", n_files=4)
+
+
+def test_lakehouse_read_plans_without_a_job(spark, tmp_path):
+    """A version-pinned read of a Spark-written table plans from the
+    data files' footers: `toPandas()` starts only its own job (2 when
+    every read inferred its schema with a mergeSchema job)."""
+    from bigdata06_spark import lakehouse as LH
+
+    path = str(tmp_path / "orders")
+    _orders_table(spark, path)
+    LH.read_version(spark, path, 0).toPandas()
+    assert _jobs(spark, lambda: LH.read_version(spark, path, 0).toPandas()) == 1
+
+
+def test_lakehouse_merge_job_budget(spark, tmp_path):
+    """The benchmark's merge shape: 15 keys scattered over a 4-file
+    table, the update relation read from its own parquet file (whose
+    schema inference is one of the jobs). 9 jobs at most; 15 when the
+    merge inferred two scan schemas, found key ranges with a
+    `_metadata` groupBy over every live file and counted duplicate
+    update keys with a separate action."""
+    from bigdata06_spark import lakehouse as LH
+
+    chg = str(tmp_path / "chg.parquet")
+    spark.range(15).select(
+        (F.col("id") * 97 + 11).alias("o_orderkey"),
+        F.lit(7).cast("long").alias("o_custkey"),
+        F.lit(1.0).alias("o_totalprice"),
+    ).write.parquet(chg)
+
+    def merge(path):
+        return LH.merge(spark, path, "o_orderkey", updates=spark.read.parquet(chg))
+
+    warm, path = str(tmp_path / "warm"), str(tmp_path / "orders")
+    _orders_table(spark, warm)
+    merge(warm)
+    _orders_table(spark, path)
+    assert _jobs(spark, lambda: merge(path)) <= 9
+    entry = LH._read_entry(path, 1)
+    assert len(entry["remove"]) == 4
+
+
+def test_lakehouse_read_sees_rewritten_footer(spark, tmp_path):
+    """The footer memo is keyed on each file's size and mtime: a data
+    file rewritten in place with another column type is read with the
+    new type, not the memoized one."""
+    import glob
+    import os
+
+    from bigdata06_spark import lakehouse as LH
+
+    path = str(tmp_path / "t")
+    LH.table_init(spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("v")),
+                  path, "k", n_files=1)
+    assert dict(LH.read_version(spark, path, 0).dtypes)["v"] == "bigint"
+
+    (target,) = LH.files_at_version(path, 0)
+    spark.range(3).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v")) \
+        .coalesce(1).write.parquet(str(tmp_path / "new"))
+    (fresh,) = glob.glob(str(tmp_path / "new" / "*.parquet"))
+    dst = os.path.join(path, target)
+    os.replace(fresh, dst)
+    # Hadoop's checksum sidecar must describe the new bytes too
+    crc = lambda p: os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+    os.replace(crc(fresh), crc(dst))
+    df = LH.read_version(spark, path, 0)
+    assert dict(df.dtypes)["v"] == "string"
+    assert sorted(r.v for r in df.collect()) == ["0", "1", "2"]

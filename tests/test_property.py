@@ -693,3 +693,97 @@ def test_mutual_topk_edges_matches_brute_force(spark, rows):
     li = spark.createDataFrame(rows + hot, "l_partkey long, l_suppkey long")
     got = {(r.sa, r.sb) for r in mutual_topk_edges(li).collect()}
     assert got == _mutual_top5(rows + hot, COSUPPLY_MAX_DEG)
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(
+    string_key=st.booleans(),
+    n_init=st.integers(1, 3),
+    vintages=st.lists(
+        st.sampled_from(["append", "format_append", "null_keys", "dv_delete", "rename"]),
+        max_size=3, unique=True),
+    upd=st.dictionaries(st.integers(-10, 70), st.integers(0, 999), max_size=8),
+    dels=st.lists(st.integers(-10, 70), max_size=5),
+)
+@example(string_key=False, n_init=3,
+         vintages=["rename", "format_append", "null_keys"],
+         upd={0: 1, 29: 2, 45: 3}, dels=[30, 70])
+@example(string_key=True, n_init=2, vintages=["dv_delete", "append"],
+         upd={0: 1, 39: 2}, dels=[-10, 14])
+def test_merge_footer_ranges_are_sound(spark, tmp_path_factory, string_key,
+                                       n_init, vintages, upd, dels):
+    """MERGE plans its rewrite set from footer key ranges. On random
+    1–6-file tables mixing vintages (a Spark append, a pyarrow-written
+    `format("lakehouse")` append whose footer has no Spark schema, a
+    file whose key is all NULL, DV-deleted rows, the key renamed
+    between vintages), with int or string keys and touched keys inside
+    and outside every file's range: the merged table equals a model,
+    and every file that holds a touched key is in the commit's
+    `remove` list."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from bigdata06_spark import lakehouse as LH
+    from bigdata06_spark.sources.lakehouse_datasource import register
+
+    register(spark)
+    sk = (lambda i: None if i is None else f"k{i + 100:03d}") if string_key \
+        else (lambda i: i)
+    ktype = "string" if string_key else "long"
+    path = str(tmp_path_factory.mktemp("lh_ranges") / "t")
+    key = "k0"
+
+    def rows_df(pairs):
+        return spark.createDataFrame([(sk(k), v) for k, v in pairs],
+                                     f"{key} {ktype}, v double")
+
+    model = [(k, float(k)) for k in range(30)]
+    LH.table_init(rows_df(model), path, key, n_files=n_init)
+    for step in vintages:
+        if step == "append":
+            new = [(k, float(k)) for k in range(30, 40)]
+            LH.append(spark, path, key, rows_df(new))
+            model += new
+        elif step == "format_append":
+            new = [(k, float(k)) for k in range(40, 50)]
+            rows_df(new).coalesce(1).write.format("lakehouse").mode("append").save(path)
+            model += new
+        elif step == "null_keys":
+            new = [(None, -1.0), (None, -2.0)]
+            LH.append(spark, path, key, rows_df(new))
+            model += new
+        elif step == "dv_delete":
+            gone = {0, 7, 14, 21, 28}
+            lits = ", ".join(repr(sk(k)) if string_key else str(k) for k in sorted(gone))
+            LH.delete_where(spark, path, f"{key} IN ({lits})")
+            model = [(k, v) for k, v in model if k not in gone]
+        elif step == "rename":
+            new_key = f"k{int(key[1:]) + 1}"
+            LH.rename_column(spark, path, key, new_key)
+            key = new_key
+
+    before = LH.snapshot(path)
+    chg_upd = spark.createDataFrame([(sk(k), float(v)) for k, v in upd.items()],
+                                    f"{key} {ktype}, v double")
+    chg_del = (spark.createDataFrame([(sk(k),) for k in dels], f"{key} {ktype}")
+               if dels else None)
+    v = LH.merge(spark, path, key, updates=chg_upd, delete_keys=chg_del)
+
+    gone, new_v = set(dels), {k: float(x) for k, x in upd.items()}
+    want = sorted(((sk(k), new_v.get(k, x)) for k, x in model if k not in gone),
+                  key=repr)
+    got = sorted(((r[key], r.v) for r in LH.read_version(spark, path, v).collect()),
+                 key=repr)
+    assert got == want
+
+    touched = {sk(k) for k in set(upd) | gone}
+    removed = set(LH._read_entry(path, v)["remove"])
+    names = LH._physical_names_of(before.acts, key)
+    for f in before.files:
+        tbl = pq.read_table(os.path.join(path, f))
+        col = next(c for c in names if c in tbl.column_names)
+        if touched & set(tbl.column(col).to_pylist()):
+            assert f in removed, f"{f} holds a touched key but was not rewritten"
