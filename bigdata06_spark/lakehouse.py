@@ -1981,7 +1981,7 @@ def delete_where(spark: SparkSession, path: str, predicate,
     # log write would not (one cheap job over the just-written DVs)
     affected = sorted(
         r.file
-        for r in spark.read.parquet(out_dir).select("file").distinct().collect()
+        for r in _scan(spark, path, dv_files).select("file").distinct().collect()
     )
     if not affected:  # predicate matched nothing: drop the empty attempt
         import shutil
@@ -2047,9 +2047,10 @@ def update_where(spark: SparkSession, path: str, key: str,
     hits.select(
         F.col("_dv_file").alias("file"), F.col("_dv_ri").alias("row_index")
     ).repartition(max(1, n_files)).write.mode("overwrite").parquet(dv_dir)
+    dv_files = _list_data_files(path, dv_sub)
     affected = sorted(
         r.file
-        for r in spark.read.parquet(dv_dir).select("file").distinct().collect()
+        for r in _scan(spark, path, dv_files).select("file").distinct().collect()
     )
     if not affected:  # nothing matched: drop the empty attempt
         import shutil
@@ -2080,7 +2081,7 @@ def update_where(spark: SparkSession, path: str, key: str,
     entry: dict = {
         "add": adds,
         "remove": [],
-        "dv_add": {"files": affected, "dv": _list_data_files(path, dv_sub)},
+        "dv_add": {"files": affected, "dv": dv_files},
     }
     entry.update(_entry_partition_meta(adds))
     entry.update(_entry_stats_blooms(spark, path, adds, s))

@@ -1,7 +1,8 @@
-"""Spark jobs per operation, counted by job group (deterministic at a
-fixed input; no timings). Each count is taken warm, after one untimed
-run, so first-use work such as a table's schema inference is excluded
-the same way the benchmark's warm-up pass excludes it."""
+"""Counts per operation: Spark jobs, counted by job group, and
+generated-code classes compiled (deterministic at a fixed input; no
+timings). Each count is taken warm, after one untimed run, so
+first-use work such as a table's schema inference or code generation
+is excluded the same way the benchmark's warm-up pass excludes it."""
 
 import uuid
 
@@ -59,6 +60,28 @@ def test_community_components_job_budget(spark, sf_dir):
     q = load_all_queries()["graph_community_components"].fn
     q(spark, sf_dir).toPandas()
     assert _jobs(spark, lambda: q(spark, sf_dir).toPandas()) <= 17
+
+
+def test_warm_query_mix_compiles_no_class(spark, sf_dir):
+    """The benchmark's five `query_mix` ops, run one after another,
+    reuse the classes their first round compiled: a second round
+    compiles none. With Spark's default 100-entry codegen cache every
+    round evicted what the next one needed and recompiled 116."""
+    from bigdata06_spark.queries import load_all_queries
+    from bigdata06_spark.session import classes_compiled
+
+    registry = load_all_queries()
+    ops = ["q1_pricing_summary", "q5_revenue_by_nation", "text_quality_score",
+           "multimodal_decode", "graph_community_components"]
+
+    def round_():
+        for op in ops:
+            registry[op].fn(spark, sf_dir).toPandas()
+
+    round_()
+    before = classes_compiled(spark)
+    round_()
+    assert classes_compiled(spark) - before == 0
 
 
 def _orders_table(spark, path):
@@ -140,3 +163,17 @@ def test_lakehouse_read_sees_rewritten_footer(spark, tmp_path):
     df = LH.read_version(spark, path, 0)
     assert dict(df.dtypes)["v"] == "string"
     assert sorted(r.v for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_lakehouse_delete_where_job_budget(spark, tmp_path):
+    """A deletion-vector DELETE reads back the positions it just wrote
+    through the footer-planned scan: 5 jobs, 6 when that read inferred
+    the DV files' schema with a job of its own."""
+    from bigdata06_spark import lakehouse as LH
+
+    warm, path = str(tmp_path / "warm"), str(tmp_path / "orders")
+    _orders_table(spark, warm)
+    LH.delete_where(spark, warm, "o_custkey = 5")
+    _orders_table(spark, path)
+    assert _jobs(spark, lambda: LH.delete_where(spark, path, "o_custkey = 5")) == 5
+    assert LH.read_version(spark, path, 1).filter("o_custkey = 5").count() == 0

@@ -11,6 +11,15 @@ Timing methodology matches bench.py (min-of-N, build+execute per rep)
 except the action is the noop sink instead of count(); bench.py itself
 keeps count() so round-over-round numbers stay comparable. Jobs are
 labeled with setJobDescription.
+
+Each line also reports the generated-code classes the last rep
+compiled. The reps run back to back, so reps 2..N find the classes rep
+1 compiled in Spark's codegen cache and min-of-N never includes
+compilation. A workload that interleaves queries whose classes
+together overflow the cache recompiles them on every pass; only the
+compile count of a warm rep shows that, not its time. Non-zero here
+means the query alone overflows the cache or generates different code
+on every run.
 """
 
 from __future__ import annotations
@@ -24,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata06_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from bigdata06_spark.queries import load_all_queries  # noqa: E402
-from bigdata06_spark.session import get_spark  # noqa: E402
+from bigdata06_spark.session import classes_compiled, get_spark  # noqa: E402
 
 
 def plan_of(df) -> str:
@@ -54,12 +63,14 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"isolate:{name}")
         best = None
         for _ in range(max(1, args.reps)):
-            t0 = time.perf_counter()
+            c0, t0 = classes_compiled(spark), time.perf_counter()
             df = specs[name].fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        print(f"{name}: {best:.3f}s (noop, min of {args.reps})", flush=True)
+            compiled = classes_compiled(spark) - c0
+        print(f"{name}: {best:.3f}s (noop, min of {args.reps}); "
+              f"last rep compiled {compiled} classes", flush=True)
         if args.plan_out:
             os.makedirs(args.plan_out, exist_ok=True)
             suffix = f"_{args.suffix}" if args.suffix else ""
