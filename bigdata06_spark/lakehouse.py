@@ -31,6 +31,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -2482,13 +2483,34 @@ def add_column(path: str, col_name: str, col_type: str) -> int:
     semantics: metadata change now, data lazily, later rewrites fill
     real values into whatever files they touch). Returns the new
     version."""
+    return add_columns(path, [(col_name, col_type)])
+
+
+def add_columns(path: str, cols: list[tuple[str, str]]) -> int:
+    """`add_column` for several (name, type) pairs as ONE version.
+    Every pair is checked before the commit, so a bad one commits
+    nothing: the type must be one Spark parses (the cast every read
+    applies to files that predate the column), and the name must be
+    new to the table, given once, and not retired by a rename/drop."""
     s = snapshot(path, bulk=())
-    if col_name in _retired_names(s.acts):
-        raise ValueError(
-            f"column name {col_name!r} was retired by an earlier "
-            "rename/drop; old data files may still carry values under it "
-            "— pick a fresh name (see rename_column)"
-        )
+    taken = set(s.logical_cols or ())
+    retired = _retired_names(s.acts)
+    seen: set[str] = set()
+    for col_name, col_type in cols:
+        if col_name in retired:
+            raise ValueError(
+                f"column name {col_name!r} was retired by an earlier "
+                "rename/drop; old data files may still carry values under "
+                "it — pick a fresh name (see rename_column)"
+            )
+        if col_name in taken or col_name in seen:
+            raise ValueError(f"column {col_name!r} already exists")
+        seen.add(col_name)
+        try:
+            F.lit(None).cast(col_type)
+        except PySparkException as e:  # any type Spark rejects
+            raise ValueError(
+                f"unknown type {col_type!r} for column {col_name!r}") from e
     new_v = s.version + 1
     _commit_log(
         path,
@@ -2496,8 +2518,8 @@ def add_column(path: str, col_name: str, col_type: str) -> int:
         {
             "add": [],
             "remove": [],
-            "schema_add": {"column": col_name, "type": col_type},
-            "op": "ADD COLUMN",
+            "schema_adds": [{"column": c, "type": t} for c, t in cols],
+            "op": "ADD COLUMN" if len(cols) == 1 else "ADD COLUMNS",
         },
     )
     return new_v
@@ -3419,7 +3441,7 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
                 op = "MERGE"
         detail = {
             k: entry[k]
-            for k in ("restore_of", "cloned_from", "schema_add",
+            for k in ("restore_of", "cloned_from", "schema_add", "schema_adds",
                       "schema_rename", "schema_drop", "constraint_add",
                       "constraint_drop", "partition_by")
             if k in entry

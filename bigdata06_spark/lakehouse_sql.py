@@ -12,13 +12,14 @@ Python DataSource's options between CREATE TABLE and the scan —
 path is unrecoverable (verified against the shipped
 `PythonDataSourceV2.getTable`; file-backed JVM sources smuggle the
 path inside the Table instance, which the Python bridge does not).
-`entry_points.sql()` therefore owns statement routing: lakehouse DDL
+`lakehouse_sql.sql()` therefore owns statement routing: lakehouse DDL
 registers the table as a temp view + a name→(path, key) registry
 entry, so subsequent plain-`spark.sql` SELECTs — and this module's
-DML — address it by name. Views are re-registered after every DML
-statement, so a reader never sees a stale snapshot through the name.
+DML — address it by name. Views are re-registered after every
+statement on a registered table, so a reader never sees a stale
+snapshot through the name.
 
-Grammar (the documented subset; anything outside it raises):
+Grammar (the documented subset):
 
     CREATE [OR REPLACE] TABLE <name> USING lakehouse
         [TBLPROPERTIES ('key' [=] '<keycol>')]
@@ -47,10 +48,16 @@ Grammar (the documented subset; anything outside it raises):
                    [ZORDER BY (c1, c2, ...) | INCREMENTAL]
     SHOW PARTITIONS <tbl>
     DESCRIBE HISTORY <tbl> [LIMIT <n>]
+    DESCRIBE DETAIL <tbl>
     RESTORE TABLE <tbl> TO { VERSION AS OF <n> |
                              TIMESTAMP AS OF '<ts>' }
     REORG TABLE <tbl> APPLY (PURGE)    -- DV purge: rewrite only
                                        -- deletion-vector files
+    ALTER TABLE <tbl> { ADD COLUMN[S] (c type, ...) |
+                        RENAME COLUMN a TO b | DROP COLUMN c |
+                        ADD CONSTRAINT n CHECK (expr) |
+                        DROP CONSTRAINT n }
+    GENERATE MANIFEST FOR TABLE <tbl>
     CONVERT TO LAKEHOUSE parquet.`/dir` [STATS (c1, ...)]
                                        -- zero-copy in-place adoption
     COPY INTO <tbl> FROM '<dir-or-glob>' [FILEFORMAT = PARQUET|CSV|JSON]
@@ -63,11 +70,21 @@ Grammar (the documented subset; anything outside it raises):
     SELECT ... FROM <tbl> TIMESTAMP AS OF '<ts>' ...    -- joins/CTEs too
 
 `<tbl>` is a registry name (from CREATE TABLE here) or an inline
-``lakehouse.`/path/to/table` `` reference. MERGE follows Delta's
-clause semantics: clauses apply first-match-wins, `UPDATE SET *` /
-`INSERT *` map columns by name. The MATCHED classification is plain
-DataFrame algebra over the current snapshot (semi/anti joins on the
-key), then ONE `lakehouse.merge` commit applies all legs atomically.
+``lakehouse.`/path/to/table` `` reference. Routing is one lookup:
+`sql()` matches the statement's head, resolves the `<tbl>` it names,
+and only a name that resolves reaches a handler. A statement whose
+`<tbl>` (for SHALLOW CLONE, `<src>`) names no lakehouse table goes to
+`spark.sql` unchanged, which raises Spark's own error for an unknown
+name; a lakehouse statement outside the grammar raises ValueError.
+
+Every keyword, comma and AS-OF reference is located by one scanner,
+`_scan`, which skips quoted strings and `backtick identifiers` and
+tracks paren depth — literal data never splits a statement. MERGE
+follows Delta's clause semantics: clauses apply first-match-wins,
+`UPDATE SET *` / `INSERT *` map columns by name. The MATCHED
+classification is plain DataFrame algebra over the current snapshot
+(semi/anti joins on the key), then ONE `lakehouse.merge` commit
+applies all legs atomically.
 
 Reference parity: the reference has no SQL layer at all (its
 "queries" are pandas method chains, 01_TestingPy/Spotify_API.py:
@@ -79,6 +96,8 @@ from __future__ import annotations
 
 import os
 import re
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,6 +107,13 @@ from bigdata06_spark import lakehouse as LH
 
 # name (lowercased) -> {"path": str, "key": str | None}
 _TABLES: dict[str, dict] = {}
+
+
+class _Table(NamedTuple):
+    ref: str           # as written in the statement
+    path: str
+    key: str | None    # clustering key, if registered with one
+    name: str | None   # registry name; None for lakehouse.`/path`
 
 
 def _version_df(spark: SparkSession, version: int) -> DataFrame:
@@ -166,120 +192,85 @@ def _refresh_view(spark: SparkSession, name: str) -> None:
     cache[key] = state
 
 
-def _resolve(ref: str) -> tuple[str, str | None, str | None]:
-    """Table reference → (path, key-or-None, registry-name-or-None).
-    Accepts a registry name or ``lakehouse.`/path```."""
-    ref = ref.strip()
-    m = re.fullmatch(r"lakehouse\.`([^`]+)`", ref, re.IGNORECASE)
+def _resolve(ref: str) -> _Table | None:
+    """Table reference (a registry name or ``lakehouse.`/path```) →
+    `_Table`; None when it names no lakehouse table."""
+    m = re.fullmatch(r"lakehouse\.`([^`]+)`", ref.strip(), re.IGNORECASE)
     if m:
-        return m.group(1), None, None
-    ent = _TABLES.get(ref.strip("`").lower())
-    if ent is None:
-        raise ValueError(
-            f"unknown lakehouse table {ref!r}: CREATE TABLE ... USING "
-            "lakehouse LOCATION it first (or use lakehouse.`/path`)"
-        )
-    return ent["path"], ent["key"], ref.strip("`").lower()
+        return _Table(ref, m.group(1), None, None)
+    name = ref.strip().strip("`").lower()
+    ent = _TABLES.get(name)
+    return _Table(ref, ent["path"], ent["key"], name) if ent else None
 
 
-def _need_key(key: str | None, ref: str, what: str) -> str:
-    if not key:
+def _need_key(t: _Table, what: str) -> str:
+    if not t.key:
         raise ValueError(
             f"{what} needs the table's clustering key; declare it at CREATE "
-            f"time — TBLPROPERTIES ('key' '<col>') — for {ref!r}"
+            f"time — TBLPROPERTIES ('key' '<col>') — for {t.ref!r}"
         )
-    return key
+    return t.key
 
 
-def _kw_at_depth0(s: str, pattern: str) -> list[int]:
-    """Start offsets of regex `pattern` occurrences at paren depth 0
-    and outside quoted strings or `backtick identifiers` —
-    keyword-splitting that doesn't get fooled by subqueries, literals,
-    or quoted column names containing keywords. (Doubled-quote escapes
-    ''like this'' scan correctly as adjacent literals.)"""
-    out: list[int] = []
+# ------------------------------------------------------------- lexing
+
+
+def _scan(s: str, pattern: str, any_depth: bool = False) -> list[re.Match]:
+    """The module's one lexer: non-overlapping matches of regex
+    `pattern` (case-insensitive) that start outside quoted strings
+    and `backtick identifiers`, at paren depth 0 — or at any depth
+    with `any_depth` (time-travel refs inside CTEs and subqueries).
+    A doubled-quote escape ('it''s') scans as two adjacent literals,
+    so nothing inside it is ever matched."""
+    rx = re.compile(pattern, re.IGNORECASE)
+    out: list[re.Match] = []
     depth = 0
     quote: str | None = None
     i = 0
-    rx = re.compile(pattern, re.IGNORECASE)
     while i < len(s):
         c = s[i]
         if quote:
             if c == quote:
                 quote = None
-            i += 1
-            continue
-        if c in "'\"`":
+        elif c in "'\"`":
             quote = c
         elif c == "(":
             depth += 1
         elif c == ")":
             depth -= 1
-        elif depth == 0:
+        elif depth == 0 or any_depth:
             m = rx.match(s, i)
             if m:
-                out.append(i)
-                i = m.end()
+                out.append(m)
+                i = max(m.end(), i + 1)
                 continue
         i += 1
     return out
 
 
-def _split_clauses(s: str, pattern: str) -> list[str]:
-    offs = _kw_at_depth0(s, pattern) + [len(s)]
-    return [s[a:b].strip() for a, b in zip(offs, offs[1:])]
+def _kw_at_depth0(s: str, pattern: str) -> list[int]:
+    """Start offsets of `pattern` at paren depth 0, outside quotes
+    and backticks (`_scan`)."""
+    return [m.start() for m in _scan(s, pattern)]
 
 
-def _split_depth0_commas(s: str) -> list[str]:
-    """Split on commas at paren depth 0 outside quotes/backticks —
-    the VALUES-list splitter (expressions may contain calls and
-    literal commas)."""
-    parts: list[str] = []
-    depth = 0
-    quote: str | None = None
-    start = 0
-    for i, c in enumerate(s):
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i].strip())
-            start = i + 1
-    parts.append(s[start:].strip())
-    return parts
+def _split(s: str, pattern: str = ",") -> list[str]:
+    """`s` cut at every depth-0 match of `pattern` (`_scan`), the
+    separators dropped and each part stripped: VALUES lists, SET
+    assignments and column specs split on commas, MERGE ON and
+    OPTIMIZE WHERE on AND, MERGE clauses on WHEN."""
+    cuts = [0]
+    for m in _scan(s, pattern):
+        cuts += [m.start(), m.end()]
+    cuts.append(len(s))
+    return [s[a:b].strip() for a, b in zip(cuts[::2], cuts[1::2])]
 
 
 def _parse_assignments(s: str) -> dict[str, str]:
-    """`a = expr, b = expr` → {col: expr-sql}; splits on depth-0
-    commas outside quotes/backticks so expressions may contain
+    """`a = expr, b = expr` → {col: expr-sql}; expressions may contain
     function calls and literal commas."""
-    parts: list[str] = []
-    depth = 0
-    quote: str | None = None
-    start = 0
-    for i, c in enumerate(s):
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
     out: dict[str, str] = {}
-    for p in parts:
-        q = p.strip()
+    for q in _split(s):
         if q.startswith("`"):  # `quoted col` = expr — '=' may appear inside
             end = q.find("`", 1)
             if end < 0 or "=" not in q[end:]:
@@ -296,46 +287,76 @@ def _parse_assignments(s: str) -> dict[str, str]:
     return out
 
 
+def _names(s: str) -> list[str]:
+    """A comma list of column names → the names, backticks stripped."""
+    return [c.strip("`") for c in _split(s)]
+
+
+def _tail(m: re.Match, pattern: str, grammar: str) -> re.Match:
+    """The statement text after its dispatch head `m`, fullmatched by
+    `pattern`; a statement outside `grammar` is loud."""
+    tm = re.fullmatch(pattern, m.string[m.end():],
+                      re.IGNORECASE | re.DOTALL)
+    if not tm:
+        raise ValueError(f"cannot parse {m.string!r}; expected {grammar}")
+    return tm
+
+
 # --------------------------------------------------------------- MERGE
 
-_MERGE_RX = re.compile(
-    r"MERGE\s+INTO\s+(?P<target>\S+(?:\s*`[^`]+`)?)"
-    r"(?:\s+AS)?\s+(?P<talias>[A-Za-z_]\w*)\s+USING\s+",
-    re.IGNORECASE,
-)
+
+def _first_match_wins(rows: DataFrame, clauses: list[tuple],
+                      leg) -> list[tuple[str, DataFrame]]:
+    """Delta's rule within one clause family: each row of `rows` goes
+    to the FIRST clause whose condition holds (a NULL condition does
+    not hold). `clauses` are (cond-sql-or-None, payload) pairs;
+    `leg(claimed_rows, payload)` turns a clause's rows into its
+    (kind, frame) merge leg."""
+    legs = []
+    remaining = F.lit(True)
+    for cond, payload in clauses:
+        holds = F.lit(True) if cond is None else \
+            F.coalesce(F.expr(cond), F.lit(False))
+        legs.append(leg(rows.filter(remaining & holds), payload))
+        remaining = remaining & ~holds
+    return legs
 
 
-def _sql_merge(spark: SparkSession, stmt: str) -> DataFrame:
-    m = _MERGE_RX.match(stmt)
-    if not m:
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  frames) if frames else None
+
+
+def _sql_merge(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    am = re.match(r"(?:\s+AS)?\s+(?P<talias>[A-Za-z_]\w*)\s+USING\s+",
+                  m.string[m.end():], re.IGNORECASE)
+    if not am:
         raise ValueError(
             "MERGE INTO requires explicit target and source aliases: "
             "MERGE INTO <tbl> t USING <src> s ON t.k = s.k ..."
         )
-    target_ref, talias = m.group("target"), m.group("talias")
-    rest = stmt[m.end():]
+    talias = am.group("talias")
+    rest = m.string[m.end() + am.end():]
 
     on_off = _kw_at_depth0(rest, r"\bON\b")
     if not on_off:
         raise ValueError("MERGE INTO is missing its ON clause")
-    src_part, on_rest = rest[: on_off[0]].strip(), rest[on_off[0] + 2:]
-
+    src_part = rest[: on_off[0]].strip()
     sm = re.fullmatch(r"(?P<src>\(.*\)|\S+)(?:\s+AS)?\s+(?P<salias>[A-Za-z_]\w*)",
                       src_part, re.IGNORECASE | re.DOTALL)
     if not sm:
         raise ValueError(f"cannot parse MERGE source {src_part!r}")
     src_sql, salias = sm.group("src"), sm.group("salias")
 
-    when_off = _kw_at_depth0(on_rest, r"\bWHEN\b")
-    if not when_off:
+    on_cond, *clauses = _split(rest[on_off[0] + 2:], r"\bWHEN\b")
+    if not clauses:
         raise ValueError("MERGE INTO has no WHEN clauses")
-    on_cond = on_rest[: when_off[0]].strip()
     keys: list[str] = []
-    for conj in re.split(r"\bAND\b", on_cond, flags=re.IGNORECASE):
+    for conj in _split(on_cond, r"\bAND\b"):
         om = re.fullmatch(
             rf"{talias}\.`?(?P<k1>\w+)`?\s*=\s*{salias}\.`?(?P<k2>\w+)`?"
             rf"|{salias}\.`?(?P<k3>\w+)`?\s*=\s*{talias}\.`?(?P<k4>\w+)`?",
-            conj.strip(), re.IGNORECASE,
+            conj, re.IGNORECASE,
         )
         if not om or (om.group("k1") or om.group("k4")) != \
                 (om.group("k2") or om.group("k3")):
@@ -346,27 +367,24 @@ def _sql_merge(spark: SparkSession, stmt: str) -> DataFrame:
         k = om.group("k1") or om.group("k4")
         if k not in keys:
             keys.append(k)
-
-    path, reg_key, reg_name = _resolve(target_ref)
-    if reg_key and reg_key not in keys:
+    if t.key and t.key not in keys:
         raise ValueError(
             f"MERGE keys on {keys} but the table's clustering key is "
-            f"{reg_key!r}; the library merge prunes/rewrites by clustering "
+            f"{t.key!r}; the library merge prunes/rewrites by clustering "
             "key, so the ON clause must include it"
         )
-    if reg_key:
+    if t.key:
         # clustering key FIRST: file-range pruning and write layout
         # run on the leading key
-        keys.sort(key=lambda k: k != reg_key)
-    key = keys[0]
+        keys.sort(key=lambda k: k != t.key)
 
-    clauses = _split_clauses(on_rest[when_off[0]:], r"\bWHEN\b")
-    matched: list[tuple[str | None, str, dict | None]] = []  # (cond, kind, sets)
-    by_source: list[tuple[str | None, str, dict | None]] = []
+    # (cond, (kind, sets)) per clause family, in statement order
+    matched: list[tuple] = []
+    by_source: list[tuple] = []
     insert_clauses: list[tuple] = []  # (cond, ins_map-or-None)
     for cl in clauses:
         cm = re.fullmatch(
-            r"WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s*(?:AND\s+(?P<cond>.*?))?"
+            r"NOT\s+MATCHED\s+BY\s+SOURCE\s*(?:AND\s+(?P<cond>.*?))?"
             r"\s*THEN\s+(?:(?P<del>DELETE)|UPDATE\s+SET\s+(?P<sets>.*))",
             cl, re.IGNORECASE | re.DOTALL,
         )
@@ -380,11 +398,10 @@ def _sql_merge(spark: SparkSession, stmt: str) -> DataFrame:
                         "UPDATE SET * is meaningless — name the assignments"
                     )
                 sets = _parse_assignments(s)
-            by_source.append((cm.group("cond"),
-                              "delete" if cm.group("del") else "update", sets))
+            by_source.append((cm.group("cond"), sets))
             continue
         cm = re.fullmatch(
-            r"WHEN\s+NOT\s+MATCHED\s*(?:AND\s+(?P<cond>.*?))?\s*THEN\s+"
+            r"NOT\s+MATCHED\s*(?:AND\s+(?P<cond>.*?))?\s*THEN\s+"
             r"INSERT\s+(?:\*|\(\s*(?P<icols>[^)]+?)\s*\)\s*"
             r"VALUES\s*\((?P<ivals>.*)\))",
             cl, re.IGNORECASE | re.DOTALL,
@@ -395,9 +412,8 @@ def _sql_merge(spark: SparkSession, stmt: str) -> DataFrame:
                 # Delta's explicit insert action: INSERT (c1, ...)
                 # VALUES (e1, ...) — exprs see the SOURCE row; unnamed
                 # target columns insert as NULL
-                names = [c.strip().strip("`")
-                         for c in cm.group("icols").split(",")]
-                vals = _split_depth0_commas(cm.group("ivals"))
+                names = _names(cm.group("icols"))
+                vals = _split(cm.group("ivals"))
                 if len(names) != len(vals):
                     raise ValueError(
                         f"INSERT names {len(names)} columns but VALUES "
@@ -411,163 +427,110 @@ def _sql_merge(spark: SparkSession, stmt: str) -> DataFrame:
             insert_clauses.append((cm.group("cond"), ins_map))
             continue
         cm = re.fullmatch(
-            r"WHEN\s+MATCHED\s*(?:AND\s+(?P<cond>.*?))?\s*THEN\s+"
+            r"MATCHED\s*(?:AND\s+(?P<cond>.*?))?\s*THEN\s+"
             r"(?:(?P<del>DELETE)|UPDATE\s+SET\s+(?P<sets>.*))",
             cl, re.IGNORECASE | re.DOTALL,
         )
         if not cm:
-            raise ValueError(f"cannot parse MERGE clause {cl!r}")
+            raise ValueError(f"cannot parse MERGE clause 'WHEN {cl}'")
         sets = None
         if not cm.group("del"):
             s = cm.group("sets").strip()
             sets = {} if s == "*" else _parse_assignments(s)
-        matched.append((cm.group("cond"),
-                        "delete" if cm.group("del") else "update", sets))
+        matched.append((cm.group("cond"), sets))
 
-    prev_v = LH.current_version(path)
-    tgt = LH.read_version(spark, path, prev_v).alias(talias)
+    tgt = LH.read_version(spark, t.path, LH.current_version(t.path)) \
+        .alias(talias)
     src = (spark.sql(f"SELECT * FROM {src_sql} __lh_src" if src_sql.startswith("(")
                      else f"SELECT * FROM {src_sql}")).alias(salias)
+    tgt_cols = tgt.columns
+
+    def check_sets(sets: dict) -> None:
+        unknown = sorted(set(sets) - set(tgt_cols))
+        if unknown:
+            raise ValueError(f"UPDATE SET targets unknown columns {unknown}")
+
+    def matched_leg(hit: DataFrame, sets: dict | None):
+        if sets is None:
+            return "delete", hit.select(
+                *[F.col(f"{salias}.{k}").alias(k) for k in keys])
+        check_sets(sets)
+
+        def value(c: str):
+            if c in sets:
+                return F.expr(sets[c])
+            if not sets and c in src.columns:  # UPDATE SET *: by name
+                return F.col(f"{salias}.{c}")
+            return F.col(f"{talias}.{c}")
+
+        return "update", hit.select(*[value(c).alias(c) for c in tgt_cols])
+
+    def by_source_leg(hit: DataFrame, sets: dict | None):
+        if sets is None:
+            return "delete", hit.select(*keys)
+        check_sets(sets)
+        return "update", hit.select(*[
+            (F.expr(sets[c]) if c in sets else F.col(c)).alias(c)
+            for c in tgt_cols
+        ])
+
+    def insert_leg(hit: DataFrame, ins_map: dict | None):
+        if ins_map is not None:
+            unknown = sorted(set(ins_map) - set(tgt_cols))
+            if unknown:
+                raise ValueError(f"INSERT names unknown columns {unknown}")
+            # unnamed target columns null-fill in merge's insert leg
+            hit = hit.select(*[F.expr(e).alias(c) for c, e in ins_map.items()])
+        return "insert", hit
 
     on_expr = F.lit(True)
     for k in keys:
         on_expr = on_expr & (F.col(f"{salias}.{k}") == F.col(f"{talias}.{k}"))
-    joined = src.join(tgt, on_expr, "inner")
-    tgt_cols = tgt.columns
-
-    updates = None
-    delete_keys = None
-    remaining = F.lit(True)  # first-match-wins across MATCHED clauses
-    for cond, kind, sets in matched:
-        claim = remaining
-        if cond is not None:
-            claim = claim & F.coalesce(F.expr(cond), F.lit(False))
-        hit = joined.filter(claim)
-        if kind == "delete":
-            d = hit.select(*[F.col(f"{salias}.{k}").alias(k) for k in keys])
-            delete_keys = d if delete_keys is None else delete_keys.unionAll(d)
-        else:
-            if sets == {}:  # UPDATE SET *: source row wins, by name
-                cols = [
-                    (F.col(f"{salias}.{c}") if c in src.columns
-                     else F.col(f"{talias}.{c}")).alias(c)
-                    for c in tgt_cols
-                ]
-            else:
-                cols = [
-                    (F.expr(sets[c]) if c in sets
-                     else F.col(f"{talias}.{c}")).alias(c)
-                    for c in tgt_cols
-                ]
-                unknown = sorted(set(sets) - set(tgt_cols))
-                if unknown:
-                    raise ValueError(f"UPDATE SET targets unknown columns "
-                                     f"{unknown}")
-            u = hit.select(*cols)
-            updates = u if updates is None else updates.unionByName(u)
-        if cond is not None:
-            remaining = remaining & ~F.coalesce(F.expr(cond), F.lit(False))
-        else:
-            remaining = F.lit(False)
-
-    # NOT MATCHED BY SOURCE (Delta): target rows with no source match;
-    # conditions/assignments see only the target row. Same
-    # first-match-wins discipline within the clause family.
+    legs = _first_match_wins(src.join(tgt, on_expr, "inner"), matched,
+                             matched_leg)
     if by_source:
-        unmatched = tgt.join(
-            src.select(*[F.col(f"{salias}.{k}").alias(k) for k in keys]),
-            keys, "left_anti"
-        )
-        remaining_bs = F.lit(True)
-        for cond, kind, sets in by_source:
-            claim = remaining_bs
-            if cond is not None:
-                claim = claim & F.coalesce(F.expr(cond), F.lit(False))
-            hit = unmatched.filter(claim)
-            if kind == "delete":
-                d = hit.select(*[F.col(k) for k in keys])
-                delete_keys = d if delete_keys is None \
-                    else delete_keys.unionAll(d)
-            else:
-                unknown = sorted(set(sets) - set(tgt_cols))
-                if unknown:
-                    raise ValueError(
-                        f"UPDATE SET targets unknown columns {unknown}")
-                u = hit.select(*[
-                    (F.expr(sets[c]) if c in sets else F.col(c)).alias(c)
-                    for c in tgt_cols
-                ])
-                updates = u if updates is None else updates.unionByName(u)
-            if cond is not None:
-                remaining_bs = remaining_bs & ~F.coalesce(F.expr(cond),
-                                                          F.lit(False))
-            else:
-                remaining_bs = F.lit(False)
-
-    inserts = None
+        # NOT MATCHED BY SOURCE (Delta): target rows with no source
+        # match; conditions/assignments see only the target row
+        legs += _first_match_wins(
+            tgt.join(src.select(*[F.col(f"{salias}.{k}").alias(k)
+                                  for k in keys]), keys, "left_anti"),
+            by_source, by_source_leg)
     if insert_clauses:
-        # several WHEN NOT MATCHED clauses apply FIRST-MATCH-WINS,
-        # exactly like the MATCHED family (Delta's multi-insert MERGE)
-        unmatched = src.join(
-            tgt.select(*[F.col(f"{talias}.{k}").alias(k) for k in keys]),
-            keys, "left_anti")
-        remaining_i = F.lit(True)
-        for cond, ins_map in insert_clauses:
-            claim = remaining_i
-            if cond is not None:
-                claim = claim & F.coalesce(F.expr(cond), F.lit(False))
-            hit = unmatched.filter(claim)
-            if ins_map is not None:
-                unknown = sorted(set(ins_map) - set(tgt_cols))
-                if unknown:
-                    raise ValueError(
-                        f"INSERT names unknown columns {unknown}")
-                hit = hit.select(*[
-                    F.expr(e).alias(c) for c, e in ins_map.items()
-                ])  # unnamed target columns null-fill in merge's leg
-            inserts = hit if inserts is None else inserts.unionByName(
-                hit, allowMissingColumns=True)
-            if cond is not None:
-                remaining_i = remaining_i & ~F.coalesce(F.expr(cond),
-                                                        F.lit(False))
-            else:
-                remaining_i = F.lit(False)
+        legs += _first_match_wins(
+            src.join(tgt.select(*[F.col(f"{talias}.{k}").alias(k)
+                                  for k in keys]), keys, "left_anti"),
+            insert_clauses, insert_leg)
 
-    new_v = LH.merge(spark, path, keys if len(keys) > 1 else key,
-                     updates=updates, delete_keys=delete_keys,
-                     inserts=inserts)
-    if reg_name:
-        _refresh_view(spark, reg_name)
+    def leg_frames(kind: str) -> DataFrame | None:
+        return _union([df for k, df in legs if k == kind])
+
+    new_v = LH.merge(spark, t.path, keys if len(keys) > 1 else keys[0],
+                     updates=leg_frames("update"),
+                     delete_keys=leg_frames("delete"),
+                     inserts=leg_frames("insert"))
     return _version_df(spark, new_v)
 
 
 # ----------------------------------------------------- other statements
 
 
-def _sql_create(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(
-        r"CREATE\s+(?:(?P<replace>OR\s+REPLACE)\s+)?TABLE\s+(?P<name>[\w`.]+)\s+"
-        r"USING\s+lakehouse\s*"
+def _sql_create(spark: SparkSession, m: re.Match, _t: None) -> DataFrame:
+    tm = _tail(
+        m,
+        r"\s+(?P<name>[\w`.]+)\s+USING\s+lakehouse\s*"
         r"(?:TBLPROPERTIES\s*\(\s*'key'\s*=?\s*'(?P<key>\w+)'\s*\)\s*)?"
         r"(?:PARTITIONED\s+BY\s*\(\s*(?P<pby>[^)]+?)\s*\)\s*)?"
         r"LOCATION\s+'(?P<path>[^']+)'\s*"
         r"(?:TBLPROPERTIES\s*\(\s*'key'\s*=?\s*'(?P<key2>\w+)'\s*\)\s*)?"
         r"(?:AS\s+(?P<query>.+))?",
-        stmt, re.IGNORECASE | re.DOTALL,
+        "CREATE TABLE <name> USING lakehouse [TBLPROPERTIES ('key' '<col>')] "
+        "[PARTITIONED BY (c1, ...)] LOCATION '<path>' [AS <query>]",
     )
-    if not m:
-        raise ValueError(
-            "cannot parse CREATE TABLE; expected: CREATE TABLE <name> USING "
-            "lakehouse [TBLPROPERTIES ('key' '<col>')] "
-            "[PARTITIONED BY (c1, ...)] LOCATION '<path>' [AS <query>]"
-        )
-    name = m.group("name").strip("`")
-    path = m.group("path")
-    key = m.group("key") or m.group("key2")
-    pby = None
-    if m.group("pby"):
-        pby = [c.strip().strip("`") for c in m.group("pby").split(",")]
-    query = m.group("query")
+    name = tm.group("name").strip("`")
+    path = tm.group("path")
+    key = tm.group("key") or tm.group("key2")
+    pby = _names(tm.group("pby")) if tm.group("pby") else None
+    query = tm.group("query")
     if query:
         df = spark.sql(query)
         key = key or df.columns[0]
@@ -611,48 +574,31 @@ def _sql_create(spark: SparkSession, stmt: str) -> DataFrame:
     return _version_df(spark, LH.current_version(path))
 
 
-def _sql_update(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.match(
-        r"UPDATE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+SET\s+",
-        stmt, re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse UPDATE statement {stmt!r}")
-    rest = stmt[m.end():]
+def _sql_update(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tm = _tail(m, r"\s+SET\s+(?P<body>.+)", "UPDATE <tbl> SET c = expr, "
+               "... [WHERE <cond>]")
+    body = tm.group("body")
     # WHERE found quote/paren-aware, not by regex: a SET value literal
     # containing ' WHERE ' must not split the statement there
-    w = _kw_at_depth0(rest, r"\bWHERE\b")
-    sets_sql = rest[: w[0]] if w else rest
-    cond_sql = rest[w[0] + 5:].strip() if w else None
+    w = _kw_at_depth0(body, r"\bWHERE\b")
+    sets_sql = body[: w[0]] if w else body
+    cond_sql = body[w[0] + 5:].strip() if w else None
     if not sets_sql.strip():
-        raise ValueError(f"cannot parse UPDATE statement {stmt!r}")
-    path, key, name = _resolve(m.group("tbl"))
-    key = _need_key(key, m.group("tbl"), "UPDATE")
+        raise ValueError(f"cannot parse UPDATE statement {m.string!r}")
+    key = _need_key(t, "UPDATE")
     sets = {c: F.expr(e) for c, e in _parse_assignments(sets_sql).items()}
     pred = cond_sql if cond_sql else F.lit(True)
-    v = LH.update_where(spark, path, key, sets, pred)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+    return _version_df(spark, LH.update_where(spark, t.path, key, sets, pred))
 
 
-def _sql_delete(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(
-        r"DELETE\s+FROM\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)"
-        r"(?:\s+WHERE\s+(?P<cond>.+))?",
-        stmt, re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse DELETE statement {stmt!r}")
-    path, _key, name = _resolve(m.group("tbl"))
-    pred = m.group("cond") if m.group("cond") else F.lit(True)
-    v = LH.delete_where(spark, path, pred)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+def _sql_delete(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tm = _tail(m, r"(?:\s+WHERE\s+(?P<cond>.+))?",
+               "DELETE FROM <tbl> [WHERE <cond>]")
+    pred = tm.group("cond") if tm.group("cond") else F.lit(True)
+    return _version_df(spark, LH.delete_where(spark, t.path, pred))
 
 
-def _sql_insert(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_insert(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """INSERT INTO <tbl> [(cols)] VALUES ... | SELECT ... — Delta's
     blind append (duplicates allowed; dedup is MERGE's job). With a
     registered clustering key the rows go through `lakehouse.append`,
@@ -662,50 +608,42 @@ def _sql_insert(spark: SparkSession, stmt: str) -> DataFrame:
     inherits its loud-reject contract for such tables. Values bind
     positionally; named column lists null-fill the rest; extra or
     unknown columns are loud."""
-    m = re.match(
-        r"INSERT\s+(?:INTO|(?P<ovw>OVERWRITE)(?:\s+TABLE)?)\s+"
-        r"(?P<tbl>\S+(?:\s*`[^`]+`)?)\s*"
-        r"(?:\(\s*(?P<cols>[^)]+?)\s*\)\s*)?",
-        stmt, re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse INSERT statement {stmt!r}")
-    rest = stmt[m.end():]
+    grammar = ("INSERT { INTO | OVERWRITE [TABLE] } <tbl> [(c1, ...)] "
+               "[REPLACE WHERE <cond>] { VALUES ... | SELECT ... }")
+    tm = _tail(m, r"\s*(?:\(\s*(?P<cols>[^)]+?)\s*\)\s*)?(?P<rest>.*)",
+               grammar)
+    rest = tm.group("rest")
     # the body starts at the first DEPTH-0 SELECT/VALUES — a REPLACE
     # WHERE condition may itself contain a parenthesized subquery
     # SELECT, which a lazy-regex lookahead would wrongly split on
     body_off = _kw_at_depth0(rest, r"\b(?:SELECT|VALUES)\b")
     if not body_off:
-        raise ValueError(f"cannot parse INSERT statement {stmt!r}")
+        raise ValueError(f"cannot parse {m.string!r}; expected {grammar}")
     head, body = rest[: body_off[0]].strip(), rest[body_off[0]:]
     rw = None
     if head:
         hm = re.fullmatch(r"REPLACE\s+WHERE\s+(?P<rw>.+)", head,
                           re.IGNORECASE | re.DOTALL)
         if not hm:
-            raise ValueError(f"cannot parse INSERT statement {stmt!r}")
+            raise ValueError(f"cannot parse {m.string!r}; expected {grammar}")
         rw = hm.group("rw").strip()
     if m.group("ovw") and rw:
         raise ValueError(
             "use INSERT OVERWRITE (whole table) or INSERT INTO ... "
             "REPLACE WHERE (predicate region), not both")
-    path, key, name = _resolve(m.group("tbl"))
     from bigdata06_spark.sources.lakehouse_datasource import (
         register as _register_ds,
     )
 
     _register_ds(spark)
     df = spark.sql(body)
-    tgt = spark.read.format("lakehouse").load(path).schema
-    ident = LH.table_identity(path)
+    tgt = spark.read.format("lakehouse").load(t.path).schema
+    ident = LH.table_identity(t.path)
     if ident:
         # the table allocates its identity column; INSERT may not
         # bind it (positionally or by name) — drop it from the target
         tgt = type(tgt)([f for f in tgt.fields if f.name != ident["col"]])
-    if m.group("cols"):
-        names = [c.strip().strip("`") for c in m.group("cols").split(",")]
-    else:
-        names = tgt.fieldNames()
+    names = _names(tm.group("cols")) if tm.group("cols") else tgt.fieldNames()
     unknown = [c for c in names if c not in tgt.fieldNames()]
     if unknown:
         raise ValueError(f"INSERT names unknown columns {unknown}")
@@ -725,41 +663,43 @@ def _sql_insert(spark: SparkSession, stmt: str) -> DataFrame:
         # one atomic commit swaps the region (or the whole table) for
         # `out` — time travel keeps the old region, readers never see
         # a half-replaced state
-        key = _need_key(key, m.group("tbl"),
-                        "REPLACE WHERE / INSERT OVERWRITE")
-        pred = rw if rw else "true"
-        LH.overwrite_where(spark, path, key, out, predicate=pred)
-    elif key:
-        LH.append(spark, path, key, out)
+        key = _need_key(t, "REPLACE WHERE / INSERT OVERWRITE")
+        LH.overwrite_where(spark, t.path, key, out, predicate=rw or "true")
+    elif t.key:
+        LH.append(spark, t.path, t.key, out)
     else:
-        out.write.format("lakehouse").mode("append").save(path)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, LH.current_version(path))
+        out.write.format("lakehouse").mode("append").save(t.path)
+    return _version_df(spark, LH.current_version(t.path))
 
 
-def _sql_vacuum(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(
-        r"VACUUM\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)"
-        r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?"
-        r"(?:\s+(?P<dry>DRY\s+RUN))?",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse VACUUM statement {stmt!r}")
-    path, _key, _name = _resolve(m.group("tbl"))
-    if m.group("dry"):
+def _sql_vacuum(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tm = _tail(m, r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?"
+                  r"(?:\s+(?P<dry>DRY\s+RUN))?",
+               "VACUUM <tbl> [RETAIN <n> VERSIONS] [DRY RUN]")
+    keep = int(tm.group("n") or 1)
+    if tm.group("dry"):
         # Delta's VACUUM ... DRY RUN: list the would-delete set,
         # remove nothing — the operator's check-before-reclaim step
-        would = LH.vacuum(path, keep_versions=int(m.group("n") or 1),
-                          dry_run=True)
-        return spark.createDataFrame([(f,) for f in would] or
-                                     [], "path string")
-    removed = LH.vacuum(path, keep_versions=int(m.group("n") or 1))
-    return spark.createDataFrame(
-        [(int(len(removed) if hasattr(removed, "__len__") else removed),)],
-        "files_removed long",
-    )
+        would = LH.vacuum(t.path, keep_versions=keep, dry_run=True)
+        return spark.createDataFrame([(f,) for f in would], "path string")
+    removed = LH.vacuum(t.path, keep_versions=keep)
+    return spark.createDataFrame([(len(removed),)], "files_removed long")
+
+
+#: one partition-predicate literal: a quoted string (doubled-quote
+#: escapes allowed) or a bare token
+_LITERAL = r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|[^\s'\"(),]+"
+
+
+def _literal_value(tok: str) -> str:
+    """A `_LITERAL` → its path-encoded partition value (quotes
+    stripped, doubled quotes unescaped)."""
+    tok = tok.strip()
+    if not re.fullmatch(_LITERAL, tok):
+        raise ValueError(f"expected one literal value, got {tok!r}")
+    if tok[0] in "'\"":
+        return tok[1:-1].replace(tok[0] * 2, tok[0])
+    return tok
 
 
 def _parse_partition_predicate(cond: str) -> dict:
@@ -768,44 +708,24 @@ def _parse_partition_predicate(cond: str) -> dict:
     `partitions={col: [values]}`. Values strip quotes (partition
     pruning compares path-encoded strings)."""
     out: dict[str, list[str]] = {}
-
-    def _val(tok: str) -> str:
-        tok = tok.strip()
-        if len(tok) >= 2 and tok[0] == tok[-1] and tok[0] in "'\"":
-            return tok[1:-1]
-        return tok
-
-    for conj in re.split(r"\bAND\b", cond, flags=re.IGNORECASE):
-        conj = conj.strip()
-        m = re.fullmatch(r"`?(\w+)`?\s*=\s*(\S+)", conj)
-        if m:
-            out.setdefault(m.group(1), []).append(_val(m.group(2)))
-            continue
-        m = re.fullmatch(r"`?(\w+)`?\s+IN\s*\(([^)]*)\)", conj,
-                         re.IGNORECASE)
-        if m:
-            out.setdefault(m.group(1), []).extend(
-                _val(t) for t in m.group(2).split(","))
-            continue
-        raise ValueError(
-            "OPTIMIZE WHERE supports AND-conjoined partition equality/IN "
-            f"predicates only, got {conj!r}"
-        )
+    for conj in _split(cond, r"\bAND\b"):
+        m = re.fullmatch(r"`?(\w+)`?\s*(?:=\s*(?P<eq>.+)|IN\s*\((?P<in>.*)\))",
+                         conj, re.IGNORECASE | re.DOTALL)
+        if not m:
+            raise ValueError(
+                "OPTIMIZE WHERE supports AND-conjoined partition equality/IN "
+                f"predicates only, got {conj!r}"
+            )
+        toks = [m.group("eq")] if m.group("eq") else _split(m.group("in"))
+        out.setdefault(m.group(1), []).extend(_literal_value(v) for v in toks)
     return out
 
 
-def _sql_optimize(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.match(
-        r"OPTIMIZE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse OPTIMIZE statement {stmt!r}")
-    tail = stmt[m.end():]
+def _sql_optimize(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tail = m.string[m.end():]
     # clause keywords located quote/backtick-aware (advisor r7): a
     # quoted partition value containing ' ZORDER BY (' or
-    # ' INCREMENTAL' must not split the WHERE predicate there — same
-    # _kw_at_depth0 scanning UPDATE and INSERT use
+    # ' INCREMENTAL' must not split the WHERE predicate there
     w_offs = _kw_at_depth0(tail, r"\bWHERE\b")
     w = w_offs[0] if w_offs else None
     # a ZORDER BY / INCREMENTAL occurrence is only a CLAUSE if the
@@ -837,7 +757,7 @@ def _sql_optimize(spark: SparkSession, stmt: str) -> DataFrame:
     end = len(tail)
     first = min((x for x in (w, z, inc) if x is not None), default=end)
     if tail[:first].strip():
-        raise ValueError(f"cannot parse OPTIMIZE statement {stmt!r}")
+        raise ValueError(f"cannot parse OPTIMIZE statement {m.string!r}")
     where_sql = None
     if w is not None:
         nxt = min((x for x in (z, inc) if x is not None), default=end)
@@ -847,91 +767,62 @@ def _sql_optimize(spark: SparkSession, stmt: str) -> DataFrame:
         where_sql = tail[w + len("WHERE"):nxt].strip()
         if not where_sql:
             raise ValueError("empty WHERE clause in OPTIMIZE")
-    zo = None
-    if z is not None:
-        mz = re.fullmatch(r"ZORDER\s+BY\s*\(\s*(?P<cols>[^)]+)\)\s*",
-                          tail[z:], re.IGNORECASE | re.DOTALL)
-        if not mz:
-            raise ValueError(f"cannot parse ZORDER BY clause in {stmt!r}")
-        zo = [c.strip().strip("`") for c in mz.group("cols").split(",")]
-    if inc is not None and tail[inc:].strip().upper() != "INCREMENTAL":
-        raise ValueError(f"trailing text after INCREMENTAL in {stmt!r}")
-    path, key, name = _resolve(m.group("tbl"))
     if inc is not None:
         if where_sql:
             raise ValueError("OPTIMIZE INCREMENTAL takes no WHERE clause")
         # incremental clustering: fold post-OPTIMIZE files into the
         # frozen grid; no key needed (the grid is the layout)
-        v = LH.optimize_zorder_incremental(spark, path)
-    else:
-        key = _need_key(key, m.group("tbl"), "OPTIMIZE")
-        parts = None
-        if where_sql:
-            # Delta's OPTIMIZE ... WHERE: partition-scoped compaction —
-            # only matching partitions' files rewrite, cold partitions
-            # carry over by reference
-            parts = _parse_partition_predicate(where_sql)
-        v = LH.optimize(spark, path, key, zorder_by=zo, partitions=parts)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+        return _version_df(spark, LH.optimize_zorder_incremental(spark, t.path))
+    zo = None
+    if z is not None:
+        zo = _names(re.fullmatch(r"ZORDER\s+BY\s*\(\s*(?P<cols>[^)]+)\)\s*",
+                                 tail[z:], re.IGNORECASE | re.DOTALL)
+                    .group("cols"))
+    key = _need_key(t, "OPTIMIZE")
+    # Delta's OPTIMIZE ... WHERE: partition-scoped compaction — only
+    # matching partitions' files rewrite, cold partitions carry over by
+    # reference
+    parts = _parse_partition_predicate(where_sql) if where_sql else None
+    return _version_df(spark, LH.optimize(spark, t.path, key, zorder_by=zo,
+                                          partitions=parts))
 
 
-def _sql_history(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(r"DESCRIBE\s+HISTORY\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)"
-                     r"(?:\s+LIMIT\s+(?P<n>\d+))?",
-                     stmt, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"cannot parse DESCRIBE HISTORY {stmt!r}")
-    path, _key, _name = _resolve(m.group("tbl"))
-    hist = LH.describe_history(spark, path)
-    if m.group("n"):
+def _sql_history(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tm = _tail(m, r"(?:\s+LIMIT\s+(?P<n>\d+))?",
+               "DESCRIBE HISTORY <tbl> [LIMIT <n>]")
+    hist = LH.describe_history(spark, t.path)
+    if tm.group("n"):
         # Delta's LIMIT: the n MOST RECENT commits
-        hist = hist.orderBy(F.desc("version")).limit(int(m.group("n")))
+        hist = hist.orderBy(F.desc("version")).limit(int(tm.group("n")))
     return hist
 
 
-def _sql_convert(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(
-        r"CONVERT\s+TO\s+LAKEHOUSE\s+(?:parquet\.)?`(?P<path>[^`]+)`"
-        r"(?:\s+STATS\s+\(\s*(?P<cols>[^)]+)\))?",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse CONVERT statement {stmt!r}")
-    cols = None
-    if m.group("cols"):
-        cols = [c.strip().strip("`") for c in m.group("cols").split(",")]
-    v = LH.convert_to_lakehouse(spark, m.group("path"), stats_cols=cols)
-    return _version_df(spark, v)
+def _sql_convert(spark: SparkSession, m: re.Match, _t: None) -> DataFrame:
+    tm = _tail(m, r"(?:\s+STATS\s+\(\s*(?P<cols>[^)]+)\))?",
+               "CONVERT TO LAKEHOUSE parquet.`/dir` [STATS (c1, ...)]")
+    cols = _names(tm.group("cols")) if tm.group("cols") else None
+    return _version_df(spark, LH.convert_to_lakehouse(
+        spark, m.group("path"), stats_cols=cols))
 
 
-def _sql_restore(spark: SparkSession, stmt: str) -> DataFrame:
-    m = re.fullmatch(
-        r"RESTORE\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+"
-        r"TO\s+(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
-        r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse RESTORE statement {stmt!r}")
-    path, _key, name = _resolve(m.group("tbl"))
-    if m.group("v") is not None:
-        to_v = int(m.group("v"))
+def _sql_restore(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
+    tm = _tail(m, r"\s+TO\s+(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
+                  r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
+               "RESTORE TABLE <tbl> TO { VERSION AS OF <n> | "
+               "TIMESTAMP AS OF '<ts>' }")
+    if tm.group("v") is not None:
+        to_v = int(tm.group("v"))
     else:
         # Delta's RESTORE ... TIMESTAMP AS OF: the latest version
         # committed at-or-before the timestamp (epoch seconds or the
         # formats version_at_timestamp accepts)
-        to_v = LH.version_at_timestamp(path, _parse_asof_ts(m.group("ts")))
-    v = LH.restore(path, to_v)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+        to_v = LH.version_at_timestamp(t.path, _parse_asof_ts(tm.group("ts")))
+    return _version_df(spark, LH.restore(t.path, to_v))
 
 
 def _parse_asof_ts(ts: str) -> float:
     """AS-OF timestamp string → epoch seconds: bare epoch floats or
-    ISO datetimes (the same forms the SELECT-side rewrite accepts)."""
+    ISO datetimes (RESTORE and SELECT-side time travel alike)."""
     try:
         return float(ts)
     except ValueError:
@@ -940,45 +831,30 @@ def _parse_asof_ts(ts: str) -> float:
         return datetime.fromisoformat(ts).timestamp()
 
 
-def _sql_reorg(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_reorg(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """REORG TABLE <tbl> APPLY (PURGE) — Delta's deletion-vector
     purge: rewrite only the DV-carrying files, materializing the
     soft deletes; O(DV files), never O(table)."""
-    m = re.fullmatch(
-        r"REORG\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+"
-        r"APPLY\s*\(\s*PURGE\s*\)",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse REORG statement {stmt!r}")
-    path, key, name = _resolve(m.group("tbl"))
-    key = _need_key(key, m.group("tbl"), "REORG")
-    v = LH.reorg_purge(spark, path, key)
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+    _tail(m, r"\s+APPLY\s*\(\s*PURGE\s*\)", "REORG TABLE <tbl> APPLY (PURGE)")
+    return _version_df(spark, LH.reorg_purge(spark, t.path,
+                                             _need_key(t, "REORG")))
 
 
-def _sql_alter(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_alter(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """ALTER TABLE — the Delta schema-evolution statement set, each
     form a ZERO-REWRITE metadata version via the library's
     schema-action log:
       ALTER TABLE t ADD COLUMN[S] (name type[, ...])   | one version
-      ALTER TABLE t RENAME COLUMN a TO b               | per action
+      ALTER TABLE t RENAME COLUMN a TO b               | per statement
       ALTER TABLE t DROP COLUMN c
       ALTER TABLE t ADD CONSTRAINT n CHECK (expr)
-      ALTER TABLE t DROP CONSTRAINT n"""
-    m = re.match(r"ALTER\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+(?P<rest>.+)",
-                 stmt, re.IGNORECASE | re.DOTALL)
-    if not m:
-        raise ValueError(f"cannot parse ALTER TABLE statement {stmt!r}")
-    path, _key, name = _resolve(m.group("tbl"))
-    rest = m.group("rest").strip()
-
-    v = None
-    am = re.fullmatch(
-        r"ADD\s+COLUMNS?\s*\(?\s*(?P<cols>.+?)\s*\)?", rest,
-        re.IGNORECASE | re.DOTALL)
+      ALTER TABLE t DROP CONSTRAINT n
+    ADD COLUMNS checks every name and type before it commits, so a
+    bad column commits nothing."""
+    rest = _tail(m, r"\s+(?P<rest>.+)", "ALTER TABLE <tbl> <action>") \
+        .group("rest").strip()
+    am = re.fullmatch(r"ADD\s+COLUMNS?\s+(?P<cols>.+)", rest,
+                      re.IGNORECASE | re.DOTALL)
     rm = re.fullmatch(
         r"RENAME\s+COLUMN\s+`?(?P<old>\w+)`?\s+TO\s+`?(?P<new>\w+)`?",
         rest, re.IGNORECASE)
@@ -989,77 +865,54 @@ def _sql_alter(spark: SparkSession, stmt: str) -> DataFrame:
     dcm = re.fullmatch(r"DROP\s+CONSTRAINT\s+`?(?P<name>\w+)`?",
                        rest, re.IGNORECASE)
     if rm:
-        v = LH.rename_column(spark, path, rm.group("old"), rm.group("new"))
+        v = LH.rename_column(spark, t.path, rm.group("old"), rm.group("new"))
     elif dm:
-        v = LH.drop_column(spark, path, dm.group("col"))
+        v = LH.drop_column(spark, t.path, dm.group("col"))
     elif acm:
-        v = LH.add_constraint(spark, path, acm.group("name"),
+        v = LH.add_constraint(spark, t.path, acm.group("name"),
                               acm.group("expr").strip())
     elif dcm:
-        v = LH.drop_constraint(path, dcm.group("name"))
+        v = LH.drop_constraint(t.path, dcm.group("name"))
     elif am:
-        for part in _split_top_level_commas(am.group("cols")):
-            cm = re.fullmatch(r"`?(?P<col>\w+)`?\s+(?P<type>.+)", part.strip(),
+        cols = am.group("cols").strip()
+        if cols.startswith("(") and cols.endswith(")"):
+            cols = cols[1:-1]
+        specs = []
+        for part in _split(cols):
+            cm = re.fullmatch(r"`?(?P<col>\w+)`?\s+(?P<type>.+)", part,
                               re.DOTALL)
             if not cm:
                 raise ValueError(f"cannot parse ADD COLUMN spec {part!r}")
-            v = LH.add_column(path, cm.group("col"), cm.group("type").strip())
+            specs.append((cm.group("col"), cm.group("type").strip()))
+        v = LH.add_columns(t.path, specs)
     else:
         raise ValueError(f"unsupported ALTER TABLE action {rest!r}")
-    if name:
-        _refresh_view(spark, name)
     return _version_df(spark, v)
 
 
-def _split_top_level_commas(s: str) -> list[str]:
-    """'a int, b decimal(10,2)' → ['a int', 'b decimal(10,2)'] —
-    commas inside parens (decimal precision) don't split."""
-    out, depth, cur = [], 0, []
-    for c in s:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    if "".join(cur).strip():
-        out.append("".join(cur))
-    return out
-
-
-def _sql_detail(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_detail(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """DESCRIBE DETAIL — Delta's one-row table-metadata summary:
     format, location, current version, file count and byte size,
     partition columns, live deletion-vector count, clustering key,
     stats/bloom columns. Metadata-only (log + file sizes; no data
     I/O)."""
-    import os as _os
-
-    m = re.fullmatch(r"DESCRIBE\s+DETAIL\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-                     stmt, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"cannot parse DESCRIBE DETAIL {stmt!r}")
-    path, key, _name = _resolve(m.group("tbl"))
-    v = LH.current_version(path)
+    _tail(m, r"\s*", "DESCRIBE DETAIL <tbl>")
+    v = LH.current_version(t.path)
     if v < 0:
-        raise ValueError(f"no lakehouse table at {path}")
-    snap = LH.snapshot(path, v)
+        raise ValueError(f"no lakehouse table at {t.path}")
+    snap = LH.snapshot(t.path, v)
     files, dvs = snap.files, snap.dvs
     size = 0
     for f in files:
-        p = f if _os.path.isabs(f) else _os.path.join(path, f)
         try:
-            size += _os.path.getsize(p)
+            size += os.path.getsize(os.path.join(t.path, f))
         except OSError:
             pass
     row = (
-        "lakehouse", path, int(v), len(files), int(size),
+        "lakehouse", t.path, int(v), len(files), int(size),
         ",".join(snap.pby),
         sum(len(x) for x in dvs.values()),
-        key or "", ",".join(snap.scols),
+        t.key or "", ",".join(snap.scols),
     )
     return spark.createDataFrame(
         [row],
@@ -1070,7 +923,7 @@ def _sql_detail(spark: SparkSession, stmt: str) -> DataFrame:
     )
 
 
-def _sql_generate(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_generate(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """GENERATE MANIFEST FOR TABLE <t> — Delta's `GENERATE ... FOR
     TABLE` shape, targeting this format's relational snapshot
     manifest (lakehouse_manifest.refresh_manifest): folds the log
@@ -1078,21 +931,15 @@ def _sql_generate(spark: SparkSession, stmt: str) -> DataFrame:
     on checkpoint/RESTORE. Returns (version, mode, dir)."""
     from bigdata06_spark import lakehouse_manifest as M
 
-    m = re.fullmatch(
-        r"GENERATE\s+MANIFEST\s+FOR\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse GENERATE statement {stmt!r}")
-    path, _key, _name = _resolve(m.group("tbl"))
-    r = M.refresh_manifest(spark, path)
+    _tail(m, r"\s*", "GENERATE MANIFEST FOR TABLE <tbl>")
+    r = M.refresh_manifest(spark, t.path)
     return spark.createDataFrame(
         [(int(r["version"]), r["mode"], r["dir"])],
         "version int, mode string, dir string",
     )
 
 
-def _sql_copy(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_copy(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """COPY INTO <tbl> FROM '<dir-or-glob>' [FILEFORMAT = PARQUET|CSV|
     JSON] — Delta's idempotent bulk load: only source files whose
     `<abs-path>:<size>` tag is absent from the table's cumulative
@@ -1100,64 +947,44 @@ def _sql_copy(spark: SparkSession, stmt: str) -> DataFrame:
     re-running the statement is a no-op and a grown landing directory
     loads exactly its new files. Returns
     (version, num_files_loaded, num_rows_loaded)."""
-    m = re.fullmatch(
-        r"COPY\s+INTO\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+"
-        r"FROM\s+'(?P<src>[^']+)'"
-        r"(?:\s+FILEFORMAT\s*=\s*(?P<fmt>\w+))?",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(
-            "cannot parse COPY INTO; expected: COPY INTO <tbl> FROM "
-            "'<dir-or-glob>' [FILEFORMAT = PARQUET|CSV|JSON]"
-        )
-    path, key, name = _resolve(m.group("tbl"))
-    key = _need_key(key, m.group("tbl"), "COPY INTO")
+    tm = _tail(m, r"\s+FROM\s+'(?P<src>[^']+)'"
+                  r"(?:\s+FILEFORMAT\s*=\s*(?P<fmt>\w+))?",
+               "COPY INTO <tbl> FROM '<dir-or-glob>' "
+               "[FILEFORMAT = PARQUET|CSV|JSON]")
     v, n_files, n_rows = LH.copy_into(
-        spark, path, key, m.group("src"), (m.group("fmt") or "parquet")
+        spark, t.path, _need_key(t, "COPY INTO"), tm.group("src"),
+        (tm.group("fmt") or "parquet")
     )
-    if name:
-        _refresh_view(spark, name)
     return spark.createDataFrame(
         [(int(v), int(n_files), int(n_rows))],
         "version int, num_files_loaded int, num_rows_loaded bigint",
     )
 
 
-def _sql_truncate(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_truncate(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """TRUNCATE TABLE <tbl> — delete every live row as a NEW version
     (history stays time-travelable; vacuum reclaims the files)."""
-    m = re.fullmatch(r"TRUNCATE\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-                     stmt, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"cannot parse TRUNCATE statement {stmt!r}")
-    path, _key, name = _resolve(m.group("tbl"))
-    v = LH.delete_where(spark, path, F.lit(True))
-    if name:
-        _refresh_view(spark, name)
-    return _version_df(spark, v)
+    _tail(m, r"\s*", "TRUNCATE TABLE <tbl>")
+    return _version_df(spark, LH.delete_where(spark, t.path, F.lit(True)))
 
 
-def _sql_show_partitions(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_show_partitions(spark: SparkSession, m: re.Match,
+                         t: _Table) -> DataFrame:
     """SHOW PARTITIONS <tbl> — the distinct live partition-value
     tuples. Planned through the snapshot manifest when fresh (pushed
     distinct over the p_ columns, collect bounded by partitions);
     driver log-replay fallback otherwise."""
-    m = re.fullmatch(r"SHOW\s+PARTITIONS\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-                     stmt, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"cannot parse SHOW PARTITIONS {stmt!r}")
-    path, _key, _name = _resolve(m.group("tbl"))
-    pby = LH.table_partition_by(path)
+    _tail(m, r"\s*", "SHOW PARTITIONS <tbl>")
+    pby = LH.table_partition_by(t.path)
     if not pby:
-        raise ValueError(f"{m.group('tbl')!r} is not a partitioned table")
+        raise ValueError(f"{t.ref!r} is not a partitioned table")
     try:
         from bigdata06_spark import lakehouse_manifest as M
 
-        meta = M.manifest_meta(path)
-        if meta is not None and meta["version"] == LH.current_version(path):
+        meta = M.manifest_meta(t.path)
+        if meta is not None and meta["version"] == LH.current_version(t.path):
             return (
-                M.manifest_df(spark, path)
+                M.manifest_df(spark, t.path)
                 .select(*[F.col(f"p_{c}").alias(c) for c in pby])
                 .distinct().orderBy(*pby)
             )
@@ -1165,29 +992,26 @@ def _sql_show_partitions(spark: SparkSession, stmt: str) -> DataFrame:
         pass
     vals = sorted({
         tuple(LH._pvals_of_rel(f).get(c) for c in pby)
-        for f in LH.files_at_version(path, LH.current_version(path))
+        for f in LH.files_at_version(t.path, LH.current_version(t.path))
     })
     return spark.createDataFrame(
         [tuple(v) for v in vals],
         T.StructType([T.StructField(c, T.StringType()) for c in pby]))
 
 
-def _sql_show_props(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_show_props(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """SHOW TBLPROPERTIES <tbl> — every table-level spec the log
     carries, as (key, value) string rows: location, version,
     clustering key, partition/stats/bloom specs, generated and
     identity columns, CHECK constraints, z-order state."""
     import json as _json
 
-    m = re.fullmatch(r"SHOW\s+TBLPROPERTIES\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)",
-                     stmt, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"cannot parse SHOW TBLPROPERTIES {stmt!r}")
-    path, key, _name = _resolve(m.group("tbl"))
+    _tail(m, r"\s*", "SHOW TBLPROPERTIES <tbl>")
+    path = t.path
     v = LH.current_version(path)
     rows = [("location", path), ("version", str(int(v)))]
-    if key:
-        rows.append(("key", key))
+    if t.key:
+        rows.append(("key", t.key))
     pby = LH.table_partition_by(path)
     if pby:
         rows.append(("partition_by", ",".join(pby)))
@@ -1212,7 +1036,7 @@ def _sql_show_props(spark: SparkSession, stmt: str) -> DataFrame:
     return spark.createDataFrame(rows, "key string, value string")
 
 
-def _sql_analyze(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_analyze(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """ANALYZE TABLE <tbl> COMPUTE STATISTICS — refresh the
     relational snapshot manifest (per-file stats mirror) to the
     current version; the planner's `plan_files` then prunes from
@@ -1220,53 +1044,36 @@ def _sql_analyze(spark: SparkSession, stmt: str) -> DataFrame:
     (version, mode, num_files)."""
     from bigdata06_spark import lakehouse_manifest as M
 
-    m = re.fullmatch(
-        r"ANALYZE\s+TABLE\s+(?P<tbl>\S+(?:\s*`[^`]+`)?)\s+"
-        r"COMPUTE\s+STATISTICS(?:\s+FOR\s+ALL\s+COLUMNS)?",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse ANALYZE statement {stmt!r}")
-    path, _key, _name = _resolve(m.group("tbl"))
-    r = M.refresh_manifest(spark, path)
-    n_files = len(LH.files_at_version(path, int(r["version"])))
+    _tail(m, r"\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+ALL\s+COLUMNS)?",
+          "ANALYZE TABLE <tbl> COMPUTE STATISTICS [FOR ALL COLUMNS]")
+    r = M.refresh_manifest(spark, t.path)
+    n_files = len(LH.files_at_version(t.path, int(r["version"])))
     return spark.createDataFrame(
         [(int(r["version"]), r["mode"], int(n_files))],
         "version int, mode string, num_files int",
     )
 
 
-def _sql_clone(spark: SparkSession, stmt: str) -> DataFrame:
+def _sql_clone(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
     """CREATE TABLE <name> SHALLOW CLONE <src> [VERSION AS OF <n>]
     LOCATION '<path>' — Delta's zero-copy branch: the clone's v0 is a
     checkpoint entry referencing the source's files by absolute path;
     it diverges independently from there. The clone inherits the
     source's clustering key in the registry."""
-    m = re.fullmatch(
-        r"CREATE\s+TABLE\s+(?P<name>[\w`.]+)\s+SHALLOW\s+CLONE\s+"
-        r"(?P<src>\S+(?:\s*`[^`]+`)?)"
-        r"(?:\s+VERSION\s+AS\s+OF\s+(?P<v>\d+))?"
-        r"\s+LOCATION\s+'(?P<path>[^']+)'",
-        stmt, re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(
-            "cannot parse CLONE; expected: CREATE TABLE <name> SHALLOW "
-            "CLONE <src> [VERSION AS OF <n>] LOCATION '<path>'"
-        )
-    src_path, src_key, _src_name = _resolve(m.group("src"))
-    dst = m.group("path")
-    ver = int(m.group("v")) if m.group("v") else None
-    LH.clone(src_path, dst, ver)
-    register_table(spark, m.group("name").strip("`"), dst, src_key)
+    tm = _tail(m, r"(?:\s+VERSION\s+AS\s+OF\s+(?P<v>\d+))?"
+                  r"\s+LOCATION\s+'(?P<path>[^']+)'",
+               "CREATE TABLE <name> SHALLOW CLONE <src> [VERSION AS OF <n>] "
+               "LOCATION '<path>'")
+    dst = tm.group("path")
+    LH.clone(t.path, dst, int(tm.group("v")) if tm.group("v") else None)
+    register_table(spark, m.group("name").strip("`"), dst, t.key)
     return _version_df(spark, LH.current_version(dst))
 
 
-_ASOF_REF_RX = re.compile(
+_ASOF_REF = (
     r"(?P<ref>lakehouse\.`[^`]+`|[A-Za-z_][\w.]*)\s+"
     r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)|"
-    r"TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
-    re.IGNORECASE,
+    r"TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')"
 )
 
 
@@ -1277,46 +1084,20 @@ def _rewrite_time_travel(spark: SparkSession, stmt: str) -> str:
     version (timestamps resolve via the log's commit wall clocks,
     Delta's AS-OF rule), leaving everything else — including any
     trailing alias — for `spark.sql`. Works anywhere in the
-    statement (joins, CTEs), skipping quoted strings."""
+    statement (joins, CTEs), skipping quoted strings and backtick
+    identifiers."""
     import hashlib
-    from datetime import datetime
 
-    matches = []
-    quote: str | None = None
-    i = 0
-    while i < len(stmt):
-        c = stmt[i]
-        if quote:
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in "'\"":
-            quote = c
-            i += 1
-            continue
-        m = _ASOF_REF_RX.match(stmt, i)
-        if m:
-            matches.append(m)
-            i = m.end()
-            continue
-        i += 1
-    for m in reversed(matches):
-        try:
-            path, _key, name = _resolve(m.group("ref"))
-        except ValueError:
+    for m in reversed(_scan(stmt, _ASOF_REF, any_depth=True)):
+        t = _resolve(m.group("ref"))
+        if t is None:
             continue  # not a lakehouse ref — leave for spark.sql
         if m.group("v") is not None:
             v = int(m.group("v"))
         else:
-            ts = m.group("ts")
-            try:
-                epoch = float(ts)
-            except ValueError:
-                epoch = datetime.fromisoformat(ts).timestamp()
-            v = LH.version_at_timestamp(path, epoch)
-        view = (f"{name or 'lh'}_asof_{v}_"
-                f"{hashlib.md5(path.encode()).hexdigest()[:6]}")
+            v = LH.version_at_timestamp(t.path, _parse_asof_ts(m.group("ts")))
+        view = (f"{t.name or 'lh'}_asof_{v}_"
+                f"{hashlib.md5(t.path.encode()).hexdigest()[:6]}")
         # pinned-version views are immutable, so a repeated AS-OF read
         # reuses the session's existing view instead of re-paying
         # read_version's O(files) footer reads (review r10) — guarded
@@ -1328,41 +1109,47 @@ def _rewrite_time_travel(spark: SparkSession, stmt: str) -> str:
         # listing. One listdir per statement vs O(files) footer reads.
         cache = _view_cache(spark)
         ckey = ("asof", view)
-        fp = _log_fingerprint(path)
-        if not (cache.get(ckey) == (path, v, fp)
+        fp = _log_fingerprint(t.path)
+        if not (cache.get(ckey) == (t.path, v, fp)
                 and spark.catalog.tableExists(view)):
-            LH.read_version(spark, path, v).createOrReplaceTempView(view)
-            cache[ckey] = (path, v, fp)
+            LH.read_version(spark, t.path, v).createOrReplaceTempView(view)
+            cache[ckey] = (t.path, v, fp)
         stmt = stmt[:m.start()] + view + stmt[m.end():]
     return stmt
 
 
-_DISPATCH = [
-    (re.compile(r"\s*MERGE\s+INTO\b", re.IGNORECASE), _sql_merge),
-    (re.compile(r"\s*CREATE\s+TABLE\b.*\bSHALLOW\s+CLONE\b",
-                re.IGNORECASE | re.DOTALL), _sql_clone),
-    (re.compile(r"\s*COPY\s+INTO\b", re.IGNORECASE), _sql_copy),
-    (re.compile(r"\s*TRUNCATE\s+TABLE\b", re.IGNORECASE), _sql_truncate),
-    (re.compile(r"\s*SHOW\s+TBLPROPERTIES\b", re.IGNORECASE), _sql_show_props),
-    (re.compile(r"\s*SHOW\s+PARTITIONS\b", re.IGNORECASE), _sql_show_partitions),
-    (re.compile(r"\s*ANALYZE\s+TABLE\b.*\bCOMPUTE\s+STATISTICS\b",
-                re.IGNORECASE | re.DOTALL), _sql_analyze),
-    (re.compile(r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\b.*\bUSING\s+lakehouse\b",
-                re.IGNORECASE | re.DOTALL), _sql_create),
-    (re.compile(r"\s*UPDATE\s+(?!.*\bSET\b.*\bFROM\b)", re.IGNORECASE), _sql_update),
-    (re.compile(r"\s*DELETE\s+FROM\b", re.IGNORECASE), _sql_delete),
-    (re.compile(r"\s*INSERT\s+(?:INTO|OVERWRITE)\b", re.IGNORECASE),
+#: a table reference: ``lakehouse.`/path```, `name`, or a dotted name
+_TBL = r"(?P<tbl>lakehouse\.`[^`]+`|`[^`]+`|[\w.]+)"
+
+#: statement head → handler. A head with a `tbl` group routes to its
+#: handler only when `_resolve` finds that table; the two without one
+#: (CREATE ... USING lakehouse, CONVERT) always do.
+_DISPATCH = [(re.compile(p, re.IGNORECASE | re.DOTALL), fn) for p, fn in [
+    (rf"MERGE\s+INTO\s+{_TBL}", _sql_merge),
+    (rf"CREATE\s+TABLE\s+(?P<name>[\w`.]+)\s+SHALLOW\s+CLONE\s+{_TBL}",
+     _sql_clone),
+    (rf"COPY\s+INTO\s+{_TBL}", _sql_copy),
+    (rf"TRUNCATE\s+TABLE\s+{_TBL}", _sql_truncate),
+    (rf"SHOW\s+TBLPROPERTIES\s+{_TBL}", _sql_show_props),
+    (rf"SHOW\s+PARTITIONS\s+{_TBL}", _sql_show_partitions),
+    (rf"ANALYZE\s+TABLE\s+{_TBL}", _sql_analyze),
+    (r"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE(?=.*\bUSING\s+lakehouse\b)",
+     _sql_create),
+    (rf"UPDATE\s+{_TBL}", _sql_update),
+    (rf"DELETE\s+FROM\s+{_TBL}", _sql_delete),
+    (rf"INSERT\s+(?:INTO|(?P<ovw>OVERWRITE)(?:\s+TABLE)?)\s+{_TBL}",
      _sql_insert),
-    (re.compile(r"\s*VACUUM\b", re.IGNORECASE), _sql_vacuum),
-    (re.compile(r"\s*OPTIMIZE\b", re.IGNORECASE), _sql_optimize),
-    (re.compile(r"\s*DESCRIBE\s+HISTORY\b", re.IGNORECASE), _sql_history),
-    (re.compile(r"\s*DESCRIBE\s+DETAIL\b", re.IGNORECASE), _sql_detail),
-    (re.compile(r"\s*ALTER\s+TABLE\b", re.IGNORECASE), _sql_alter),
-    (re.compile(r"\s*GENERATE\s+MANIFEST\b", re.IGNORECASE), _sql_generate),
-    (re.compile(r"\s*RESTORE\s+TABLE\b", re.IGNORECASE), _sql_restore),
-    (re.compile(r"\s*REORG\s+TABLE\b", re.IGNORECASE), _sql_reorg),
-    (re.compile(r"\s*CONVERT\s+TO\s+LAKEHOUSE\b", re.IGNORECASE), _sql_convert),
-]
+    (rf"VACUUM\s+{_TBL}", _sql_vacuum),
+    (rf"OPTIMIZE\s+{_TBL}", _sql_optimize),
+    (rf"DESCRIBE\s+HISTORY\s+{_TBL}", _sql_history),
+    (rf"DESCRIBE\s+DETAIL\s+{_TBL}", _sql_detail),
+    (rf"ALTER\s+TABLE\s+{_TBL}", _sql_alter),
+    (rf"GENERATE\s+MANIFEST\s+FOR\s+TABLE\s+{_TBL}", _sql_generate),
+    (rf"RESTORE\s+TABLE\s+{_TBL}", _sql_restore),
+    (rf"REORG\s+TABLE\s+{_TBL}", _sql_reorg),
+    (r"CONVERT\s+TO\s+LAKEHOUSE\s+(?:parquet\.)?`(?P<path>[^`]+)`",
+     _sql_convert),
+]]
 
 
 def sql(spark: SparkSession, statement: str) -> DataFrame:
@@ -1371,19 +1158,18 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
     temp views this module registers resolve by name)."""
     stmt = statement.strip().rstrip(";").strip()
     for rx, fn in _DISPATCH:
-        if rx.match(stmt):
-            # UPDATE/DELETE against non-lakehouse relations still fall
-            # through: only registered names / lakehouse.`path` refs
-            # dispatch here
-            if fn in (_sql_update, _sql_delete, _sql_insert,
-                      _sql_alter, _sql_detail, _sql_truncate,
-                      _sql_copy, _sql_show_props, _sql_analyze):
-                tbl = stmt.split()[1 if fn is _sql_update else 2]
-                tbl = tbl.split("(")[0]  # INSERT INTO t(... tight form
-                if (not re.match(r"lakehouse\.`", tbl, re.IGNORECASE)
-                        and tbl.strip("`").lower() not in _TABLES):
-                    break
-            return fn(spark, stmt)
+        m = rx.match(stmt)
+        if not m:
+            continue
+        t = None
+        if "tbl" in rx.groupindex:
+            t = _resolve(m.group("tbl"))
+            if t is None:
+                break  # names no lakehouse table: Spark's own statement
+        out = fn(spark, m, t)
+        if t is not None and t.name:
+            _refresh_view(spark, t.name)
+        return out
     if re.search(r"\b(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", stmt, re.IGNORECASE):
         return spark.sql(_rewrite_time_travel(spark, stmt))
     return spark.sql(statement)

@@ -16,7 +16,6 @@ files + a file-level log.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,17 +23,13 @@ from pyspark.sql import functions as F
 from bigdata06_spark import lakehouse as LH
 from bigdata06_spark.catalog import load_table
 from bigdata06_spark.queries import register
+from bigdata06_spark.queries.qutil import side_dir
 
 KEY = "o_orderkey"
 
 
-def _table_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_{tag}")
-
-
 def _build_two_versions(spark: SparkSession, sf_dir: str) -> str:
-    path = _table_dir(sf_dir)
+    path = side_dir("lakehouse_orders", sf_dir)
     if LH.current_version(path) < 1:
         o = load_table(spark, "orders", sf_dir)
         LH.table_init(o, path, KEY)
@@ -179,18 +174,13 @@ def lakehouse_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_part_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_events_part_{tag}")
-
-
 def _build_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Date-partitioned events lakehouse table (idempotent per SF),
     two versions: v0 = init (Hive-style `event_date=<day>/` layout),
     v1 = a merge zeroing `value` for event_id % 3 = 0 on 2024-01-03 —
     the change relation carries the partition column, so the rewrite
     is CONFINED to that day's files (tests pin this)."""
-    path = _events_part_dir(sf_dir)
+    path = side_dir("lakehouse_events_part", sf_dir)
     if LH.current_version(path) < 1:
         ev = (
             load_table(spark, "events", sf_dir)
@@ -248,11 +238,6 @@ def lakehouse_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orders_by_date_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_bydate_{tag}")
-
-
 @register(
     "lakehouse_stats_skipping",
     oracle="""
@@ -278,7 +263,7 @@ def lakehouse_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact values of the layout key, stats prune on RANGES of any
     clustered column, which is what a 100 TB time-ordered fact table
     uses for every date-windowed query. Integer-cents output."""
-    path = _orders_by_date_dir(sf_dir)
+    path = side_dir("lakehouse_orders_bydate", sf_dir)
     if LH.current_version(path) < 0:
         o = load_table(spark, "orders", sf_dir)
         LH.table_init(
@@ -302,11 +287,6 @@ def lakehouse_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("cents"),
         )
     )
-
-
-def _orders_dv_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_dv_{tag}")
 
 
 @register(
@@ -335,7 +315,7 @@ def lakehouse_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZE later materializes and drops the spent DVs (the
     compaction contract tests pin). Integer-cents output so the
     oracle replays exactly on the raw table."""
-    path = _orders_dv_dir(sf_dir)
+    path = side_dir("lakehouse_orders_dv", sf_dir)
     if LH.current_version(path) < 1:
         o = load_table(spark, "orders", sf_dir)
         if LH.current_version(path) < 0:
@@ -348,11 +328,6 @@ def lakehouse_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
         ).cast("long").alias("cents"),
     )
-
-
-def _orders_reorg_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_reorg_{tag}")
 
 
 @register(
@@ -379,7 +354,7 @@ def lakehouse_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH row identity and the purge's metadata effect. Scale: cost is
     O(DV files) — the pressure valve that keeps the MOR anti-join
     side small without compacting 100 TB."""
-    path = _orders_reorg_dir(sf_dir)
+    path = side_dir("lakehouse_reorg", sf_dir)
     if LH.current_version(path) < 2:
         o = load_table(spark, "orders", sf_dir)
         if LH.current_version(path) < 0:
@@ -398,11 +373,6 @@ def lakehouse_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("cents"),
         F.lit(n_dv).cast("long").alias("n_dv_files"),
     )
-
-
-def _orders_zorder_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_zorder_{tag}")
 
 
 @register(
@@ -432,7 +402,7 @@ def lakehouse_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats skipping is the scan optimization for fact tables queried
     along MORE THAN ONE axis, where partitioning can serve only one.
     Integer-cents output so the oracle replays on the raw table."""
-    path = _orders_zorder_dir(sf_dir)
+    path = side_dir("lakehouse_orders_zorder", sf_dir)
     if LH.current_version(path) < 1:
         o = load_table(spark, "orders", sf_dir)
         if LH.current_version(path) < 0:
@@ -466,11 +436,6 @@ def lakehouse_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orders_upd_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_upd_{tag}")
-
-
 @register(
     "lakehouse_update_where",
     oracle="""
@@ -495,7 +460,7 @@ def lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     old/new images as update_pre/postimage exactly like a COW
     rewrite's. Integer-cents output; the oracle replays the update
     as a CASE expression on the raw table."""
-    path = _orders_upd_dir(sf_dir)
+    path = side_dir("lakehouse_orders_upd", sf_dir)
     if LH.current_version(path) < 1:
         o = load_table(spark, "orders", sf_dir)
         if LH.current_version(path) < 0:
@@ -513,16 +478,11 @@ def lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _customer_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_customer_{tag}")
-
-
 def _build_customer_two_versions(spark: SparkSession, sf_dir: str) -> str:
     """Customer-side lakehouse table (idempotent per SF), two
     versions: v0 = init; v1 = reassign c_nationkey → 99 for
     c_custkey % 10 = 7 and delete c_custkey in [50, 60)."""
-    path = _customer_dir(sf_dir)
+    path = side_dir("lakehouse_customer", sf_dir)
     if LH.current_version(path) < 1:
         c = load_table(spark, "customer", sf_dir).select(
             "c_custkey", "c_nationkey", "c_mktsegment"
@@ -637,11 +597,6 @@ def lakehouse_mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _rename_table_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_customer_colmap_{tag}")
-
-
 @register(
     "lakehouse_rename_drop",
     oracle="""
@@ -672,7 +627,7 @@ def lakehouse_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs the logical schema exactly. At 100 TB this is the
     difference between an O(1) metadata commit and rewriting every
     file to rename a column."""
-    path = _rename_table_dir(sf_dir)
+    path = side_dir("lakehouse_customer_colmap", sf_dir)
     if LH.current_version(path) < 4:
         c = load_table(spark, "customer", sf_dir).select(
             "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -693,11 +648,6 @@ def lakehouse_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         LH.merge(spark, path, "c_custkey", updates=upd2)
         LH.drop_column(spark, path, "c_mktsegment")
     return LH.read_version(spark, path, 4)
-
-
-def _bloom_table_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_orders_bloom_{tag}")
 
 
 @register(
@@ -722,7 +672,7 @@ def lakehouse_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of false positives. At 100 TB this is the needle-in-
     haystack path: O(files) 2 KiB bloom probes at the planner instead
     of a full-table scan."""
-    path = _bloom_table_dir(sf_dir)
+    path = side_dir("lakehouse_orders_bloom", sf_dir)
     if LH.current_version(path) < 0:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_custkey", "o_totalprice"
@@ -738,11 +688,6 @@ def lakehouse_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_custkey") == int(target))
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
-
-
-def _gen_events_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_events_gen_{tag}")
 
 
 @register(
@@ -775,7 +720,7 @@ def lakehouse_generated_partition(spark: SparkSession, sf_dir: str) -> DataFrame
     difference between a 3-day scan and a full-history scan for
     every dashboard's time-range query, without requiring writers to
     know the partitioning scheme exists."""
-    path = _gen_events_dir(sf_dir)
+    path = side_dir("lakehouse_events_gen", sf_dir)
     if LH.current_version(path) < 1:
         ev = load_table(spark, "events", sf_dir).select(
             "event_id", "ts", "event_type", "value"
@@ -809,11 +754,6 @@ def lakehouse_generated_partition(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _replace_events_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_events_rw_{tag}")
-
-
 @register(
     "lakehouse_replace_where",
     oracle="""
@@ -837,7 +777,7 @@ def lakehouse_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     region. At 100 TB this is how a day is recomputed in place: swap
     one partition under snapshot isolation instead of rewriting or
     double-reading the table."""
-    path = _replace_events_dir(sf_dir)
+    path = side_dir("lakehouse_events_rw", sf_dir)
     if LH.current_version(path) < 1:
         ev = load_table(spark, "events", sf_dir).select(
             "event_id", "ts", "event_type", "value"
@@ -856,11 +796,6 @@ def lakehouse_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_id").cast("long").alias("event_id"),
                 "event_type", "value")
     )
-
-
-def _identity_table_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_customer_ident_{tag}")
 
 
 @register(
@@ -894,7 +829,7 @@ def lakehouse_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique across OCC retries and table history. The value-hash
     match against a row_number() oracle proves allocation is exactly
     the declared order with no gaps or reuse."""
-    path = _identity_table_dir(sf_dir)
+    path = side_dir("lakehouse_customer_ident", sf_dir)
     if LH.current_version(path) < 1:
         c = load_table(spark, "customer", sf_dir).select(
             F.col("c_custkey").cast("long").alias("c_custkey"), "c_name"
@@ -950,11 +885,6 @@ def lakehouse_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ds_write_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_dsw_{tag}")
-
-
 @register(
     "lakehouse_datasource_write_roundtrip",
     oracle="SELECT * FROM customer",
@@ -973,16 +903,11 @@ def lakehouse_datasource_write_roundtrip(spark: SparkSession,
     )
 
     register_ds(spark)
-    path = _ds_write_dir(sf_dir)
+    path = side_dir("lakehouse_dsw", sf_dir)
     if LH.current_version(path) < 0:
         c = load_table(spark, "customer", sf_dir)
         c.coalesce(4).write.format("lakehouse").mode("append").save(path)
     return spark.read.format("lakehouse").load(path)
-
-
-def _sqlmerge_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqlmerge_{tag}")
 
 
 @register(
@@ -1029,7 +954,7 @@ def lakehouse_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     only key-range-overlapping files rewrite, inserts append."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _sqlmerge_dir(sf_dir)
+    path = side_dir("lakehouse_sqlmerge", sf_dir)
     base = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1063,11 +988,6 @@ def lakehouse_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS cents
         FROM sqlm_orders GROUP BY bucket
     """)
-
-
-def _sqlmergec_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqlmergec_{tag}")
 
 
 @register(
@@ -1123,7 +1043,7 @@ def lakehouse_sql_merge_composite(spark: SparkSession, sf_dir: str) -> DataFrame
     — same shuffle keys, no extra pass."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _sqlmergec_dir(sf_dir)
+    path = side_dir("lakehouse_sqlmergec", sf_dir)
     # the synthetic lineitem is TPC-H-ISH: (l_orderkey, l_linenumber)
     # is not unique there, so pin a deterministic one-row-per-pair base
     # (min is order-independent — no float-sum ulp drift vs DuckDB)
@@ -1172,11 +1092,6 @@ def lakehouse_sql_merge_composite(spark: SparkSession, sf_dir: str) -> DataFrame
     """)
 
 
-def _sqldml_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqldml_{tag}")
-
-
 @register(
     "lakehouse_sql_update_delete",
     oracle="""
@@ -1205,7 +1120,7 @@ def lakehouse_sql_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     end — the Delta user's muscle memory on this engine's tables."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _sqldml_dir(sf_dir)
+    path = side_dir("lakehouse_sqldml", sf_dir)
     load_table(spark, "customer", sf_dir).createOrReplaceTempView("sqld_seed")
     if LH.current_version(path) < 0:
         LSQL.sql(spark, f"""
@@ -1227,11 +1142,6 @@ def lakehouse_sql_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS cents
         FROM sqld_cust GROUP BY c_mktsegment
     """)
-
-
-def _convert_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_convert_{tag}")
 
 
 @register(
@@ -1259,7 +1169,7 @@ def lakehouse_convert_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature (time travel, stats skipping, merge) active from v0."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _convert_dir(sf_dir)
+    path = side_dir("lakehouse_convert", sf_dir)
     if LH.current_version(path) < 0:
         base = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_custkey", "o_totalprice"
@@ -1279,11 +1189,6 @@ def lakehouse_convert_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS cents
         FROM conv_orders GROUP BY is_manual
     """)
-
-
-def _constraint_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_constraint_{tag}")
 
 
 @register(
@@ -1322,7 +1227,7 @@ def lakehouse_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-scan validation, by design."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _constraint_dir(sf_dir)
+    path = side_dir("lakehouse_constraint", sf_dir)
     # a process killed mid-journey leaves a partial table (final
     # version is 5); rebuild from scratch rather than serving it
     if 0 <= LH.current_version(path) < 5:
@@ -1368,11 +1273,6 @@ def lakehouse_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """).withColumn("active_constraints", F.lit(live))
 
 
-def _liquid_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_liquid_{tag}")
-
-
 @register(
     "lakehouse_zorder_incremental",
     oracle="""
@@ -1403,7 +1303,7 @@ def lakehouse_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the steady state at 100 TB: appends land unclustered, a periodic
     incremental pass folds them in, and a full re-sketch happens only
     when the distribution drifts off the frozen grid."""
-    path = _liquid_dir(sf_dir)
+    path = side_dir("lakehouse_liquid", sf_dir)
     base = load_table(spark, "orders", sf_dir).select(
         KEY, "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -1445,11 +1345,6 @@ def lakehouse_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- manifest planning
 
 
-def _events_mf_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_events_mf_{tag}")
-
-
 def _build_manifest_events(spark: SparkSession, sf_dir: str) -> str:
     """Date-partitioned events table with per-file event_id stats,
     mirrored into a RELATIONAL MANIFEST (lakehouse_manifest): v0 init
@@ -1459,7 +1354,7 @@ def _build_manifest_events(spark: SparkSession, sf_dir: str) -> str:
     driver). Idempotent per SF."""
     from bigdata06_spark import lakehouse_manifest as M
 
-    path = _events_mf_dir(sf_dir)
+    path = side_dir("lakehouse_events_mf", sf_dir)
     if LH.current_version(path) < 1:
         ev = (
             load_table(spark, "events", sf_dir)
@@ -1531,11 +1426,6 @@ def lakehouse_manifest_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sqltt_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqltt_{tag}")
-
-
 @register(
     "lakehouse_sql_time_travel",
     oracle="""
@@ -1563,7 +1453,7 @@ def lakehouse_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero data I/O beyond the second snapshot's files."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _sqltt_dir(sf_dir)
+    path = side_dir("lakehouse_sqltt", sf_dir)
     if LH.current_version(path) < 0:
         load_table(spark, "customer", sf_dir).select(
             "c_custkey", "c_mktsegment", "c_acctbal"
@@ -1591,11 +1481,6 @@ def lakehouse_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE new.c_acctbal <> old.c_acctbal
         GROUP BY seg
     """)
-
-
-def _sqlpo_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqlpo_{tag}")
 
 
 @register(
@@ -1641,7 +1526,7 @@ def lakehouse_sql_partition_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-preserving so it must be value-invisible."""
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    path = _sqlpo_dir(sf_dir)
+    path = side_dir("lakehouse_sqlpo", sf_dir)
     if LH.current_version(path) < 0:
         base = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", F.col("o_orderstatus").alias("status"),
@@ -1677,11 +1562,6 @@ def lakehouse_sql_partition_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """).crossJoin(F.broadcast(n_parts))
 
 
-def _sqlcopy_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_sqlcopy_{tag}")
-
-
 @register(
     "lakehouse_sql_copy_into",
     oracle="""
@@ -1710,7 +1590,7 @@ def lakehouse_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bigdata06_spark import lakehouse_sql as LSQL
 
-    root = _sqlcopy_dir(sf_dir)
+    root = side_dir("lakehouse_sqlcopy", sf_dir)
     path = os.path.join(root, "table")
     landing = os.path.join(root, "landing")
     if LH.current_version(path) < 0:
@@ -1749,11 +1629,6 @@ def lakehouse_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def _ckpt_journey_dir(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lakehouse_ckptj_{tag}")
-
-
 def _build_checkpoint_journey(spark: SparkSession, sf_dir: str) -> str:
     """v0 init → v1 update merge → v2 delete merge → PARQUET
     checkpoint (squashes 0..2 into a columnar sidecar) → v3 insert
@@ -1764,7 +1639,7 @@ def _build_checkpoint_journey(spark: SparkSession, sf_dir: str) -> str:
 
     from bigdata06_spark import lakehouse_manifest as M
 
-    path = _ckpt_journey_dir(sf_dir)
+    path = side_dir("lakehouse_ckptj", sf_dir)
     if LH.current_version(path) != 3:
         shutil.rmtree(path, ignore_errors=True)
         o = load_table(spark, "orders", sf_dir).select(

@@ -2228,11 +2228,11 @@ def knn_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-build cadence while serving touches only codebook-broadcast
     joins over nprobe cells."""
     import os
-    import tempfile
+
+    from bigdata06_spark.queries.qutil import side_dir
 
     e = load_table(spark, "embeddings", sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(tempfile.gettempdir(), f"ivfpq_index_{tag}")
+    root = side_dir("ivfpq_index", sf_dir)
     parts = {
         n: os.path.join(root, n)
         for n in ("codebook", "cells", "codes", "cents")

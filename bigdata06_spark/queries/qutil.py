@@ -1,4 +1,5 @@
-"""Cross-engine numeric determinism helpers.
+"""Helpers shared by the query modules: cross-engine numeric
+determinism, and the per-SF side-table directory.
 
 The driver hash-compares Spark results against DuckDB EXACTLY, which
 makes two float pitfalls fatal:
@@ -21,9 +22,18 @@ makes two float pitfalls fatal:
 
 Use `dsum`/`davg` for any sum/avg of doubles, `rnd` for any per-row
 rounding — with the matching `*_sql` fragment in the oracle.
+
+Queries that build side state on disk (lakehouse tables, Avro
+round-trips, index builds, stream sinks) keep it under
+`side_dir(prefix, sf_dir)`: one directory per prefix and scale
+factor, so a rerun at the same SF finds its own state and two SFs
+never share one.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -83,3 +93,11 @@ def rnd(col: Column, n: int = 2) -> Column:
 def rnd_sql(expr: str, n: int = 2) -> str:
     p = float(10**n)
     return f"floor(({expr}) * {p} + 0.5) / {p}"
+
+
+def side_dir(prefix: str, sf_dir: str) -> str:
+    """`<tmp>/<prefix>_<sf tag>`: the side-state directory of one
+    query family at one scale factor (the tag is `sf_dir`'s last path
+    component, e.g. `sf0.01`)."""
+    return os.path.join(tempfile.gettempdir(),
+                        f"{prefix}_{os.path.basename(sf_dir.rstrip('/'))}")

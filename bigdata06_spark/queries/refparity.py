@@ -20,7 +20,7 @@ from bigdata06_spark.operators.relational import (
     union_all,
 )
 from bigdata06_spark.queries import register
-from bigdata06_spark.queries.qutil import rnd
+from bigdata06_spark.queries.qutil import rnd, side_dir
 
 
 @register(
@@ -417,16 +417,11 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validated against the JVM Avro library in
     tests/test_sources_sinks.py. See sources/avro_codec.py +
     avro_datasource.py."""
-    import os
-    import tempfile
-
     from bigdata06_spark.catalog import load_table
     from bigdata06_spark.sources.readers import read_avro, write_avro
 
     o = load_table(spark, "orders", sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"avro_rt_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = side_dir("avro_rt", sf_dir)
     write_avro(o, path)
     return read_avro(spark, path)
 
@@ -449,9 +444,6 @@ def source_avro_decimal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     float round-trip anywhere. The codec is additionally
     cross-validated against the JVM Avro library (both directions,
     bytes- and fixed-backed) in tests/test_sources_sinks.py."""
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     from bigdata06_spark.catalog import load_table
@@ -461,9 +453,7 @@ def source_avro_decimal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         "o_orderkey",
         F.col("o_totalprice").cast(T.DecimalType(12, 2)).alias("price_dec"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"avro_dec_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = side_dir("avro_dec", sf_dir)
     write_avro(o, path)
     back = read_avro(spark, path)
     return back.select(

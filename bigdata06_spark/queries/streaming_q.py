@@ -472,18 +472,17 @@ def stream_lakehouse_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint + table persist per SF: reruns re-drain zero files
     and commit zero versions (idempotent build)."""
     import os as _os
-    import tempfile as _tempfile
 
     from bigdata06_spark import lakehouse as LH
+    from bigdata06_spark.queries.qutil import side_dir
     from bigdata06_spark.sources.lakehouse_datasource import (
         register as register_ds,
     )
 
     register_ds(spark)
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    tbl = _os.path.join(_tempfile.gettempdir(), f"lakehouse_stream_sink_{tag}")
-    ckpt = _os.path.join(
-        _tempfile.gettempdir(), f"lakehouse_stream_sink_ckpt_{tag}")
+    tbl = side_dir("lakehouse_stream_sink", sf_dir)
+    ckpt = side_dir("lakehouse_stream_sink_ckpt", sf_dir)
     q = (
         SO.stream_events(spark, sf_dir)
         .select("event_id", "event_type", "value")

@@ -406,3 +406,165 @@ def test_view_cache_skips_replan_and_invalidates_on_commit(spark, tmp_path):
             "checkpoint squash without re-planning")
     finally:
         LSQLM.LH.read_version = orig
+
+
+# ------------------------------------------------ one lexer, one lookup
+
+# payloads that would split a statement if the lexer looked inside a
+# quoted literal or a backtick identifier (no quote chars of their own)
+_LEX_HAZARDS = st.lists(
+    st.sampled_from([",", "AND", "and", "WHEN", "When", "(", ")", "((", "x",
+                     "1", "=", " ", "a,b", "R AND D", "New York"]),
+    min_size=1, max_size=6).map(" ".join)
+_ATOM = st.one_of(
+    st.sampled_from(["a", "t.k", "s.v", "x1", "42", "=", "+", "<"]),
+    _LEX_HAZARDS.map(lambda v: f"'{v}'"),
+    _LEX_HAZARDS.map(lambda v: f"'{v}''{v}'"),     # doubled-quote escape
+    _LEX_HAZARDS.map(lambda v: f'"{v}"'),
+    _LEX_HAZARDS.map(lambda v: f"`{v}`"),
+    # a paren group: depth > 0, so its separators never split
+    st.lists(st.sampled_from(["f(a, b)", ",", "AND", "WHEN", "x", "'('"]),
+             min_size=1, max_size=4).map(lambda ws: "(" + " ".join(ws) + ")"),
+)
+_PART = st.lists(_ATOM, min_size=1, max_size=5).map(" ".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_PART, min_size=1, max_size=5),
+       st.sampled_from([(",", ", "), (r"\bAND\b", " AND "),
+                        (r"\bWHEN\b", " WHEN ")]))
+def test_scanner_splits_only_outside_quotes(parts, sep):
+    """Property of the one lexer: on text whose quoted literals and
+    backtick identifiers carry `,`, AND, WHEN and parentheses, the
+    split points are exactly the separators written between the
+    parts — none falls inside a quote or a paren group — and the
+    parts plus the separators rebuild the input."""
+    from bigdata06_spark.lakehouse_sql import _scan, _split
+
+    pattern, joiner = sep
+    s = joiner.join(parts)
+    assert _split(s, pattern) == parts
+    assert joiner.join(_split(s, pattern)) == s
+    want, off = [], 0
+    for p in parts[:-1]:
+        off += len(p)
+        want.append(off + joiner.index(joiner.strip()))
+        off += len(joiner)
+    assert _kw_at_depth0(s, pattern) == want
+    # at any depth the scanner still never starts a match in a quote
+    quoted = set()
+    quote = None
+    for i, c in enumerate(s):
+        if quote:
+            quoted.add(i)
+            quote = None if c == quote else quote
+        elif c in "'\"`":
+            quote = c
+            quoted.add(i)
+    assert not any(m.start() in quoted
+                   for m in _scan(s, pattern, any_depth=True))
+
+
+_PVAL = st.lists(st.sampled_from(["a", "b", ",", "AND", "and", "x y", "(", ")",
+                                  "New York", "R AND D", "it''s", "1"]),
+                 min_size=1, max_size=4).map(" ".join)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_PVAL, min_size=1, max_size=4), _PVAL)
+def test_partition_predicate_keeps_quoted_values_whole(in_vals, eq_val):
+    """OPTIMIZE WHERE's partition predicate: quoted values containing
+    commas, AND, spaces and parentheses come back whole, doubled
+    quotes unescaped."""
+    from bigdata06_spark.lakehouse_sql import _parse_partition_predicate
+
+    listed = ", ".join(f"'{v}'" for v in in_vals)
+    cond = f"part IN ({listed}) AND `city` = '{eq_val}'"
+    got = _parse_partition_predicate(cond)
+    assert got == {"part": [v.replace("''", "'") for v in in_vals],
+                   "city": [eq_val.replace("''", "'")]}
+
+
+def test_partition_predicate_quoted_and_and_space():
+    from bigdata06_spark.lakehouse_sql import _parse_partition_predicate
+
+    assert _parse_partition_predicate(
+        "region = 'R AND D' AND city = 'New York'") == {
+            "region": ["R AND D"], "city": ["New York"]}
+    assert _parse_partition_predicate("part IN ('a,b', 'c')") == {
+        "part": ["a,b", "c"]}
+    # a predicate that is not one literal per conjunct stays loud
+    with pytest.raises(ValueError):
+        _parse_partition_predicate("part = 'a' OR part = 'b'")
+
+
+def test_insert_overwrite_table_keyword(spark, tmp_path):
+    """`INSERT OVERWRITE TABLE <tbl>` is in the grammar: the optional
+    TABLE keyword must not be taken for the table name (which sent
+    the statement to spark.sql and its UNSUPPORTED_INSERT error)."""
+    path = str(tmp_path / "iot")
+    LH.table_init(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, note string"),
+        path, "k", n_files=1)
+    LSQL.register_table(spark, "fz_iot", path, "k")
+    v0 = LH.current_version(path)
+    LSQL.sql(spark, "INSERT OVERWRITE TABLE fz_iot SELECT 7L AS k, 'z' AS note")
+    assert LH.current_version(path) == v0 + 1
+    got = [tuple(r) for r in LSQL.sql(spark, "SELECT * FROM fz_iot").collect()]
+    assert got == [(7, "z")]
+
+
+def test_optimize_where_in_list_with_quoted_comma(spark, tmp_path):
+    """`OPTIMIZE ... WHERE part IN ('a,b', 'c')` compacts BOTH listed
+    partitions (the comma inside the literal is data) and leaves the
+    unlisted one's files in place."""
+    path = str(tmp_path / "opt_in")
+    df = spark.createDataFrame(
+        [(i, ["a,b", "c", "other"][i % 3], float(i)) for i in range(30)],
+        "k long, part string, v double")
+    LH.table_init(df, path, "k", n_files=6, partition_by=["part"])
+    LSQL.register_table(spark, "fz_opt_in", path, "k")
+    before = LH.files_at_version(path, LH.current_version(path))
+
+    def files_of(files, value):
+        return {f for f in files
+                if LH._pvals_of_rel(f).get("part") == value}
+
+    assert len(files_of(before, "a,b")) > 1 and len(files_of(before, "c")) > 1
+    LSQL.sql(spark, "OPTIMIZE fz_opt_in WHERE part IN ('a,b', 'c')")
+    after = set(LH.files_at_version(path, LH.current_version(path)))
+    assert not files_of(before, "a,b") & after   # rewritten
+    assert not files_of(before, "c") & after     # rewritten
+    assert files_of(before, "other") <= after    # carried over
+    assert LH.read_version(spark, path, LH.current_version(path)).count() == 30
+
+
+def test_alter_add_columns_bad_type_commits_nothing(spark, tmp_path):
+    """A bad column spec anywhere in ADD COLUMNS fails before any
+    commit: the version is unchanged and the table still reads."""
+    path = str(tmp_path / "addc_bad")
+    LH.table_init(spark.createDataFrame([(1, 1.0)], "k long, v double"),
+                  path, "k", n_files=1)
+    LSQL.register_table(spark, "fz_addc_bad", path, "k")
+    v0 = LH.current_version(path)
+    with pytest.raises(ValueError, match="notatype"):
+        LSQL.sql(spark, "ALTER TABLE fz_addc_bad ADD COLUMNS (a int, b notatype)")
+    with pytest.raises(ValueError, match="already exists"):
+        LSQL.sql(spark, "ALTER TABLE fz_addc_bad ADD COLUMNS (a int, v string)")
+    assert LH.current_version(path) == v0
+    assert LH.read_version(spark, path, v0).columns == ["k", "v"]
+    assert LSQL.sql(spark, "SELECT * FROM fz_addc_bad").count() == 1
+
+
+def test_alter_add_columns_is_one_version(spark, tmp_path):
+    path = str(tmp_path / "addc_ok")
+    LH.table_init(spark.createDataFrame([(1, 1.0)], "k long, v double"),
+                  path, "k", n_files=1)
+    LSQL.register_table(spark, "fz_addc_ok", path, "k")
+    v0 = LH.current_version(path)
+    LSQL.sql(spark, "ALTER TABLE fz_addc_ok ADD COLUMNS (tag string, "
+                    "amt decimal(10,2))")
+    assert LH.current_version(path) == v0 + 1
+    got = LSQL.sql(spark, "SELECT * FROM fz_addc_ok")
+    assert got.columns == ["k", "v", "tag", "amt"]
+    assert got.first()["amt"] is None
