@@ -23,3 +23,7 @@ Design rules (enforced throughout):
 """
 
 __version__ = "0.1.0"
+
+from bigdata06_spark import zipdir as _zipdir
+
+_zipdir.install()

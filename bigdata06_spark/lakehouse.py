@@ -1075,8 +1075,7 @@ def _step(s: Snapshot, e: dict) -> None:
     adds = list(e.get("schema_adds", []))
     if e.get("schema_add"):
         adds.append(e["schema_add"])
-    s.acts += [{"kind": "add", "column": a["column"], "type": a["type"]}
-               for a in adds]
+    s.acts += [dict(a, kind="add") for a in adds]
     rn = e.get("schema_rename")
     if rn:
         s.acts.append({"kind": "rename", "from": rn["from"], "to": rn["to"]})
@@ -2208,13 +2207,13 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
     # merge_schema=True an unknown column is a loud error, not a
     # silent drop (a typo'd column name should not evolve the table).
     known = set(live.columns)
-    new_cols: dict[str, str] = {}
+    new_cols: dict[str, T.DataType] = {}
     for rel in (updates, inserts):
         if rel is None:
             continue
         for f in rel.schema.fields:
             if f.name not in known and f.name not in keys and f.name not in new_cols:
-                new_cols[f.name] = f.dataType.simpleString()
+                new_cols[f.name] = f.dataType
     if new_cols and not merge_schema:
         raise ValueError(
             f"change relations carry columns not in the table schema "
@@ -2229,7 +2228,8 @@ def merge(spark: SparkSession, path: str, key: str | list[str],
                 "old data files may still carry values under them — pick "
                 "fresh names (see rename_column)"
             )
-    schema_adds = [{"column": c, "type": t} for c, t in sorted(new_cols.items())]
+    schema_adds = [{"column": c, "type": t.simpleString(), "json": t.json()}
+                   for c, t in sorted(new_cols.items())]
 
     def _commit(version: int, add: list[str], remove: list[str]) -> None:
         entry: dict = {"add": sorted(add), "remove": sorted(remove)}
@@ -2489,9 +2489,10 @@ def add_column(path: str, col_name: str, col_type: str) -> int:
 def add_columns(path: str, cols: list[tuple[str, str]]) -> int:
     """`add_column` for several (name, type) pairs as ONE version.
     Every pair is checked before the commit, so a bad one commits
-    nothing: the type must be one Spark parses (the cast every read
-    applies to files that predate the column), and the name must be
-    new to the table, given once, and not retired by a rename/drop."""
+    nothing: the type must resolve through `_added_type`, and the name
+    must be new to the table, given once, and not retired by a
+    rename/drop. Each add records the resolved type's JSON, which the
+    session-less DataSource reads instead of parsing the DDL."""
     s = snapshot(path, bulk=())
     taken = set(s.logical_cols or ())
     retired = _retired_names(s.acts)
@@ -2506,11 +2507,8 @@ def add_columns(path: str, cols: list[tuple[str, str]]) -> int:
         if col_name in taken or col_name in seen:
             raise ValueError(f"column {col_name!r} already exists")
         seen.add(col_name)
-        try:
-            F.lit(None).cast(col_type)
-        except PySparkException as e:  # any type Spark rejects
-            raise ValueError(
-                f"unknown type {col_type!r} for column {col_name!r}") from e
+    adds = [{"column": c, "type": t, "json": _added_type(c, t).json()}
+            for c, t in cols]
     new_v = s.version + 1
     _commit_log(
         path,
@@ -2518,11 +2516,47 @@ def add_columns(path: str, cols: list[tuple[str, str]]) -> int:
         {
             "add": [],
             "remove": [],
-            "schema_adds": [{"column": c, "type": t} for c, t in cols],
+            "schema_adds": adds,
             "op": "ADD COLUMN" if len(cols) == 1 else "ADD COLUMNS",
         },
     )
     return new_v
+
+
+def _storable(dt: T.DataType) -> bool:
+    """Whether the table's data files can hold `dt`, at any nesting
+    depth: Spark's parquet writer rejects intervals and VOID, and
+    pyarrow (footer planning, the DataSource) cannot read Spark's
+    VARIANT encoding."""
+    if isinstance(dt, (T.NullType, T.VariantType, T.CalendarIntervalType,
+                       T.YearMonthIntervalType, T.DayTimeIntervalType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _storable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _storable(dt.keyType) and _storable(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return all(_storable(f.dataType) for f in dt.fields)
+    return True
+
+
+def _added_type(col_name: str, col_type: str) -> T.DataType:
+    """The type an added column reads as: `col_type` resolved by the
+    cast every read applies to files that predate the column (CHAR and
+    VARCHAR come back as STRING). A type Spark rejects, or one the
+    data files cannot hold (`_storable`: no later write could fill the
+    column), is a ValueError."""
+    spark = SparkSession.active()
+    try:
+        dt = spark.range(0).select(F.lit(None).cast(col_type)).schema[0].dataType
+    except PySparkException as e:  # any type Spark rejects
+        raise ValueError(
+            f"unknown type {col_type!r} for column {col_name!r}") from e
+    if not _storable(dt):
+        raise ValueError(
+            f"type {col_type!r} of column {col_name!r} cannot be stored "
+            "in the table's data files")
+    return dt
 
 
 def _apply_schema_actions(df: DataFrame, actions: list[dict]) -> DataFrame:

@@ -877,8 +877,16 @@ def _sql_alter(spark: SparkSession, m: re.Match, t: _Table) -> DataFrame:
         cols = am.group("cols").strip()
         if cols.startswith("(") and cols.endswith(")"):
             cols = cols[1:-1]
-        specs = []
+        # a nested type's own commas (map<k,v>, struct<a:t,b:t>) sit
+        # inside angle brackets: rejoin the pieces until they balance
+        parts: list[str] = []
         for part in _split(cols):
+            if parts and parts[-1].count("<") > parts[-1].count(">"):
+                parts[-1] += ", " + part
+            else:
+                parts.append(part)
+        specs = []
+        for part in parts:
             cm = re.fullmatch(r"`?(?P<col>\w+)`?\s+(?P<type>.+)", part,
                               re.DOTALL)
             if not cm:

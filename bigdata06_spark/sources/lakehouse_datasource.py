@@ -48,9 +48,9 @@ import pyarrow.parquet as _pq
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
@@ -77,14 +77,19 @@ _ATOMIC_DDL = {
 }
 
 
-def _ddl_to_spark(s: str) -> T.DataType:
-    """DDL type string → Spark type WITHOUT an active session —
-    DataSource planning runs in a session-less Python worker, where
-    T._parse_datatype_string is unavailable. Covers the atomic types
-    `add_column` records plus decimal(p,s); anything fancier is a
-    loud error rather than a silent misread."""
+def _add_action_type(a: dict) -> T.DataType:
+    """The Spark type of a schema `add` action WITHOUT an active
+    session: DataSource planning runs in a session-less Python worker,
+    where T._parse_datatype_string is unavailable. Adds record the
+    type Spark resolved as JSON (`lakehouse._added_type`); entries
+    written before that carry only the DDL string, read here for the
+    atomic types and decimal(p,s), anything fancier being a loud error
+    rather than a silent misread."""
     import re
 
+    if "json" in a:
+        return T._parse_datatype_json_string(a["json"])
+    s = a["type"]
     k = s.strip().lower()
     if k in _ATOMIC_DDL:
         return _ATOMIC_DDL[k]
@@ -118,22 +123,28 @@ def _logical_schema(path: str, s: LH.Snapshot) -> T.StructType:
     files' parquet schemas (first-occurrence field order) with the
     schema-action history replayed, projected to the logical column
     order — the same resolution read_version's footer-schema scan +
-    replay produces, from the memoized footers (`LH.footer`) and with
-    Arrow's type mapping, since this runs without a session."""
+    replay produces, from the memoized footers (`LH.footer`): Spark's
+    footer schema where the writer stored one, else Arrow's type
+    mapping with naive timestamps as TIMESTAMP_NTZ, as Spark's parquet
+    inference reads them."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     fields: dict[str, T.DataType] = {}
     order: list[str] = []
     for f in sorted(s.files):
-        sch = LH.footer(os.path.abspath(_abs(path, f))).arrow
-        for name in sch.names:
+        ft = LH.footer(os.path.abspath(_abs(path, f)))
+        spark_types = {x.name: x.dataType for x in ft.schema.fields} \
+            if ft.schema is not None else {}
+        for name in ft.arrow.names:
             if name not in fields:
-                fields[name] = from_arrow_type(sch.field(name).type)
+                fields[name] = spark_types[name] if name in spark_types \
+                    else from_arrow_type(ft.arrow.field(name).type,
+                                         prefer_timestamp_ntz=True)
                 order.append(name)
     for a in s.acts:
         if a["kind"] == "add":
             if a["column"] not in fields:
-                fields[a["column"]] = _ddl_to_spark(a["type"])
+                fields[a["column"]] = _add_action_type(a)
                 order.append(a["column"])
         elif a["kind"] == "rename":
             o, n = a["from"], a["to"]
@@ -610,10 +621,10 @@ def _writable_table_guard(path: str, schema: T.StructType) -> int:
     return s.version
 
 
-def _write_task_parquet(iterator, schema_json: str, out: str):
-    """One task's rows → one parquet file at `out` (Arrow-batched,
-    64k-row flushes). Returns the row count; writes nothing (and
-    returns 0) for an empty iterator."""
+def _write_task_parquet(batches, schema_json: str, out: str) -> int:
+    """One task's Arrow record batches → one parquet file at `out`,
+    each batch cast to the table's Arrow schema. Returns the row count;
+    writes nothing (and returns 0) when no batch holds a row."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -623,38 +634,23 @@ def _write_task_parquet(iterator, schema_json: str, out: str):
     )
     writer = None
     n = 0
-    batch: list = []
-
-    def flush():
-        nonlocal writer, n
-        if not batch:
-            return
-        cols = list(zip(*batch))
-        tbl = pa.table(
-            {f.name: pa.array(list(c), type=arrow_schema.field(f.name).type)
-             for f, c in zip(schema.fields, cols)},
-            schema=arrow_schema,
-        )
+    for batch in batches:
+        if not batch.num_rows:
+            continue
         if writer is None:
             writer = pq.ParquetWriter(out, arrow_schema)
-        writer.write_table(tbl)
-        n += len(batch)
-        batch.clear()
-
-    for row in iterator:
-        batch.append(tuple(row))
-        if len(batch) >= 65536:
-            flush()
-    flush()
+        writer.write_batch(batch.select(arrow_schema.names).cast(arrow_schema))
+        n += batch.num_rows
     if writer is not None:
         writer.close()
     return n
 
 
-class LakehouseWriter(DataSourceWriter):
+class LakehouseWriter(DataSourceArrowWriter):
     """`df.write.format("lakehouse").mode("append"|"overwrite")` —
     the write half of the DataSource surface, mapped 1:1 onto the
-    format's OCC protocol: tasks write parquet under a per-attempt
+    format's OCC protocol: tasks write the Arrow batches Spark hands
+    them straight to parquet under a per-attempt
     unique subdirectory, `commit()` is the single atomic
     create-if-absent log write (a lost race raises, Spark aborts,
     `abort()` removes the orphaned files — the same lifecycle the
@@ -681,13 +677,13 @@ class LakehouseWriter(DataSourceWriter):
         self.sub = LH._new_sub(v + 1)
         os.makedirs(os.path.join(self.path, LH._DATA, self.sub), exist_ok=True)
 
-    def write(self, iterator):
+    def write(self, batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         out = os.path.join(self.path, LH._DATA, self.sub,
                            f"part-{pid:05d}.parquet")
-        n = _write_task_parquet(iterator, self.schema_json, out)
+        n = _write_task_parquet(batches, self.schema_json, out)
         if n:
             return LakehouseCommit([os.path.relpath(out, self.path)])
         return LakehouseCommit([])
@@ -740,7 +736,7 @@ class LakehouseWriter(DataSourceWriter):
 # VACUUM relies on for in-flight streaming writers).
 
 
-class LakehouseStreamWriter(DataSourceStreamWriter):
+class LakehouseStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options, schema: T.StructType, overwrite: bool):
         if overwrite:
             raise ValueError(
@@ -758,14 +754,14 @@ class LakehouseStreamWriter(DataSourceStreamWriter):
         _writable_table_guard(self.path, schema)
         self.schema_cols = [f.name for f in schema.fields]
 
-    def write(self, iterator):
+    def write(self, batches):
         import uuid as _uuid
 
         sub = f"stream-{_uuid.uuid4().hex[:12]}"
         d = os.path.join(self.path, LH._DATA, sub)
         os.makedirs(d, exist_ok=True)
         out = os.path.join(d, "part-0.parquet")
-        n = _write_task_parquet(iterator, self.schema_json, out)
+        n = _write_task_parquet(batches, self.schema_json, out)
         if n:
             return LakehouseCommit([os.path.relpath(out, self.path)])
         os.rmdir(d)

@@ -568,3 +568,49 @@ def test_alter_add_columns_is_one_version(spark, tmp_path):
     got = LSQL.sql(spark, "SELECT * FROM fz_addc_ok")
     assert got.columns == ["k", "v", "tag", "amt"]
     assert got.first()["amt"] is None
+
+
+#: (DDL type, a SQL literal of it) — nested types with their own
+#: commas, CHAR/VARCHAR (read as STRING), both timestamp kinds, and
+#: the types no data file can hold (interval, void, variant)
+_ADD_TYPES = [
+    ("array<int>", "array(1, 2)"), ("varchar(3)", "'abc'"),
+    ("char(2)", "'ab'"), ("map<string,int>", "map('a', 1)"),
+    ("struct<a:int,b:string>", "named_struct('a', 1, 'b', 'x')"),
+    ("array<array<string>>", "array(array('x'))"),
+    ("timestamp_ntz", "timestamp_ntz'2020-01-01 01:02:03'"),
+    ("timestamp", "timestamp'2020-01-01 01:02:03'"),
+    ("date", "date'2020-01-02'"), ("decimal(5,1)", "1.5"),
+    ("binary", "X'01'"), ("interval day", "INTERVAL '1' DAY"),
+    ("void", "NULL"), ("variant", "parse_json('1')"),
+]
+
+
+@pytest.mark.parametrize("key", ["k", None], ids=["keyed", "keyless"])
+def test_alter_add_column_then_insert(spark, tmp_path, key):
+    """For every added type, either ALTER ... ADD COLUMNS and a later
+    INSERT both succeed and the value reads back, or the ALTER fails
+    and commits nothing. The keyed table inserts through
+    `lakehouse.append`, the key-less one through the
+    format("lakehouse") writer; both read the target schema through
+    the session-less DataSource."""
+    path = str(tmp_path / "addc_ins")
+    name = f"fz_addc_ins_{key or 'nokey'}"
+    LH.table_init(spark.createDataFrame([(1, 1.0)], "k long, v double"),
+                  path, "k", n_files=1)
+    LSQL.register_table(spark, name, path, key)
+    added = 0
+    for i, (ddl, lit) in enumerate(_ADD_TYPES):
+        v0 = LH.current_version(path)
+        try:
+            LSQL.sql(spark, f"ALTER TABLE {name} ADD COLUMNS (c{i} {ddl})")
+        except ValueError:
+            assert LH.current_version(path) == v0, ddl
+            continue
+        added += 1
+        LSQL.sql(spark, f"INSERT INTO {name} (k, v, c{i}) SELECT {100 + i}, 0.0, {lit}")
+        got = LSQL.sql(spark, f"SELECT c{i} FROM {name} WHERE k = {100 + i}").collect()
+        want = spark.sql(f"SELECT CAST({lit} AS {ddl})").first()[0]
+        assert [r[0] for r in got] == [want], ddl
+    assert added == 11  # all but interval, void and variant
+    assert LSQL.sql(spark, f"SELECT * FROM {name}").count() == 1 + added
